@@ -59,6 +59,18 @@ case class AsofState(clicks: Seq[(Long, Long)], pending: Seq[(Long, Long)])
 case class AsofOut(p_event: Long, user_id: Long, c_event: Option[Long],
     lag_us: Option[Long])
 
+/** One buffered funnel event of the multi-way join: event-time micros,
+  * event id, and value (read only on purchases). */
+case class MwRow(tsUs: Long, eventId: Long, value: Double)
+
+/** Multi-way join buffers for one user, one per input, each sorted by
+  * event time. */
+case class MultiwayState(views: Seq[MwRow], clicks: Seq[MwRow],
+    purchases: Seq[MwRow])
+
+case class MultiwayOut(v_event: Long, c_event: Long, p_event: Long,
+    user_id: Long, purchase_value: Double)
+
 case class PatState(sigUs: Long)
 case class PatOut(event_id: Long, user_id: Long, signup_us: Long,
     purchase_us: Long, wait_us: Long)
@@ -109,6 +121,79 @@ object SessionFold {
     }
     (closed.result(), cur)
   }
+}
+
+/** Spark-free step of the view → click → purchase multi-way stream join
+  * ([[Streams.streamJoinMultiway]]): one event-time-sorted buffer per
+  * input, probed by range around the funnel (the circular multi-way join
+  * of PAPERS.md, ICDE 2018) instead of chaining two binary joins that
+  * re-buffer the intermediate relation. Each hop is c_ts ∈ [v_ts, v_ts + 6h]
+  * and p_ts ∈ [c_ts, c_ts + 6h], both bounds inclusive.
+  */
+object MultiwayFold {
+  val HopUs: Long = 6L * 3600 * 1000000 // one funnel hop, micros
+  val Empty: MultiwayState = MultiwayState(Nil, Nil, Nil)
+
+  /** First index of `b` whose time is ≥ `t` (`after`: > `t`). */
+  private def bound(b: IndexedSeq[MwRow], t: Long, after: Boolean): Int = {
+    var lo = 0
+    var hi = b.length
+    while (lo < hi) {
+      val m = (lo + hi) >>> 1
+      if (b(m).tsUs < t || (after && b(m).tsUs == t)) lo = m + 1 else hi = m
+    }
+    lo
+  }
+
+  /** Rows of `b` with `lo` ≤ time ≤ `hi`. */
+  private def within(b: IndexedSeq[MwRow], lo: Long, hi: Long): Iterator[MwRow] =
+    (bound(b, lo, after = false) until bound(b, hi, after = true)).iterator.map(b)
+
+  /** One call for one user: `rows` are the newly arrived events (none on a
+    * timeout) and `wmUs` the current watermark; every row in `rows` is
+    * later than it (Spark drops late rows before the call). Emits every
+    * triple that contains at least one new row, exactly once, then evicts
+    * what no later row can join: a view once v_ts + 12h < wm (a later
+    * purchase can still reach it through a buffered click), a click once
+    * c_ts + 6h < wm, a purchase once p_ts < wm.
+    */
+  def step(userId: Long, st: MultiwayState, rows: Seq[Ev],
+      wmUs: Long): (Seq[MultiwayOut], MultiwayState) = {
+    def arrived(t: String): IndexedSeq[MwRow] =
+      rows.iterator.filter(_.event_type == t)
+        .map(e => MwRow(SessionFold.us(e.ts), e.event_id, e.value))
+        .toIndexedSeq.sortBy(_.tsUs)
+    // sortBy is a stable merge sort: two sorted runs merge in linear time
+    def merged(old: IndexedSeq[MwRow], fresh: IndexedSeq[MwRow]) =
+      (old ++ fresh).sortBy(_.tsUs)
+    val (nv, nc, np) = (arrived("view"), arrived("click"), arrived("purchase"))
+    val (oc, op) = (st.clicks.toIndexedSeq, st.purchases.toIndexedSeq)
+    val v = merged(st.views.toIndexedSeq, nv)
+    val c = merged(oc, nc)
+    val p = merged(op, np)
+    val out = Seq.newBuilder[MultiwayOut]
+    def emit(vr: MwRow, cr: MwRow, pr: MwRow): Unit =
+      out += MultiwayOut(vr.eventId, cr.eventId, pr.eventId, userId, pr.value)
+    // each new triple once, by its last new input in funnel order:
+    // a new purchase (any click, any view) ...
+    for (pr <- np; cr <- within(c, pr.tsUs - HopUs, pr.tsUs);
+         vr <- within(v, cr.tsUs - HopUs, cr.tsUs)) emit(vr, cr, pr)
+    // ... an old purchase with a new click (any view) ...
+    for (cr <- nc; pr <- within(op, cr.tsUs, cr.tsUs + HopUs);
+         vr <- within(v, cr.tsUs - HopUs, cr.tsUs)) emit(vr, cr, pr)
+    // ... or an old purchase and an old click with a new view
+    for (vr <- nv; cr <- within(oc, vr.tsUs, vr.tsUs + HopUs);
+         pr <- within(op, cr.tsUs, cr.tsUs + HopUs)) emit(vr, cr, pr)
+    (out.result(), MultiwayState(v.dropWhile(_.tsUs + 2 * HopUs < wmUs),
+      c.dropWhile(_.tsUs + HopUs < wmUs), p.dropWhile(_.tsUs < wmUs)))
+  }
+
+  /** The earliest watermark (micros) past which `st` loses a row to
+    * eviction; None once every buffer is empty. */
+  def wakeUs(st: MultiwayState): Option[Long] =
+    (st.views.headOption.map(_.tsUs + 2 * HopUs) ++
+      st.clicks.headOption.map(_.tsUs + HopUs) ++
+      st.purchases.headOption.map(_.tsUs)).minOption
 }
 
 /** 30-minute-gap sessionizer on the Spark 4 arbitrary-state API: one
@@ -378,12 +463,9 @@ object Streams {
     }
   }
 
-  /** The single copy of the staged-feed plumbing (query-private staging
-    * dir, {shared,own} glob source, first-batch extras, drain loop,
-    * last-plan capture, cleanup) shared by the memory-sink harness above
-    * and the foreachBatch upsert — a fix to the scaffold lands in one
-    * place.
-    */
+  /** Free space `/dev/shm` needs before [[streamCkptRoot]] picks it. */
+  private val ShmMinFreeBytes: Long = 256L << 20
+
   /** Root for the harness's TRANSIENT per-query checkpoints (offset/commit
     * WAL + state store deltas). Every query here creates its checkpoint,
     * drains a finite feed, and discards it at stop — durability across a
@@ -392,20 +474,39 @@ object Streams {
     * wal/offset commits plus 140-1300 ms of summed state commits per
     * micro-batch at sf0.1). A RAM-backed root removes that I/O from the
     * trigger path (guide §6). Long-lived production queries need a durable
-    * root instead — the env override is the deployment seam.
+    * root instead — the env override is the deployment seam. `/dev/shm` is
+    * taken only when writable with [[ShmMinFreeBytes]] free (container
+    * defaults are often 64 MB, which a staged events copy plus checkpoints
+    * can fill mid-query); otherwise tmpdir, with one stderr line naming the
+    * override.
     */
   private lazy val streamCkptRoot: java.nio.file.Path = {
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
     val root = sys.env.get("SPARK_GRAFT_STREAM_CKPT_ROOT")
       .map(java.nio.file.Paths.get(_))
-      .orElse {
+      .getOrElse {
         val shm = java.nio.file.Paths.get("/dev/shm")
-        if (java.nio.file.Files.isWritable(shm)) Some(shm) else None
+        val free =
+          if (java.nio.file.Files.isWritable(shm)) shm.toFile.getUsableSpace else 0L
+        if (free >= ShmMinFreeBytes) shm
+        else {
+          if (java.nio.file.Files.exists(shm))
+            System.err.println(s"[stream] /dev/shm has ${free >> 20} MB usable " +
+              s"(< ${ShmMinFreeBytes >> 20} MB); streaming checkpoints go to " +
+              s"$tmp — set SPARK_GRAFT_STREAM_CKPT_ROOT to choose their root")
+          tmp
+        }
       }
-      .getOrElse(java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
     java.nio.file.Files.createDirectories(root)
     root
   }
 
+  /** The single copy of the staged-feed plumbing (query-private staging
+    * dir, {shared,own} glob source, first-batch extras, drain loop,
+    * last-plan capture, cleanup) shared by the memory-sink harness above
+    * and the foreachBatch upsert — a fix to the scaffold lands in one
+    * place.
+    */
   private def withStagedFeed(s: SparkSession, d: String,
       laterBatches: Seq[DataFrame], firstBatchExtra: Seq[DataFrame])(
       start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
@@ -876,50 +977,45 @@ object Streams {
       .orderBy("c_event", "p_event")
   }
 
-  /** q_stream_join_multiway — CHAINED 3-WAY stream-stream interval join
-    * (the multi-way streaming shape of the EDBT/ICDE multi-way stream-join
-    * literature): complete view → click → purchase funnel instances, each
-    * hop bounded to 6 event-time hours — two stateful join operators in
-    * ONE streaming query, the intermediate join's event-time column
-    * feeding the second join's state eviction. Both hops are INNER (emit
-    * on match), so the staged replay equals the batch 3-way join → the
-    * oracle. State per side is bounded by window + watermark exactly as
-    * in [[streamJoinInterval]]; the intermediate relation is funnel-
-    * instance grain, never a cross product (each hop carries the
-    * time-range predicate).
+  /** Multi-way join state function: the [[MultiwayFold]] step plus the
+    * GroupState plumbing — buffers persist until every row is evicted, and
+    * the timeout wakes at the earliest eviction time.
+    */
+  private def multiwayFold(userId: Long, rows: Iterator[Ev],
+      state: GroupState[MultiwayState]): Iterator[MultiwayOut] = {
+    val (out, next) = MultiwayFold.step(userId,
+      state.getOption.getOrElse(MultiwayFold.Empty), rows.toSeq,
+      state.getCurrentWatermarkMs() * 1000L)
+    MultiwayFold.wakeUs(next) match {
+      case Some(w) => state.update(next); setWake(state, w / 1000L)
+      case None => if (state.exists) state.remove()
+    }
+    out.iterator
+  }
+
+  /** q_stream_join_multiway — 3-WAY stream-stream interval join as ONE
+    * user-keyed state machine (the multi-way streaming shape of the
+    * EDBT/ICDE multi-way stream-join literature): complete view → click →
+    * purchase funnel instances, each hop bounded to 6 event-time hours.
+    * One flatMapGroupsWithState operator keeps one buffer per input
+    * ([[MultiwayFold]]) and emits a triple as soon as its last row arrives,
+    * so the staged replay equals the batch 3-way join → the oracle. State
+    * per user is bounded by the 12-hour funnel span + watermark, and a
+    * partition commits one state store per micro-batch (the per-batch
+    * store lifecycle is the streaming harness's fixed cost).
     */
   def streamJoinMultiway(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
     runStagedBatches(s,
-      src => {
-        val views = src.where(col("event_type") === "view")
-          .select(col("event_id").as("v_event"), col("user_id"),
-            col("ts").as("v_ts"))
-          .withWatermark("v_ts", "10 minutes")
-        val clicks = src.where(col("event_type") === "click")
-          .select(col("event_id").as("c_event"), col("user_id").as("c_user"),
-            col("ts").as("c_ts"))
-          .withWatermark("c_ts", "10 minutes")
-        val purchases = src.where(col("event_type") === "purchase")
-          .select(col("event_id").as("p_event"), col("user_id").as("p_user"),
-            col("ts").as("p_ts"), col("value"))
-          .withWatermark("p_ts", "10 minutes")
-        views
-          .join(clicks,
-            col("user_id") === col("c_user") &&
-              col("c_ts") >= col("v_ts") &&
-              col("c_ts") <= col("v_ts") + expr("INTERVAL 6 HOURS"))
-          // exactly ONE event-time column may feed the next stateful
-          // operator: keep c_ts (the second hop's anchor), project away
-          // the view-side watermark column (v_event stays as data)
-          .select(col("v_event"), col("user_id"), col("c_event"), col("c_ts"))
-          .join(purchases,
-            col("user_id") === col("p_user") &&
-              col("p_ts") >= col("c_ts") &&
-              col("p_ts") <= col("c_ts") + expr("INTERVAL 6 HOURS"))
-      },
+      src => src
+        .where(col("event_type").isin("view", "click", "purchase"))
+        .withWatermark("ts", "10 minutes")
+        .as[Ev]
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append(),
+          GroupStateTimeout.EventTimeTimeout)(multiwayFold)
+        .toDF(),
       d, Seq.empty, key = "join_multiway")
-      .select(col("v_event"), col("c_event"), col("p_event"), col("user_id"),
-        col("value").as("purchase_value"))
       .orderBy("v_event", "c_event", "p_event")
   }
 
@@ -1106,7 +1202,7 @@ object Streams {
     val evs = if (rows.hasNext) rows.toSeq else Seq.empty
     var clicks = st.clicks ++ evs.filter(_.event_type == "click")
       .map(e => (us(e.ts), e.event_id))
-    var pending = st.pending ++ evs.filter(_.event_type == "purchase")
+    val pending = st.pending ++ evs.filter(_.event_type == "purchase")
       .map(e => (us(e.ts), e.event_id))
     val wmUs = state.getCurrentWatermarkMs() * 1000L
     val (ready, still) = pending.partition(_._1 < wmUs)
@@ -1124,15 +1220,20 @@ object Streams {
     } else {
       state.update(AsofState(clicks, still))
       // wake when the watermark can have passed the earliest pending
-      // purchase (or just past the current watermark if only clicks
-      // remain — Spark rejects a timeout at or behind the watermark)
-      val wakeMs = still.map(_._1 / 1000L).minOption
-        .getOrElse(state.getCurrentWatermarkMs())
-      state.setTimeoutTimestamp(
-        math.max(wakeMs + 1, state.getCurrentWatermarkMs() + 1))
+      // purchase (or at the next watermark advance if only clicks remain)
+      setWake(state, still.map(_._1 / 1000L).minOption
+        .getOrElse(state.getCurrentWatermarkMs()))
     }
     out.iterator
   }
+
+  /** Event-time timeout for a fold whose state changes once the watermark
+    * passes `wakeMs`: fires when the watermark is strictly past it, and
+    * never at or behind the current watermark (Spark rejects that).
+    */
+  private def setWake(state: GroupState[_], wakeMs: Long): Unit =
+    state.setTimeoutTimestamp(
+      math.max(wakeMs + 1, state.getCurrentWatermarkMs() + 1))
 
   /** q_stream_join_asof — STREAMING AS-OF JOIN (temporal join, r16 —
     * Flink's temporal-join capability on the Spark state API, the stream
@@ -1674,7 +1775,7 @@ object Streams {
         "AND c.event_type = 'click' AND p.event_type = 'purchase' " +
         "AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 60 MINUTE " +
         "ORDER BY c_event, p_event"),
-    // chained inner interval joins emit on match → the staged replay
+    // every triple emits when its last row arrives → the staged replay
     // equals the batch 3-way join
     "q_stream_join_multiway" ->
       ("SELECT v.event_id AS v_event, c.event_id AS c_event, " +
