@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark harness. Prints ONE machine-readable JSON line as the very
   * last stdout bytes, sized to survive the driver's 2000-char tail capture:
@@ -29,44 +28,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // optional args: bench only these query names (local iteration aid;
     // the driver passes none → full run)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4 defaults, pinned: docs/SCALING.md prescribes runtime
-      // re-planning + skew-split as part of the 100 TB posture
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Optimization-round measurement aid (guide §1.5): SPARK_GRAFT_PROFILE=1
-    // prints one stderr line per Spark job (wall ms + description) so a hot
-    // query's time decomposes into its constituent jobs without the UI.
-    // Inert unless the env var is set — the driver's runs never see it.
-    val profiling = sys.env.contains("SPARK_GRAFT_PROFILE")
-    if (profiling) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          t0.put(js.jobId, (System.nanoTime(),
-            Option(js.properties.getProperty("spark.job.description")).getOrElse("") +
-              " stages=" + js.stageInfos.size))
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          Option(t0.remove(je.jobId)).foreach { case (t, desc) =>
-            // absolute start/end stamps let a reader compute the DRIVER
-            // gaps between jobs (planning/codegen/analysis), not just the
-            // job wall — the r19 er_resolve hunt needed exactly this
-            System.err.println(
-              f"[prof] job ${je.jobId}%4d ${(System.nanoTime() - t) / 1e6}%8.1f ms  " +
-                f"start=${t / 1000000}%d end=${System.nanoTime() / 1000000}%d  $desc")
-          }
-      })
-    }
+    val spark = GraftSession.build("graft-bench", GraftSession.cores)
     // Untimed warm-up. Whichever query runs first otherwise absorbs ~4.5 s
     // of one-time session cost (codegen JIT, file-format writer/committer
     // init): r3's "q_source_orc_roundtrip regressed 4.5x" was exactly this
@@ -120,7 +84,6 @@ object Bench {
       if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
       else args.toSeq.distinct.flatMap(n => SparkEntry.queries.get(n).map(n -> _)))
       .map { case (name, fn) =>
-        if (profiling) System.err.println(s"[prof] >>> $name")
         val t0 = System.nanoTime()
         val sec =
           try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
@@ -180,10 +143,12 @@ object Bench {
     def memoRetained(name: String): Boolean =
       name.startsWith("q_simsearch_") || name == "q_embed_pq" ||
         name == "q_dedup_incremental"
-    val retainedPart = {
+    // full names in bench_full.json; the stdout line's declared q_ prefix
+    // stripped, like every other name on that line
+    def retainedPart(label: String => String): String = {
       val names = isolated.map(_._1).filter(memoRetained)
       if (names.isEmpty) ""
-      else names.map(n => s""""${n.stripPrefix("q_")}"""")
+      else names.map(n => s""""${label(n)}"""")
         .mkString(""","memo_retained":[""", ",", "]")
     }
     // complete canonical record — full names, seconds — to a repo file.
@@ -202,7 +167,7 @@ object Bench {
     val isoQs =
       (if (isolated.isEmpty) ""
       else isolated.map { case (k, v) => s"\"$k\":${fmt(v)}" }
-        .mkString(""","isolated":{""", ",", "}")) + retainedPart
+        .mkString(""","isolated":{""", ",", "}")) + retainedPart(identity)
     // key-set fingerprint: totals are only comparable over the SAME keys —
     // equal counts with one key swapped for another would otherwise carry
     // an incomparable canonical forward (r17 advisory)
@@ -275,7 +240,7 @@ object Bench {
         (if (isolated.isEmpty) ""
         else isolated.map { case (k, v) =>
           s"\"${k.stripPrefix("q_")}\":${math.round(v * scale)}"
-        }.mkString(""","isolated":{""", ",", "}")) + retainedPart
+        }.mkString(""","isolated":{""", ",", "}")) + retainedPart(_.stripPrefix("q_"))
       val header = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$canonPart"qunit":"$unit","prefix":"q_","n":${results.size},"mean_ms":$meanMs,"queries_file":"bench_full.json","slowest":{"""
       val entries = results.sortBy(-_._2).iterator
         .map { case (k, v) => s"\"${k.stripPrefix("q_")}\":${math.round(v * scale)}" }

@@ -5,11 +5,7 @@ package graft
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val s = org.apache.spark.sql.SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = GraftSession.build("graft-plans", GraftSession.cores)
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val batch = if (args.length > 1) args.drop(1).toSeq
     else Seq("q_scan_pruned", "q_join_broadcast", "q_join_multiway",

@@ -40,28 +40,12 @@ object Tables {
     * ~400 queries × 1-3 tables each. The cached object is a lazy
     * DataFrame (no persist): every action over it still scans the parquet
     * from disk, so no result or data caching crosses query boundaries.
-    * Keyed weakly by session so test sessions do not pin each other.
     */
   private val planCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+    new PerSession(_ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val perSession = planCache.synchronized {
-      // the cached DataFrames strongly reference their session, so weak-key
-      // eviction alone never fires (value → key). Explicitly drop entries
-      // whose underlying context has stopped — the lifecycle test suites
-      // actually have (one session per suite, context stopped at the end) —
-      // so closed sessions do not stay pinned for the JVM lifetime
-      // (r18 advisory).
-      planCache.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
-      var m = planCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        planCache.put(spark, m)
-      }
-      m
-    }
+    val perSession = planCache(spark)
     val key = s"$sfDir/$name"
     val existing = perSession.get(key)
     if (existing != null) existing

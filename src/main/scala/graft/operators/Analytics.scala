@@ -2275,7 +2275,6 @@ object Analytics {
     * persists are dropped as soon as the next round lands.
     */
   def graphBfs(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // AQE is pinned OFF for the BFS DAG (restored in the finally): every
     // join strategy here is chosen explicitly from exact frontier counts
     // and every shuffle is node-grain, so runtime re-planning has nothing
@@ -4940,8 +4939,6 @@ object Analytics {
           count(when(col("in_e").isNull, lit(1))).as("miss"))
         .first()
       val nextCount = probe.getLong(0)
-      if (sys.env.contains("SPARK_GRAFT_PROFILE"))
-        System.err.println(s"[prof-cc] round=$rounds edges=$nextCount (was $eCount)")
       converged = nextCount == eCount && probe.getLong(1) == 0L
       e.unpersist()
       e = next
@@ -6160,7 +6157,7 @@ object Analytics {
     * monotonicity require stays as the secondary corruption invariant.
     */
   private def sccMinReach(nodes: DataFrame, edges: DataFrame,
-      forward: Boolean, maxRounds: Long, tiny: Boolean = false): DataFrame = {
+      forward: Boolean, maxRounds: Long, tiny: Boolean): DataFrame = {
     val (from, to) = if (forward) ("a", "b") else ("b", "a")
     var lab = nodes.select(col("node"), col("node").as("lab"))
       .localCheckpoint(true)
@@ -6204,7 +6201,7 @@ object Analytics {
     * (fwdmin(min) = bwdmin(min) = min), so the loop terminates. Returns
     * (node, scc) for every node of the input graph.
     */
-  private[graft] def sccLabels(s: SparkSession, edges0: DataFrame,
+  private[graft] def sccLabels(edges0: DataFrame,
       tiny: Boolean = false): DataFrame = {
     var edges = edges0.select("a", "b")
       .where(col("a") =!= col("b")).distinct().localCheckpoint(true)
@@ -6453,7 +6450,7 @@ object Analytics {
     s.conf.set(aqeKey, "false")
     s.conf.set(partsKey, edgeParts)
     val labels =
-      try sccLabels(s, edges,
+      try sccLabels(edges,
         tiny = sccEdgeCount(s, d) <= graphBroadcastMaxRows(s))
       finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
     val sizes = labels.groupBy("scc").agg(count(lit(1)).as("scc_size"))

@@ -31,25 +31,12 @@ object LlmData {
 
   private def t(s: SparkSession, d: String, n: String): DataFrame = Tables(s, d, n)
 
-  /** Session-scoped memo for persisted intermediate tables. Weak keys: the
-    * session object itself keys the map (no hash-collision risk, unlike
-    * identityHashCode), and a stopped+unreferenced session lets its entries
-    * and their persisted blocks be collected instead of pinning them for
-    * the JVM lifetime.
-    */
-  private val sessionCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
+  /** Session-scoped memo for persisted intermediate tables. */
+  private val sessionCache =
+    new graft.PerSession(_ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
 
-  private[operators] def memo(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val perSession = sessionCache.synchronized {
-      var m = sessionCache.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        sessionCache.put(s, m)
-      }
-      m
-    }
+  private[graft] def memo(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
+    val perSession = sessionCache(s)
     // get/putIfAbsent, NOT computeIfAbsent: builds are reentrant (the ngram
     // pair-set build calls the shingle build on the same map) and
     // ConcurrentHashMap.computeIfAbsent rejects recursive updates
@@ -72,8 +59,7 @@ object LlmData {
     * too, and index reuse is the serving-path contract being measured.
     */
   private[graft] def clearMemo(s: SparkSession): Unit = {
-    val m = sessionCache.synchronized { sessionCache.remove(s) }
-    if (m != null) m.values.forEach(_.unpersist())
+    sessionCache.remove(s).foreach(_.values.forEach(_.unpersist()))
   }
 
   /** Distinct 3-gram shingles as (doc_id, sh: long) rows — the shared basis
@@ -583,12 +569,11 @@ object LlmData {
     val parts = math.max(1L, edges.count() / 500000L).toString
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", parts)
-    try dedupClusterIterate(s, edges)
+    try dedupClusterIterate(edges)
     finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
-  private def dedupClusterIterate(s: SparkSession,
-      edges: DataFrame): DataFrame = {
+  private def dedupClusterIterate(edges: DataFrame): DataFrame = {
     // seed with the FIRST hop for free: label₀ = min(node, min neighbor)
     // (one aggregate instead of a distinct + a full propagation round)
     var labels = edges.select(col("src").as("node"), col("dst"))
@@ -2659,13 +2644,8 @@ object LlmData {
       : (Array[Array[Array[Float]]], Array[Array[Array[Float]]],
         Seq[(Int, Int, Double, Double)], Long, Long) =
     opqCache.computeIfAbsent(graft.Fixtures.datasetTag(d, "embeddings", "opq1"), _ => {
-      def mark(what: String): Unit =
-        if (sys.env.contains("SPARK_GRAFT_PROFILE"))
-          System.err.println(s"[prof-opq] $what @${System.nanoTime() / 1000000}")
-      mark("model:start")
       graft.functions.GraftFunctions.register(s)
       val cb = pqCentroids(s, d)
-      mark("model:centroids")
       val sub = cb(0)(0).length
       val dims = pqM * sub
       val cbLit = (0 until pqM).map(j => typedlit(cb(j).map(_.toSeq).toSeq))
@@ -2695,7 +2675,6 @@ object LlmData {
         .select("vec_id", "embedding", "code", "ce", "e0row")
         .localCheckpoint(true)
       try {
-      mark("model:enc-done")
       // term kernel over the materialized row: exactly the values the
       // flat formulation computed (x_g·c*_g etc. with identical IEEE ops
       // and identical per-element rounding) — see
@@ -2715,7 +2694,6 @@ object LlmData {
         .groupBy("g").agg(sum(col("t")).as("t"), sum(col("bt")).as("b"),
           sum(col("e")).as("e"), count(lit(1)).as("n"))
         .collect()
-      mark("model:stats-done")
       val byG = ga.map(r => r.getInt(r.fieldIndex("g")) -> r).toMap
       require(byG.size == dims, "OPQ statistics pass lost a dimension group")
       val tg = (0 until dims).map(g => byG(g).getLong(byG(g).fieldIndex("t")))
@@ -2739,17 +2717,6 @@ object LlmData {
         val bb = bv(j, i).toDouble
         val hyp = math.sqrt(aa * aa + bb * bb)
         (p, q, aa / hyp, bb / hyp)
-      }
-      val byP = rots.map(r => r._1 -> r).toMap
-      val byQ = rots.map(r => r._2 -> r).toMap
-      def xpExpr(g: Int): Column = (byP.get(g), byQ.get(g)) match {
-        case (Some((p, q, c0, s0)), _) =>
-          (lit(c0) * col("embedding").getItem(p).cast("double") -
-            lit(s0) * col("embedding").getItem(q).cast("double")).cast("float")
-        case (_, Some((p, q, c0, s0))) =>
-          (lit(s0) * col("embedding").getItem(p).cast("double") +
-            lit(c0) * col("embedding").getItem(q).cast("double")).cast("float")
-        case _ => col("embedding").getItem(g)
       }
       // pass 2: per-(j, code) exact micro sums of x and x′ under the
       // FROZEN assignments — one exploded keyed aggregate over the
@@ -2779,7 +2746,6 @@ object LlmData {
         }
         out
       }
-      mark("model:gsums-done")
       (rebuilt("sx"), rebuilt("sp"), rots, e0, nv)
       // the model is fully collected by here — the finally releases the
       // bounded encode frame on the failure paths too (a throw in the stats
@@ -2841,12 +2807,8 @@ object LlmData {
     * lands on the driver — the [[simsearchRetrain]] shape exactly.
     */
   def simsearchOpq(s: SparkSession, d: String): DataFrame = {
-    def mark(what: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_PROFILE"))
-        System.err.println(s"[prof-opq] $what @${System.nanoTime() / 1000000}")
     graft.functions.GraftFunctions.register(s)
     val (cbL, cbO, rots, e0, nv) = opqModel(s, d)
-    mark("opq:model-done")
     val sub = cbL(0)(0).length
     def errSum(frame: DataFrame, cbX: Array[Array[Array[Float]]]): Long = {
       val b = frame.select(col("embedding") +: pqBestCols(cbX): _*)
@@ -2858,9 +2820,7 @@ object LlmData {
       b.select(ec.reduce(_ + _).as("e")).agg(sum(col("e"))).first().getLong(0)
     }
     val eL = errSum(t(s, d, "embeddings"), cbL)
-    mark("opq:errL-done")
     val eO = errSum(opqRotated(s, d), cbO)
-    mark("opq:errO-done")
     import s.implicits._
     Seq(("a_frozen", nv, 0L, e0), ("b_lloyd", nv, 0L, eL),
       ("c_opq", nv, rots.length.toLong, eO))
@@ -3316,9 +3276,9 @@ object LlmData {
   // memoized: one binaryFile scan + ImageIO decode pass serves both the
   // metadata and the signatures query (48 tiny rows persisted)
   private def framesDecoded(s: SparkSession, d: String): DataFrame =
-    memo(s, s"frames_$d") { framesDecodedBuild(s, d) }
+    memo(s, s"frames_$d") { framesDecodedBuild(s) }
 
-  private def framesDecodedBuild(s: SparkSession, d: String): DataFrame = {
+  private def framesDecodedBuild(s: SparkSession): DataFrame = {
     val media = graft.Fixtures.ensure(
       java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_media"))(
       graft.functions.BinaryBatch.writeMediaFixtures(_))
@@ -3408,7 +3368,7 @@ object LlmData {
     * payloads. Completes the image/audio modality pair through the same
     * batch-decode seam.
     */
-  def multimodalAudio(s: SparkSession, d: String): DataFrame = {
+  def multimodalAudio(s: SparkSession): DataFrame = {
     val dir = graft.Fixtures.ensure(
       java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_audio"))(
       graft.functions.BinaryBatch.writeAudioFixtures(_))
@@ -3445,7 +3405,7 @@ object LlmData {
     * energy gate for a learned VAD behind the same batch seam and the
     * plan is unchanged.
     */
-  def multimodalAudioSegments(s: SparkSession, d: String): DataFrame = {
+  def multimodalAudioSegments(s: SparkSession): DataFrame = {
     val dir = graft.Fixtures.ensure(
       java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_audioseg_a1"))(
       graft.functions.BinaryBatch.writeAudioSegFixtures(_))
@@ -3559,7 +3519,7 @@ object LlmData {
       .select("video_id", "frame_no", "lum", "scene_no")
   }
 
-  private def videoSceneFrames(s: SparkSession, d: String): DataFrame = {
+  private def videoSceneFrames(s: SparkSession): DataFrame = {
     val dir = videoFixtureDir()
     val scanned = s.read.format("binaryFile")
       .option("pathGlobFilter", "*.png").load(dir.toString)
@@ -3575,8 +3535,8 @@ object LlmData {
         count(lit(1)).as("n_frames"))
       .orderBy("video_id", "scene_no")
 
-  def multimodalVideoScene(s: SparkSession, d: String): DataFrame =
-    videoSceneSegments(videoSceneFrames(s, d))
+  def multimodalVideoScene(s: SparkSession): DataFrame =
+    videoSceneSegments(videoSceneFrames(s))
 
   /** Test seam: the streamed per-frame feature table (LlmDataSpec compares
     * it row-for-row against the batch decode). */
@@ -3641,7 +3601,7 @@ object LlmData {
     * per micro-batch and the detector on a schedule — the lakehouse
     * ingest posture.
     */
-  def streamVideoScene(s: SparkSession, d: String): DataFrame =
+  def streamVideoScene(s: SparkSession): DataFrame =
     videoSceneSegments(videoSceneAssign(streamVideoFeatures(s)))
 
   /** q_multimodal_keyframe — KEYFRAME ELECTION per scene, the step after
@@ -3661,8 +3621,8 @@ object LlmData {
     * detector already carried; output is scene-grain (the 24× data
     * reduction that makes downstream captioning affordable).
     */
-  def multimodalKeyframe(s: SparkSession, d: String): DataFrame = {
-    val frames = videoSceneFrames(s, d)
+  def multimodalKeyframe(s: SparkSession): DataFrame = {
+    val frames = videoSceneFrames(s)
     val wk = Window.partitionBy("video_id", "scene_no")
       .orderBy(col("lum"), col("frame_no"))
     frames
@@ -3771,7 +3731,7 @@ object LlmData {
     }.toString
   }
 
-  def dedupImagePhash(s: SparkSession, d: String): DataFrame = {
+  def dedupImagePhash(s: SparkSession): DataFrame = {
     val sigs = s.read.parquet(phashSigsPath(s))
     val bands = sigs.select(col("img_id"),
       posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
@@ -3890,7 +3850,7 @@ object LlmData {
     * candidate machinery (no all-pairs in the engine path); verification
     * touches candidates only.
     */
-  def dedupAudioFp(s: SparkSession, d: String): DataFrame = {
+  def dedupAudioFp(s: SparkSession): DataFrame = {
     val sigs = s.read.parquet(audioFpSigsPath(s))
     val bands = sigs.select(col("audio_id"),
       posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
@@ -3967,7 +3927,7 @@ object LlmData {
   def multimodalPairDedup(s: SparkSession, d: String): DataFrame = {
     def capRule(c: Column) = when(c < 40, c % 10).otherwise(c)
     val docs = t(s, d, "documents").select(col("doc_id"), md5(col("text")).as("cm"))
-    dedupImagePhash(s, d)
+    dedupImagePhash(s)
       .withColumn("cap_a", capRule(col("img_a")))
       .withColumn("cap_b", capRule(col("img_b")))
       .join(docs.select(col("doc_id").as("cap_a"), col("cm").as("ma")), "cap_a")
@@ -9656,13 +9616,13 @@ object LlmData {
     "q_multimodal_frames" -> multimodalFrames _,
     "q_multimodal_image_filter" -> multimodalImageFilter _,
     "q_multimodal_frames_sigs" -> multimodalFramesSigs _,
-    "q_multimodal_video_scene" -> multimodalVideoScene _,
+    "q_multimodal_video_scene" -> ((s: SparkSession, _: String) => multimodalVideoScene(s)),
     "q_multimodal_align" -> multimodalAlign _,
-    "q_stream_video_scene" -> streamVideoScene _,
-    "q_multimodal_audio_segments" -> multimodalAudioSegments _,
-    "q_multimodal_keyframe" -> multimodalKeyframe _,
-    "q_multimodal_audio" -> multimodalAudio _,
-    "q_dedup_image_phash" -> dedupImagePhash _,
+    "q_stream_video_scene" -> ((s: SparkSession, _: String) => streamVideoScene(s)),
+    "q_multimodal_audio_segments" -> ((s: SparkSession, _: String) => multimodalAudioSegments(s)),
+    "q_multimodal_keyframe" -> ((s: SparkSession, _: String) => multimodalKeyframe(s)),
+    "q_multimodal_audio" -> ((s: SparkSession, _: String) => multimodalAudio(s)),
+    "q_dedup_image_phash" -> ((s: SparkSession, _: String) => dedupImagePhash(s)),
     "q_dedup_lines" -> dedupLines _,
     "q_text_langid" -> textLangid _,
     "q_text_quality" -> textQuality _,
@@ -9724,7 +9684,7 @@ object LlmData {
     "q_simsearch_nsw_delete" -> simsearchNswDelete _,
     "q_simsearch_nsw_compact" -> simsearchNswCompact _,
     "q_embed_infer_arrow" -> embedInferArrow _,
-    "q_dedup_audio_fp" -> dedupAudioFp _,
+    "q_dedup_audio_fp" -> ((s: SparkSession, _: String) => dedupAudioFp(s)),
     "q_rag_index_retrieve" -> ragIndexRetrieve _,
     "q_corpus_filter" -> corpusFilter _,
     "q_corpus_funnel_audit" -> corpusFunnelAudit _,

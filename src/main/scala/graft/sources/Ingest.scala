@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 
 

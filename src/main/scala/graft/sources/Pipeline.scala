@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,7 +35,7 @@ object PipelineIngest {
     }
 
   /** q_pipeline_ingest — the §2A flow end-to-end. */
-  def pipelineIngest(s: SparkSession, d: String): DataFrame = {
+  def pipelineIngest(s: SparkSession): DataFrame = {
     val landing = graft.Fixtures.ensure(
       Paths.get(sys.props("java.io.tmpdir"), "graft_landing"))(
       Zip.writeLandingFixtures(_))
@@ -98,7 +98,7 @@ object PipelineIngest {
     * arithmetic anchored on a literal (script-dag-dock-report:59), and
     * URL templating (script-dag-dock-report:62).
     */
-  def ingestJson(s: SparkSession, d: String): DataFrame = {
+  def ingestJson(s: SparkSession): DataFrame = {
     import s.implicits._
     val resp =
       """{"access_token": "tok-abc", "ticket": "T-123", "file": "balance_2024-01-01.zip"}"""
@@ -990,8 +990,8 @@ object PipelineIngest {
     "q_maintain_merge" -> maintainMerge _,
     "q_maintain_mv_refresh" -> maintainMvRefresh _,
     "q_join_dpp" -> joinDpp _,
-    "q_pipeline_ingest" -> pipelineIngest _,
-    "q_ingest_json" -> ingestJson _,
+    "q_pipeline_ingest" -> ((s: SparkSession, _: String) => pipelineIngest(s)),
+    "q_ingest_json" -> ((s: SparkSession, _: String) => ingestJson(s)),
     "q_source_json_roundtrip" -> sourceJsonRoundtrip _,
     "q_source_gzip_roundtrip" -> sourceGzipRoundtrip _,
     "q_source_csv_roundtrip" -> sourceCsvRoundtrip _,

@@ -155,7 +155,7 @@ object PipelineMain extends Logging {
   /** In-process Dock API stub serving the reference's response shapes, so
     * `main` exercises the production transport over real HTTP.
     */
-  private def startStubApi(landing: Path): com.sun.net.httpserver.HttpServer = {
+  private def startStubApi(): com.sun.net.httpserver.HttpServer = {
     import com.sun.net.httpserver.{HttpExchange, HttpServer}
     val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     def reply(ex: HttpExchange, body: String): Unit = {
@@ -184,13 +184,7 @@ object PipelineMain extends Logging {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-pipeline")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build("graft-pipeline", graft.GraftSession.cores)
     val landing = graft.Fixtures.ensure(
       Paths.get(sys.props("java.io.tmpdir"), "graft_landing"))(
       Zip.writeLandingFixtures(_))
@@ -201,7 +195,7 @@ object PipelineMain extends Logging {
     val fireAt = CronSchedule.nextAfter("30 8 * * *", now)
     println(s"[pipeline] next scheduled fire (30 8 * * * UTC): epoch $fireAt " +
       s"(in ${fireAt - now}s); running now")
-    val api = startStubApi(landing)
+    val api = startStubApi()
     try {
       val base = s"http://127.0.0.1:${api.getAddress.getPort}"
       val http = new JdkHttpTransport()

@@ -85,7 +85,7 @@ object Transfer {
     * archives + the non-zip README: transfer is suffix-blind, unlike the
     * ingest's list_filter_suffix) and prove byte-for-byte integrity.
     */
-  def transferFile(s: SparkSession, d: String): DataFrame = {
+  def transferFile(s: SparkSession): DataFrame = {
     val landing = graft.Fixtures.ensure(
       Paths.get(sys.props("java.io.tmpdir"), "graft_landing"))(
       Zip.writeLandingFixtures(_))
@@ -96,7 +96,7 @@ object Transfer {
   // ------------------------------------------------------------- contract
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_transfer_file" -> transferFile _)
+    "q_transfer_file" -> ((s: SparkSession, _: String) => transferFile(s)))
 
   /** Static oracle: the five fixture DATA files (4 archives + the README
     * decoy — transfer is suffix-blind but Spark file sources hide

@@ -371,30 +371,22 @@ object Streams {
     * its parquet bytes by FILE COPY instead of running a one-row
     * distributed write job per query (≈100-160 ms each, ~20 stream keys).
     */
-  private val sentinelMemo =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, DataFrame]()
-
-  private def sentinelBatch(s: SparkSession): DataFrame =
-    sentinelMemo.computeIfAbsent(s, _ => {
-      import s.implicits._
-      Seq(Ev(-1L, Instant.parse("2030-01-01T00:00:00Z"), -1L, "sentinel", 0.0)).toDF()
-    })
+  private val sentinelBatch = new graft.PerSession(s => {
+    import s.implicits._
+    Seq(Ev(-1L, Instant.parse("2030-01-01T00:00:00Z"), -1L, "sentinel", 0.0)).toDF()
+  })
 
   /** The sentinel row as staged parquet bytes, written ONCE per session
     * (same engine write path — identical bytes to what the per-query
     * write produced), then file-copied into each query's private feed dir.
     */
-  private val sentinelStaged =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.nio.file.Path]()
-
-  private def stagedSentinelDir(s: SparkSession): java.nio.file.Path =
-    sentinelStaged.computeIfAbsent(s, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(
-        streamCkptRoot, "graft_stream_sentinel_")
-      graft.Fixtures.registerForExitCleanup(dir)
-      sentinelBatch(s).coalesce(1).write.mode("overwrite").parquet(dir.toString)
-      dir
-    })
+  private val stagedSentinelDir = new graft.PerSession(s => {
+    val dir = java.nio.file.Files.createTempDirectory(
+      streamCkptRoot, "graft_stream_sentinel_")
+    graft.Fixtures.registerForExitCleanup(dir)
+    sentinelBatch(s).coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    dir
+  })
 
   /** Append one staged batch into a query-private feed dir: the memoized
     * sentinel goes in as a file copy; anything else pays the distributed
@@ -446,7 +438,7 @@ object Streams {
   private def runStagedBatches(s: SparkSession, build: DataFrame => DataFrame,
       d: String, laterBatches: Seq[DataFrame],
       firstBatchExtra: Seq[DataFrame] = Nil,
-      key: String = "anon"): DataFrame = {
+      key: String): DataFrame = {
     withStreamParts(s) {
       val name = s"graft_stream_$key"
       // a re-invocation REPLACES the prior run's sink table instead of
@@ -510,14 +502,7 @@ object Streams {
   private def withStagedFeed(s: SparkSession, d: String,
       laterBatches: Seq[DataFrame], firstBatchExtra: Seq[DataFrame])(
       start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    // harness-phase stamps (guide §1.5): only under SPARK_GRAFT_PROFILE
-    val profT0 = System.nanoTime()
-    def phase(what: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_PROFILE"))
-        System.err.println(
-          f"[prof-stream-phase] $what +${(System.nanoTime() - profT0) / 1e6}%.0f ms")
     val shared = java.nio.file.Paths.get(stagedEventsDir(s, d))
-    phase("staged-events")
     // registered for exit cleanup too: the finally below removes it on the
     // normal path, the hook covers a JVM killed mid-query; same RAM root
     // as the shared dir so the {shared,own} glob stays one-component
@@ -535,7 +520,6 @@ object Streams {
     // instead of two. (Stream-stream OUTER-join eviction does NOT run in
     // that no-data batch — q_stream_join_outer keeps its double-sentinel.)
     firstBatchExtra.foreach(appendBatch(s, _, own))
-    phase("first-batch-extra")
     // no maxFilesPerTrigger → each drain consumes every staged file in one
     // micro-batch, keeping intra-batch rows ahead of the watermark
     val src = s.readStream.schema(normalizedEvents(s, d).schema).parquet(glob)
@@ -555,10 +539,8 @@ object Streams {
         case Some(v) => s.conf.set(ckptKey, v)
         case None => s.conf.unset(ckptKey)
       }
-    phase("started")
     try {
       q.processAllAvailable()
-      phase("drain-1")
       laterBatches.foreach { b =>
         appendBatch(s, b, own)
         q.processAllAvailable()
@@ -570,27 +552,14 @@ object Streams {
       // as an empty scd2 sink in a full-suite run). A repeat drain is a
       // no-op when the flush already ran and completes it when it hasn't.
       q.processAllAvailable()
-      phase("drained")
       lastMicroBatchPlan =
         try {
           val se = q.getClass.getMethod("streamingQuery").invoke(q)
           val ex = se.getClass.getMethod("lastExecution").invoke(se)
           ex.getClass.getMethod("executedPlan").invoke(ex).toString
         } catch { case scala.util.control.NonFatal(_) => "(unavailable)" }
-      // Optimization-round measurement aid (guide §1): SPARK_GRAFT_PROFILE=1
-      // dumps each micro-batch's durationMs breakdown (triggerExecution,
-      // queryPlanning, walCommit, addBatch, stateStore commit...) so the
-      // streaming harness floor decomposes. Inert without the env var.
-      if (sys.env.contains("SPARK_GRAFT_PROFILE"))
-        q.recentProgress.foreach { p =>
-          System.err.println(s"[prof-stream] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durations=${p.durationMs} state=${p.stateOperators.map(o =>
-              s"(commit=${o.commitTimeMs}ms rows=${o.numRowsTotal})").mkString(",")}")
-        }
     } finally {
-      phase("pre-stop")
       q.stop()
-      phase("stopped")
       // the sink holds the results; the query-private staged copies and
       // the transient checkpoint would otherwise accumulate per
       // invocation (the shared events staging is one copy per dataset

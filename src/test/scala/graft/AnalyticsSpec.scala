@@ -1990,7 +1990,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // FW-BW must collapse the cycle to its min id
     val e = Seq((10L, 11L), (11L, 12L), (12L, 10L), (12L, 13L), (20L, 21L))
       .toDF("a", "b")
-    val lab = Analytics.sccLabels(s, e).collect()
+    val lab = Analytics.sccLabels(e).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(lab.size === 6)
     assert(lab(10L) === 10L && lab(11L) === 10L && lab(12L) === 10L,

@@ -162,4 +162,26 @@ class FixturesSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteDirectory(parent.toFile)
     }
   }
+
+  test("PerSession: one value per session; clearMemo frees only its own session's frames") {
+    import org.apache.spark.storage.StorageLevel
+    val s = TestSpark.spark
+    val other = s.newSession()
+    val holder = new PerSession(_ => new Object)
+    assert(holder(s) eq holder(s))
+    assert(holder(other) eq holder(other))
+    assert(holder(other) ne holder(s), "newSession() must get its own entry")
+    // distinct plans: sessions share one cache manager, which keys by plan
+    val mine = operators.LlmData.memo(s, "per_session_spec")(s.range(0, 7).toDF("x"))
+    val theirs = operators.LlmData.memo(other, "per_session_spec")(other.range(0, 11).toDF("x"))
+    try {
+      assert(operators.LlmData.memo(s, "per_session_spec")(fail("rebuilt a live entry")) eq mine)
+      assert(mine.storageLevel != StorageLevel.NONE && theirs.storageLevel != StorageLevel.NONE)
+      operators.LlmData.clearMemo(s)
+      assert(mine.storageLevel === StorageLevel.NONE, "clearMemo(s) must unpersist s's frames")
+      assert(theirs.storageLevel !== StorageLevel.NONE,
+        "clearMemo(s) must leave another live session's frames cached")
+      assert(operators.LlmData.memo(other, "per_session_spec")(fail("lost the other entry")) eq theirs)
+    } finally operators.LlmData.clearMemo(other)
+  }
 }

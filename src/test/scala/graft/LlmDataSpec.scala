@@ -483,7 +483,7 @@ class LlmDataSpec extends AnyFunSuite {
   }
 
   test("q_dedup_audio_fp: planted dup structure surfaces exactly, tolerance path fires") {
-    val got = LlmData.dedupAudioFp(s, d).collect()
+    val got = LlmData.dedupAudioFp(s).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // the 5 identical-fingerprint pairs (byte dups + loudness variants)
     // and the two waveform-perturbed re-encodes at Hamming 1 — nothing
@@ -771,10 +771,10 @@ class LlmDataSpec extends AnyFunSuite {
   }
 
   test("q_multimodal_keyframe: one median frame per scene, inside its segment") {
-    val segs = LlmData.multimodalVideoScene(s, d).collect()
+    val segs = LlmData.multimodalVideoScene(s).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
-    val keys = LlmData.multimodalKeyframe(s, d).collect()
+    val keys = LlmData.multimodalKeyframe(s).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(keys.length === segs.size, "one keyframe per scene")
     keys.foreach { case (v, sc, kf, _, n) =>
@@ -822,7 +822,7 @@ class LlmDataSpec extends AnyFunSuite {
 
   test("q_multimodal_audio_segments: islands recover exactly the planted activity runs") {
     import graft.functions.BinaryBatch
-    val segs = LlmData.multimodalAudioSegments(s, d).collect()
+    val segs = LlmData.multimodalAudioSegments(s).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     // planted truth straight from the generator's active-window rule
     val wantSegs = (0 until BinaryBatch.AudioSegClips).flatMap { c =>
@@ -847,7 +847,7 @@ class LlmDataSpec extends AnyFunSuite {
 
   test("q_multimodal_video_scene: segments recover exactly the planted cuts from decoded bytes") {
     import graft.functions.BinaryBatch
-    val segs = LlmData.multimodalVideoScene(s, d).collect()
+    val segs = LlmData.multimodalVideoScene(s).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     val nv = BinaryBatch.VideoSceneVideos
     val nf = BinaryBatch.VideoSceneFrames
@@ -875,9 +875,9 @@ class LlmDataSpec extends AnyFunSuite {
   test("q_stream_video_scene: streamed decode equals an independent driver decode; segments identical to batch") {
     import graft.functions.BinaryBatch
     // transport identity: same segments, same order, as the batch operator
-    val out = LlmData.streamVideoScene(s, d).collect()
+    val out = LlmData.streamVideoScene(s).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    val batch = LlmData.multimodalVideoScene(s, d).collect()
+    val batch = LlmData.multimodalVideoScene(s).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(out.toSeq === batch.toSeq,
       "streaming transport must be content-identical to the batch operator")
@@ -2566,7 +2566,7 @@ class LlmDataSpec extends AnyFunSuite {
   }
 
   test("q_dedup_image_phash recovers exactly the planted image dup structure") {
-    val got = LlmData.dedupImagePhash(s, d).collect()
+    val got = LlmData.dedupImagePhash(s).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // ids 30..39 are +16-brightness copies of families 0..9 — dHash is
     // brightness-shift-invariant, so these MUST land at Hamming 0

@@ -901,7 +901,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q_dedup_audio_fp: the band join is equi, never all-pairs") {
-    val p = plan(graft.operators.LlmData.dedupAudioFp(s, d))
+    val p = plan(graft.operators.LlmData.dedupAudioFp(s))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"audio fingerprint dedup planned a quadratic join:\n$p")
   }
