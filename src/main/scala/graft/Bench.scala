@@ -37,7 +37,7 @@ object Bench {
     // attribution artifact — 5.8 s as the session's first query, 1.4 s
     // steady-state (docs/PLANS.md "r4 bench warm-up").
     locally {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bench_warm").toString
+      val tmp = Fixtures.tempDirCleanedAtExit("graft_bench_warm").toString
       val warm = spark.range(0, 100000)
         .selectExpr("id", "cast(id as string) s", "cast(id as double) d")
       warm.groupBy(org.apache.spark.sql.functions.expr("id % 7")).count().count()

@@ -1,9 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.security.MessageDigest
 
-/** Atomic publish-once for deterministic fixture directories under
-  * java.io.tmpdir (landing zips, media PNGs, audio WAVs).
+/** Atomic publish-once for staged artifacts under java.io.tmpdir (landing
+  * zips, media PNGs, audio WAVs, indexes, pair tables, signatures).
+  * [[ensureDerived]] is the one entry point: it keys each artifact by the
+  * code and data that built it and sweeps the builds it supersedes.
   *
   * The previous pattern — `if (!exists(sentinelFile)) writeAll(dir)` — was
   * an unsynchronized check-then-write: a concurrent Verify/Bench/test JVM
@@ -53,96 +57,126 @@ object Fixtures {
   private[graft] def isPendingExitCleanup(p: Path): Boolean =
     cleanupAtExit.contains(p)
 
-  /** Identity tag for a derived artifact of one fixture table: scheme
-    * version + sanitized source dir + a RAW-PATH identity hash + a
-    * fingerprint over the table's LEAF parquet files (relative path,
-    * size, mtime — recursed when the table is a directory of
-    * part-files). The identity hash makes the dataset component
-    * injective where sanitization is not ("/sf0.1" and "/sf0_1" share a
-    * sanitized name; "sf0.1" is a sanitized-name PREFIX of "sf0.1.x"),
-    * which [[sweepSuperseded]] depends on: its stale-tag prefix must
-    * match THIS dataset's builds only, never a sibling dataset whose
-    * live artifact would otherwise be registered for deletion. A
-    * regenerated fixture changes the fingerprint; bumping `version` keys
-    * out artifacts built by an older derivation.
+  /** Digest of the engine's own compiled code: the classes dir or jar that
+    * holds this object, computed once per JVM. Part of every staged
+    * artifact's identity, so a changed derivation (an algorithm, a
+    * parameter, a schema) can never be served from a dir an older build
+    * published — any recompile rebuilds staged artifacts on first touch.
     */
-  def datasetTag(d: String, table: String, version: String): String = {
-    val src = java.nio.file.Paths.get(d, s"$table.parquet")
-    val leaves = {
-      val st = Files.walk(src)
-      try st.filter(Files.isRegularFile(_)).sorted()
-        .toArray.toSeq.map(_.asInstanceOf[Path])
-      finally st.close()
+  private lazy val engineDigest: String = {
+    val src = Option(getClass.getProtectionDomain.getCodeSource).getOrElse(
+      throw new IllegalStateException(
+        "graft.Fixtures was loaded without a code source; staged artifacts " +
+          "need the engine's classes dir or jar on the classpath"))
+    codeDigest(Paths.get(src.getLocation.toURI))
+  }
+
+  /** Content digest of a classes dir (every regular file: relative path,
+    * size, bytes) or of a jar (its bytes), as 16 hex chars.
+    */
+  private[graft] def codeDigest(location: Path): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    if (Files.isDirectory(location)) leaves(location).foreach { f =>
+      md.update(s"${location.relativize(f)}\u0000${Files.size(f)}\u0000"
+        .getBytes(UTF_8))
+      md.update(Files.readAllBytes(f))
+    } else md.update(Files.readAllBytes(location))
+    hex16(md.digest())
+  }
+
+  /** Fingerprint of the source tables' LEAF parquet files (relative path,
+    * size, mtime — recursed when a table is a directory of part-files): a
+    * regenerated fixture changes it.
+    */
+  private def tablesFingerprint(d: String, tables: Seq[String]): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    tables.foreach { table =>
+      val src = Paths.get(d, s"$table.parquet")
+      md.update(s"$table\u0000".getBytes(UTF_8))
+      leaves(src).foreach(p => md.update((s"${src.relativize(p)}\u0000" +
+        s"${Files.size(p)}\u0000${Files.getLastModifiedTime(p).toMillis}\u0000")
+          .getBytes(UTF_8)))
     }
-    val fpInput = (d.hashCode.toLong +: leaves.flatMap(p => Seq(
-      src.relativize(p).toString.hashCode.toLong,
-      Files.size(p),
-      Files.getLastModifiedTime(p).toMillis))).toArray
-    val fp = java.lang.Long.toHexString(
-      java.util.Arrays.hashCode(fpInput).toLong & 0xffffffffL)
-    s"${datasetPrefix(d, version)}$fp"
+    hex16(md.digest())
   }
 
-  /** The dataset-identity prefix shared by [[datasetTag]] and
-    * [[sweepSuperseded]]: version + sanitized dir + hex of the RAW dir's
-    * hashCode, underscore-terminated — everything in a tag except the
-    * per-generation fingerprint.
-    */
-  private def datasetPrefix(d: String, version: String): String = {
-    val idHex = java.lang.Long.toHexString(d.hashCode.toLong & 0xffffffffL)
-    s"${version}_${d.replaceAll("[^a-zA-Z0-9]", "_")}_${idHex}_"
+  private def leaves(root: Path): Seq[Path] = {
+    val st = Files.walk(root)
+    try st.filter(Files.isRegularFile(_)).sorted()
+      .toArray.toSeq.map(_.asInstanceOf[Path])
+    finally st.close()
   }
 
-  /** Stage-once home for a FINGERPRINT-TAGGED derived artifact of one
-    * fixture table (`$tmpdir/$family/<tag>` via [[datasetTag]] +
-    * [[ensure]]), with the sweep the bare composition lacked: every
-    * fixture regeneration mints a new tag, and the superseded sibling —
-    * a full fact-table copy for the compaction input — previously just
-    * accumulated. Stale tags (same family + version + dataset prefix,
-    * different fingerprint) are registered for EXIT-time deletion rather
-    * than deleted in place, because a concurrently running JVM may still
-    * hold lazy scans over the old tag; in-flight `_staging_` dirs are
-    * left to their owners.
+  private def hex16(digest: Array[Byte]): String =
+    digest.take(8).map("%02x".format(_)).mkString
+
+  /** Dir name of a derived artifact inside its family dir: the dataset
+    * prefix, the engine digest and, when the artifact has source tables,
+    * their fingerprint.
     */
-  def ensureDerived(family: String, d: String, table: String,
-      version: String, extraTables: Seq[String] = Nil)(
+  private def datasetTag(d: String, tables: Seq[String]): String =
+    datasetPrefix(d) + engineDigest +
+      (if (tables.isEmpty) "" else "_" + tablesFingerprint(d, tables))
+
+  /** What follows [[datasetPrefix]] in every tag: one or two digests. */
+  private val tagTail = "[0-9a-f]{16}(_[0-9a-f]{16})?"
+
+  /** Hex of the RAW source dir's hashCode + the sanitized dir, underscore
+    * terminated; empty for code-only fixtures. The identity hash makes the
+    * prefix injective where sanitization is not ("/sf0.1" and "/sf0_1"
+    * share a sanitized name), which [[sweepSuperseded]] depends on: it
+    * must match THIS dataset's builds only, never a sibling dataset whose
+    * live artifact would otherwise be registered for deletion. The hash
+    * comes first because Spark skips any path whose name starts with `_`,
+    * as a sanitized absolute path does.
+    */
+  private def datasetPrefix(d: String): String =
+    if (d.isEmpty) ""
+    else {
+      val idHex = java.lang.Long.toHexString(d.hashCode.toLong & 0xffffffffL)
+      s"${idHex}_${d.replaceAll("[^a-zA-Z0-9]", "_")}_"
+    }
+
+  /** Where [[ensureDerived]] publishes `family` over `tables` of dataset
+    * `d`: `$tmpdir/$family/<tag>`.
+    */
+  private[graft] def derivedDir(family: String, d: String,
+      tables: String*): Path =
+    Paths.get(sys.props("java.io.tmpdir"), family, datasetTag(d, tables))
+
+  /** The same identity as [[derivedDir]] without the tmpdir, for
+    * JVM-lifetime model caches: a cached model and the staged artifact
+    * built from it are invalidated together. The family stays in the key,
+    * so two artifacts over the same table never share an entry.
+    */
+  private[graft] def derivedKey(family: String, d: String,
+      tables: String*): String =
+    s"$family/${datasetTag(d, tables)}"
+
+  /** The one way to stage an artifact: build-once home for `family`
+    * derived from `tables` of dataset `d` (none for a code-only fixture),
+    * keyed by the engine digest and the tables' fingerprint, published
+    * through [[ensure]]. Superseded builds of the same family and dataset
+    * are swept by [[sweepSuperseded]].
+    */
+  def ensureDerived(family: String, d: String, tables: String*)(
       build: Path => Unit): Path = {
-    val parent = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), family)
-    // multi-source artifacts COMBINE every source table's generation
-    // fingerprint into the one bare-hex fingerprint slot the sweep
-    // contract expects — folding a second fingerprint into the VERSION
-    // string instead (the r11 first cut) changes the identity prefix per
-    // generation, so sweepSuperseded never matches the superseded
-    // sibling and full artifact copies accumulate forever. The combine
-    // is a REAL digest (md5 truncated to 8 hex chars, same width as the
-    // single-table slot): composing Java hashCodes here would let a
-    // 32-bit-hashCode collision across fixture regenerations silently
-    // serve a stale artifact, which then fails the oracle gate with no
-    // pointer back to the cache
-    val tag =
-      if (extraTables.isEmpty) datasetTag(d, table, version)
-      else {
-        val prefix = datasetPrefix(d, version)
-        val fps = (table +: extraTables)
-          .map(tb => datasetTag(d, tb, version).drop(prefix.length))
-        val md = java.security.MessageDigest.getInstance("MD5")
-          .digest(fps.mkString("|").getBytes("UTF-8"))
-        val combined = md.take(4).map("%02x".format(_)).mkString
-        s"$prefix$combined"
-      }
-    val dir = ensure(parent.resolve(tag))(build)
-    sweepSuperseded(family, d, version, tag)
+    val dir = ensure(derivedDir(family, d, tables: _*))(build)
+    sweepSuperseded(dir, d)
     dir
   }
 
-  /** Register stale sibling tags of a live artifact for exit-time
-    * deletion: same family + scheme version + dataset identity (sanitized
-    * name AND raw-path hash — see [[datasetPrefix]]), different
-    * fingerprint — i.e. builds of THIS artifact against a fixture
-    * generation that no longer exists. Other datasets' tags and other
-    * scheme versions never match the identity prefix, and the remainder
-    * must parse as a bare fingerprint, so a sibling dataset's LIVE
-    * artifact can never be registered.
+  /** [[ensureDerived]] for a code-only fixture (no source table). */
+  def ensureDerived(family: String)(build: Path => Unit): Path =
+    ensureDerived(family, "")(build)
+
+  /** Register stale siblings of a live artifact for exit-time deletion:
+    * same family + dataset identity (sanitized name AND raw-path hash —
+    * see [[datasetPrefix]]), a different fingerprint or engine digest —
+    * i.e. builds against a fixture generation or an engine build that no
+    * longer exists. Other datasets' tags never match the identity prefix,
+    * and the remainder must parse as bare digests, so a sibling dataset's
+    * LIVE artifact and in-flight `_staging_` dirs are never registered.
     *
     * Deferral to exit time protects THIS JVM's in-flight lazy scans over
     * the old tag; it is best-effort toward OTHER JVMs (one that started
@@ -152,23 +186,21 @@ object Fixtures {
     * deployment manages index retention as a lifecycle policy, not a
     * tmpdir sweep.
     */
-  def sweepSuperseded(family: String, d: String, version: String,
-      liveTag: String): Unit = {
-    val parent = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), family)
-    if (!Files.isDirectory(parent)) return
-    val prefix = datasetPrefix(d, version)
-    val st = Files.list(parent)
+  private def sweepSuperseded(live: Path, d: String): Unit = {
+    val prefix = datasetPrefix(d)
+    val st = Files.list(live.getParent)
     try st.forEach { p =>
       val n = p.getFileName.toString
-      if (n != liveTag && n.startsWith(prefix) &&
-        n.drop(prefix.length).matches("[0-9a-f]{1,8}")) {
+      if (p != live && n.startsWith(prefix) &&
+        n.drop(prefix.length).matches(tagTail)) {
         exitHook
         cleanupAtExit.add(p)
       }
     } finally st.close()
   }
 
-  def ensure(dir: Path)(build: Path => Unit): Path = {
+  /** Publish-once of one dir, under [[ensureDerived]]. */
+  private[graft] def ensure(dir: Path)(build: Path => Unit): Path = {
     if (!Files.exists(dir.resolve("_COMPLETE"))) {
       val staging = dir.resolveSibling(
         s"${dir.getFileName}_staging_${java.util.UUID.randomUUID()}")

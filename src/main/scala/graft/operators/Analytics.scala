@@ -1185,8 +1185,8 @@ object Analytics {
   /** The co-purchase part graph's canonical (a < b, distinct) edge table.
     *
     * STAGED like the IVF index: the derived graph lands ONCE per fixture
-    * as fingerprint-keyed parquet ([[graft.Fixtures.datasetTag]] over the
-    * lineitem leaf files, atomic publish via [[graft.Fixtures.ensure]]) —
+    * as fingerprint-keyed parquet ([[graft.Fixtures.ensureDerived]] over
+    * the lineitem leaf files and the engine build, atomic publish) —
     * exactly how a production pipeline materializes a derived edge table
     * instead of re-deriving it per session. Later JVMs and every graph
     * query in this one read the staged table; the in-session memo then
@@ -1204,7 +1204,7 @@ object Analytics {
   private def copurchaseEdges(s: SparkSession, d: String): DataFrame =
     LlmData.memo(s, s"copurchase_edges:$d") {
       val path = graft.Fixtures.ensureDerived(
-        "graft_copurchase", d, "lineitem", "cp1") { staging =>
+        "graft_copurchase", d, "lineitem") { staging =>
         t(s, d, "lineitem")
           .groupBy(col("l_orderkey"))
           .agg(collect_set(col("l_partkey")).as("ps"))
@@ -1233,7 +1233,7 @@ object Analytics {
     */
   private def copurchaseAdj(s: SparkSession, d: String): String =
     graft.Fixtures.ensureDerived(
-      "graft_copurchase_adj", d, "lineitem", "cpadj1") { staging =>
+      "graft_copurchase_adj", d, "lineitem") { staging =>
       val e = copurchaseEdges(s, d)
       val deg = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
         .groupBy("n").agg(count(lit(1)).as("deg"))
@@ -2502,7 +2502,7 @@ object Analytics {
     // explode runs per GENERATION, not per session; the query still owns
     // the support/confidence/lift arithmetic and the part-grain joins
     val pairsPath = graft.Fixtures.ensureDerived(
-      "graft_basket_pairs", d, "lineitem", "bp1") { staging =>
+      "graft_basket_pairs", d, "lineitem") { staging =>
       basketPairBuild(baskets).write.mode("overwrite").parquet(staging.toString)
     }
     val pairs = s.read.parquet(pairsPath.toString)
@@ -2511,7 +2511,7 @@ object Analytics {
     // so exploding them IS the distinct (order, part) projection; the
     // basket total rides as a constant column so one artifact carries both)
     val itemsPath = graft.Fixtures.ensureDerived(
-      "graft_basket_items", d, "lineitem", "bi1") { staging =>
+      "graft_basket_items", d, "lineitem") { staging =>
       val tot = baskets.count()
       baskets.select(explode(col("ps")).as("l_partkey"))
         .groupBy(col("l_partkey")).agg(count(lit(1)).as("n_item"))
@@ -3315,8 +3315,7 @@ object Analytics {
       // so freezing one collect_set arrival order in parquet is
       // semantics-neutral.
       val path = graft.Fixtures.ensureDerived(
-        "graft_supplier_nbrs", d, "lineitem", "sn2",
-        extraTables = Seq("orders")) { staging =>
+        "graft_supplier_nbrs", d, "lineitem", "orders") { staging =>
         val (capped, release) = supplierNbrsBuild(s, d)
         try capped.write.mode("overwrite").parquet(staging.toString)
         finally release()
@@ -3411,8 +3410,7 @@ object Analytics {
       // generations enter the combined fingerprint (extraTables), same
       // two-source invalidation as [[supplierNbrs]]
       val p = graft.Fixtures.ensureDerived(
-        "graft_supplier_wedges", d, "lineitem", "sw2",
-        extraTables = Seq("orders")) { staging =>
+        "graft_supplier_wedges", d, "lineitem", "orders") { staging =>
         supplierNbrs(s, d)
           .where(size(col("sps")) > 1)
           .select(posexplode(col("sps")).as(Seq("i", "x")), col("sps"))
@@ -3449,8 +3447,7 @@ object Analytics {
     // generation — the operator itself is a 20-row sort over the artifact
     // (measured 24.6 s → staged-read on the sf0.1 sweep).
     val p = graft.Fixtures.ensureDerived(
-      "graft_supplier_aa", d, "lineitem", "saa1",
-      extraTables = Seq("orders")) { staging =>
+      "graft_supplier_aa", d, "lineitem", "orders") { staging =>
       supplierNbrs(s, d).where(size(col("sps")) > 1)
         .select(col("sps"), size(col("sps")).cast("long").as("k"))
         .select(col("sps"), col("k"), posexplode(col("sps")).as(Seq("i", "x")))
@@ -4462,8 +4459,8 @@ object Analytics {
   private def louvainDecisions(s: SparkSession, d: String): DataFrame =
     LlmData.memo(s, s"louvain_decisions:$d") {
       val p = graft.Fixtures.ensureDerived(
-        "graft_louvain_decisions", d, "lineitem", "ld1",
-        extraTables = Seq("orders", "supplier", "nation")) { staging =>
+        "graft_louvain_decisions", d, "lineitem", "orders", "supplier",
+        "nation") { staging =>
         louvainDecisionsBody(s, d)
           .write.mode("overwrite").parquet(staging.toString)
       }
@@ -4529,8 +4526,8 @@ object Analytics {
   private def louvainContracted(s: SparkSession, d: String): DataFrame =
     LlmData.memo(s, s"louvain_contracted:$d") {
       val p = graft.Fixtures.ensureDerived(
-        "graft_louvain_l2graph", d, "lineitem", "lg1",
-        extraTables = Seq("orders", "supplier", "nation")) { staging =>
+        "graft_louvain_l2graph", d, "lineitem", "orders", "supplier",
+        "nation") { staging =>
         val pairs = supplierWedges(s, d)
         val assign = broadcast(louvainDecisions(s, d)
           .select(col("supplier"), col("best_community")))
@@ -4800,7 +4797,7 @@ object Analytics {
     */
   private def ccEdgesPath(s: SparkSession, d: String): java.nio.file.Path =
     graft.Fixtures.ensureDerived(
-      "graft_cc_edges", d, "lineitem", "cce2") { staging =>
+      "graft_cc_edges", d, "lineitem") { staging =>
       val baskets = t(s, d, "lineitem")
         .groupBy(col("l_orderkey"))
         .agg(collect_set(col("l_partkey")).as("ps"))
@@ -5046,14 +5043,12 @@ object Analytics {
     * recipe; r18 verdict item 8: the query previously re-ran full CC on
     * the standing graph every invocation as "scenario setup", which made
     * the key time the rebuild, not the MAINTENANCE path it declares).
-    * Version-tagged: bump "ccbase1" whenever [[ccEdgesPath]]'s scheme
-    * version or [[ccIncrBatchCond]] changes — the build derives from
-    * both. The oracle is unaffected: it replays the FULL recompute over
-    * all edges and hash-gates the merged result.
+    * The oracle is unaffected: it replays the FULL recompute over all
+    * edges and hash-gates the merged result.
     */
   private def ccBasePath(s: SparkSession, d: String): java.nio.file.Path =
     graft.Fixtures.ensureDerived(
-      "graft_cc_base", d, "lineitem", "ccbase1") { staging =>
+      "graft_cc_base", d, "lineitem") { staging =>
       val edges = ccEdges(s, d)
       val edgeParts = math.max(1L, ccEdgeCount(s, d) / 500000L).toString
       val aqeKey = "spark.sql.adaptive.enabled"
@@ -6104,7 +6099,7 @@ object Analytics {
     */
   private def sccEdgesPath(s: SparkSession, d: String): java.nio.file.Path =
     graft.Fixtures.ensureDerived(
-      "graft_scc_edges", d, "lineitem", "scc1") { staging =>
+      "graft_scc_edges", d, "lineitem") { staging =>
       val w = Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
       val seq = t(s, d, "orders")

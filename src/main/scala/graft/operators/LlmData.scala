@@ -152,7 +152,7 @@ object LlmData {
     // than the work it would save).
     val members = memo(s, s"textmembers:$d") {
       val p = graft.Fixtures.ensureDerived(
-        "graft_textmembers", d, "documents", "tm1") { staging =>
+        "graft_textmembers", d, "documents") { staging =>
         textMembers(t(s, d, "documents"))
           .write.mode("overwrite").parquet(staging.toString)
       }
@@ -164,7 +164,7 @@ object LlmData {
     }
     val sets = memo(s, s"repsets:$d") {
       val p = graft.Fixtures.ensureDerived(
-        "graft_repsets", d, "documents", "rp1") { staging =>
+        "graft_repsets", d, "documents") { staging =>
         sh.groupBy("doc_id").agg(sort_array(collect_list(col("sh"))).as("shs"))
           .write.mode("overwrite").parquet(staging.toString)
       }
@@ -186,7 +186,7 @@ object LlmData {
     * probabilistic, and oracle-checked.
     */
   def dedupNgram(s: SparkSession, d: String): DataFrame = memo(s, s"ngram_pairs:$d") {
-    // STAGED derived table (the [[graft.Fixtures.datasetTag]] pattern the
+    // STAGED derived table (the [[graft.Fixtures.ensureDerived]] pattern the
     // IVF index and co-purchase graph use): the exact pair table is the
     // backbone of the dedup family — q_dedup_survivors/_cluster/_sweep and
     // q_corpus_filter all consume it — and is a deterministic function of
@@ -195,7 +195,7 @@ object LlmData {
     // re-applies the canonical (doc_a, doc_b) order the consumers and the
     // oracle compare against.
     val path = graft.Fixtures.ensureDerived(
-      "graft_ngram_pairs", d, "documents", "ng1") { staging =>
+      "graft_ngram_pairs", d, "documents") { staging =>
       dedupNgramBuild(s, d).write.mode("overwrite").parquet(staging.toString)
     }
     s.read.parquet(path.toString).orderBy("doc_a", "doc_b")
@@ -384,7 +384,7 @@ object LlmData {
       broadcastMaxRows: Long): DataFrame =
     dedupIncrementalFrom(s, t(s, d, "documents"), Some(shingleRows(s, d)),
       broadcastMaxRows,
-      Some(graft.Fixtures.datasetTag(d, "documents", "incn_v2")),
+      Some(graft.Fixtures.derivedKey("graft_inc_batch_rows", d, "documents")),
       memoTag = Some(d))
 
   /** The incremental pipeline from an arbitrary (doc_id, text) frame,
@@ -724,7 +724,7 @@ object LlmData {
     // doctrine): deterministic xxhash64 min-aggregates over the rep
     // shingles, 32 longs/rep read back instead of re-hashing per session
     val p = graft.Fixtures.ensureDerived(
-      "graft_minhash_sigs", d, "documents", "mh1") { staging =>
+      "graft_minhash_sigs", d, "documents") { staging =>
       minhashSigs(sh).write.mode("overwrite").parquet(staging.toString)
     }
     dedupNearCore(members, s.read.parquet(p.toString), sets)
@@ -803,7 +803,7 @@ object LlmData {
       // cleared-memo isolated passes) read 8 bytes/doc back instead of
       // re-hashing every token
       val p = graft.Fixtures.ensureDerived(
-        "graft_simhash_sigs", d, "documents", "xx1") { staging =>
+        "graft_simhash_sigs", d, "documents") { staging =>
         simhashes(s, d).write.mode("overwrite").parquet(staging.toString)
       }
       s.read.parquet(p.toString)
@@ -934,7 +934,7 @@ object LlmData {
       // staged like the xxhash64 signature table above — one md5 per token
       // per fixture GENERATION, not per session
       val p = graft.Fixtures.ensureDerived(
-        "graft_simhash_sigs", d, "documents", "md5v1") { staging =>
+        "graft_simhash_sigs_md5", d, "documents") { staging =>
         simhashesPortable(s, d).write.mode("overwrite").parquet(staging.toString)
       }
       s.read.parquet(p.toString)
@@ -1180,20 +1180,11 @@ object LlmData {
   private[graft] def simsearchAppendProbe(s: SparkSession, d: String,
       probeOf: Int => Int): DataFrame = {
     graft.functions.GraftFunctions.register(s) // native graft_dot
-    val tag = ivfAppendTag(d)
-    val centroids = ivfAppendCentroids(s, d, tag)
-    val indexPath = ivfAppendIndexWith(s, d, tag, centroids)
+    val centroids = ivfAppendCentroids(s, d)
+    val indexPath = ivfAppendIndexWith(s, d, centroids)
     val (qEmb, cells) = routeWith(s, d, centroids, probeOf)
     probeCells(s, indexPath, typedlit(qEmb), cells)
   }
-
-  /** Appended-index scheme: a1 — rows (vec_id, embedding, cell), coarse
-    * centroids derived from the STANDING subset only, the batch appended
-    * under the frozen codebook. Versioned apart from [[ivfSchemeVersion]]
-    * so the two index families never share a tag (or a codebook-cache
-    * key).
-    */
-  private val ivfAppendSchemeVersion = "a1"
 
   /** Deterministic standing/batch split of the append scenario: vectors
     * with vec_id ≡ 7 (mod 10) are "today's arrivals"; everything else
@@ -1202,19 +1193,17 @@ object LlmData {
     */
   private[operators] val appendBatchCond = "vec_id % 10 = 7"
 
-  private def ivfAppendTag(d: String): String =
-    graft.Fixtures.datasetTag(d, "embeddings", ivfAppendSchemeVersion)
-
   /** The frozen coarse quantizer of the append scenario: the
     * [[ivfCentroids]] derivation restricted to the standing subset — cell
     * count, sample step, ordering, and normalization all mirror the base
     * rule, so the oracle replays it with one extra WHERE. Cached under
-    * the APPEND tag (scheme a1), never colliding with the full-corpus
-    * codebook.
+    * the appended index's own family, never colliding with the
+    * full-corpus codebook.
     */
-  private def ivfAppendCentroids(s: SparkSession, d: String,
-      tag: String): Array[Array[Double]] =
-    ivfCodebook.computeIfAbsent(tag, _ => {
+  private def ivfAppendCentroids(s: SparkSession,
+      d: String): Array[Array[Double]] =
+    ivfCodebook.computeIfAbsent(
+      graft.Fixtures.derivedKey("graft_ivf_append", d, "embeddings"), _ => {
       val standing = t(s, d, "embeddings")
         .where(expr(s"NOT ($appendBatchCond)"))
       val nVecs = standing.count()
@@ -1227,7 +1216,7 @@ object LlmData {
     * base cell-partitioned index, then the batch is assigned under the
     * FROZEN standing centroids and appended as NEW files into the same
     * cell partitions — no standing row is read or rewritten by the append
-    * job. Both steps run inside one staged [[graft.Fixtures.ensure]]
+    * job. Both steps run inside one staged [[graft.Fixtures.ensureDerived]]
     * build, so concurrent readers see the merged index or nothing.
     */
   /** THE frozen-codebook assignment projection — (vec_id, embedding,
@@ -1244,11 +1233,11 @@ object LlmData {
       expr(s"array_position($scores, array_max($scores))").as("cell"))
   }
 
-  private def ivfAppendIndexWith(s: SparkSession, d: String, tag: String,
+  private def ivfAppendIndexWith(s: SparkSession, d: String,
       centroids: Array[Array[Double]]): String = {
     val assigned = frozenAssign(centroids) _
-    val dir = graft.Fixtures.ensure(java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_ivf_append", tag)) { staging =>
+    graft.Fixtures.ensureDerived(
+      "graft_ivf_append", d, "embeddings") { staging =>
       val emb = t(s, d, "embeddings")
       assigned(emb.where(expr(s"NOT ($appendBatchCond)")))
         .write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
@@ -1257,9 +1246,6 @@ object LlmData {
       assigned(emb.where(expr(appendBatchCond)))
         .write.mode("append").partitionBy("cell").parquet(staging.toString)
     }.toString
-    graft.Fixtures.sweepSuperseded("graft_ivf_append", d,
-      ivfAppendSchemeVersion, tag)
-    dir
   }
 
   /** Test seam: the merged appended-index path (LlmDataSpec reads it to
@@ -1267,8 +1253,7 @@ object LlmData {
     */
   private[graft] def ivfAppendIndexPath(s: SparkSession, d: String): String = {
     graft.functions.GraftFunctions.register(s)
-    val tag = ivfAppendTag(d)
-    ivfAppendIndexWith(s, d, tag, ivfAppendCentroids(s, d, tag))
+    ivfAppendIndexWith(s, d, ivfAppendCentroids(s, d))
   }
 
   /** The DuckDB replay of the appended/merged index probe: the routing
@@ -1303,7 +1288,7 @@ object LlmData {
     */
   private[graft] def ivfAppendCodebook(s: SparkSession,
       d: String): Array[Array[Double]] =
-    ivfAppendCentroids(s, d, ivfAppendTag(d))
+    ivfAppendCentroids(s, d)
 
   /** Test seam: every vector's cell under the FROZEN standing codebook,
     * recomputed in-plan — row-for-row equality with the staged index is
@@ -1311,7 +1296,7 @@ object LlmData {
     */
   private[graft] def ivfAppendAssignment(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val centroids = ivfAppendCentroids(s, d, ivfAppendTag(d))
+    val centroids = ivfAppendCentroids(s, d)
     frozenAssign(centroids)(t(s, d, "embeddings")).select("vec_id", "cell")
   }
 
@@ -1341,29 +1326,18 @@ object LlmData {
   private[graft] def simsearchStreamAppendProbe(s: SparkSession, d: String,
       probeOf: Int => Int): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val centroids = ivfAppendCentroids(s, d, ivfAppendTag(d))
-    val indexPath = ivfStreamIndexWith(s, d, ivfStreamTag(d), centroids)
+    val centroids = ivfAppendCentroids(s, d)
+    val indexPath = ivfStreamIndexWith(s, d, centroids)
     val (qEmb, cells) = routeWith(s, d, centroids, probeOf)
     probeCells(s, indexPath, typedlit(qEmb), cells)
   }
-
-  /** Stream-ingested index scheme: s1 — same row content as the a1
-    * appended scheme (vec_id, embedding, cell under the frozen standing
-    * codebook), built via the streaming transport. Its own family/version
-    * so batch and stream indexes never share a tag.
-    */
-  private val ivfStreamSchemeVersion = "s1"
-
-  private def ivfStreamTag(d: String): String =
-    graft.Fixtures.datasetTag(d, "embeddings", ivfStreamSchemeVersion)
 
   /** Test seam: the stream-ingested index path (LlmDataSpec compares its
     * full content row-for-row against the batch-appended index).
     */
   private[graft] def ivfStreamIndexPath(s: SparkSession, d: String): String = {
     graft.functions.GraftFunctions.register(s)
-    ivfStreamIndexWith(s, d, ivfStreamTag(d),
-      ivfAppendCentroids(s, d, ivfAppendTag(d)))
+    ivfStreamIndexWith(s, d, ivfAppendCentroids(s, d))
   }
 
   /** Build-or-reuse the stream-ingested index: the standing subset lands
@@ -1371,13 +1345,15 @@ object LlmData {
     * Structured Streaming file source → frozen assignment → parquet file
     * sink (AvailableNow, checkpointed, exactly-once via the sink commit
     * log); the sink's committed part-files are then moved into the
-    * standing cell dirs. All inside one staged [[graft.Fixtures.ensure]]
-    * build — readers see the complete merged index or nothing.
+    * standing cell dirs. Same row content as the appended index, its own
+    * family, so batch and stream indexes never share a dir. All inside
+    * one staged [[graft.Fixtures.ensureDerived]] build — readers see the
+    * complete merged index or nothing.
     */
-  private def ivfStreamIndexWith(s: SparkSession, d: String, tag: String,
-      centroids: Array[Array[Double]]): String = {
-    val dir = graft.Fixtures.ensure(java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_ivf_stream", tag)) { staging =>
+  private def ivfStreamIndexWith(s: SparkSession, d: String,
+      centroids: Array[Array[Double]]): String =
+    graft.Fixtures.ensureDerived(
+      "graft_ivf_stream", d, "embeddings") { staging =>
       val assigned = frozenAssign(centroids) _
       // base: the standing corpus, one batch write (the index as it stood
       // before today's arrivals)
@@ -1388,7 +1364,7 @@ object LlmData {
       // streaming projection, transactional file sink. The source's
       // basePath must be a DIRECTORY, and the fixture table may be either
       // a single file or a directory of part-files (both are encodings
-      // Fixtures.datasetTag supports) — so branch on which one this is.
+      // Fixtures fingerprints) — so branch on which one this is.
       val work = graft.Fixtures.tempDirCleanedAtExit("graft_ivf_stream_work_")
       val tablePath = s"$d/embeddings.parquet"
       val schema = s.read.parquet(tablePath).schema
@@ -1437,10 +1413,6 @@ object LlmData {
           target.resolve(s"stream-${f.getFileName.toString}"))
       }
     }.toString
-    graft.Fixtures.sweepSuperseded("graft_ivf_stream", d,
-      ivfStreamSchemeVersion, tag)
-    dir
-  }
 
   /** The parquet files a streaming file sink actually COMMITTED, read from
     * its `_spark_metadata` log (v1 format: one version-header line, then
@@ -1637,20 +1609,12 @@ object LlmData {
   def simsearchCompact(s: SparkSession, d: String): DataFrame =
     simsearchCompactProbe(s, d, defaultProbe)
 
-  /** Compacted-index scheme: c1 OVER the stream scheme it derives from —
-    * identical ROW content to the stream-ingested index (that identity is
-    * the point), new file layout. The source scheme version is part of
-    * this tag, so bumping the stream scheme can never leave a stale
-    * compacted generation serving the old rows.
-    */
-  private def ivfCompactSchemeVersion = s"c1-$ivfStreamSchemeVersion"
-
   /** Test seam: the compacted probe at a caller-chosen width. */
   private[graft] def simsearchCompactProbe(s: SparkSession, d: String,
       probeOf: Int => Int): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val centroids = ivfAppendCentroids(s, d, ivfAppendTag(d))
-    val source = ivfStreamIndexWith(s, d, ivfStreamTag(d), centroids)
+    val centroids = ivfAppendCentroids(s, d)
+    val source = ivfStreamIndexWith(s, d, centroids)
     val compacted = ivfCompactedIndexFrom(s, d, source)
     val (qEmb, cells) = routeWith(s, d, centroids, probeOf)
     probeCells(s, compacted, typedlit(qEmb), cells)
@@ -1661,26 +1625,22 @@ object LlmData {
     */
   private[graft] def ivfCompactedIndexPath(s: SparkSession, d: String): String = {
     graft.functions.GraftFunctions.register(s)
-    val centroids = ivfAppendCentroids(s, d, ivfAppendTag(d))
+    val centroids = ivfAppendCentroids(s, d)
     ivfCompactedIndexFrom(s, d,
-      ivfStreamIndexWith(s, d, ivfStreamTag(d), centroids))
+      ivfStreamIndexWith(s, d, centroids))
   }
 
   /** Build-or-reuse the compacted GENERATION of the stream-appended index:
-    * the cell-wise bin-pack rewrite of `sourceIdx` into a staged dir,
-    * published atomically under the c1 tag.
+    * the cell-wise bin-pack rewrite of `sourceIdx` into a staged dir —
+    * identical ROW content to the stream-ingested index (that identity is
+    * the point), new file layout.
     */
   private def ivfCompactedIndexFrom(s: SparkSession, d: String,
-      sourceIdx: String): String = {
-    val tag = graft.Fixtures.datasetTag(d, "embeddings", ivfCompactSchemeVersion)
-    val dir = graft.Fixtures.ensure(java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_ivf_compact", tag)) { staging =>
+      sourceIdx: String): String =
+    graft.Fixtures.ensureDerived(
+      "graft_ivf_compact", d, "embeddings") { staging =>
       compactCellLayout(s, sourceIdx, staging)
     }.toString
-    graft.Fixtures.sweepSuperseded("graft_ivf_compact", d,
-      ivfCompactSchemeVersion, tag)
-    dir
-  }
 
   /** The cell-wise compaction pass itself (shared seam for the spec's
     * direct assertions): for every `cell=` partition of a cell-partitioned
@@ -1775,18 +1735,12 @@ object LlmData {
   def simsearchReclaim(s: SparkSession, d: String): DataFrame =
     simsearchReclaimProbe(s, d, defaultProbe)
 
-  /** Reclaimed-index scheme: derived from the appended index it purges, so
-    * an append-scheme bump invalidates the reclaimed generation with it.
-    */
-  private def ivfReclaimSchemeVersion = s"rc1-$ivfAppendSchemeVersion"
-
   /** Test seam: the reclaimed probe at a caller-chosen width. */
   private[graft] def simsearchReclaimProbe(s: SparkSession, d: String,
       probeOf: Int => Int): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val tag = ivfAppendTag(d)
-    val centroids = ivfAppendCentroids(s, d, tag)
-    val source = ivfAppendIndexWith(s, d, tag, centroids)
+    val centroids = ivfAppendCentroids(s, d)
+    val source = ivfAppendIndexWith(s, d, centroids)
     val reclaimed = ivfReclaimedIndexFrom(s, d, source, centroids)
     val (qEmb, cells) = routeWith(s, d, centroids, probeOf)
     probeCells(s, reclaimed, typedlit(qEmb), cells)
@@ -1799,9 +1753,8 @@ object LlmData {
   private[graft] def ivfReclaimedIndexPath(s: SparkSession,
       d: String): (String, Set[Long]) = {
     graft.functions.GraftFunctions.register(s)
-    val tag = ivfAppendTag(d)
-    val centroids = ivfAppendCentroids(s, d, tag)
-    val source = ivfAppendIndexWith(s, d, tag, centroids)
+    val centroids = ivfAppendCentroids(s, d)
+    val source = ivfAppendIndexWith(s, d, centroids)
     (ivfReclaimedIndexFrom(s, d, source, centroids),
       tombstoneCells(s, d, centroids)._1)
   }
@@ -1820,19 +1773,14 @@ object LlmData {
   }
 
   private def ivfReclaimedIndexFrom(s: SparkSession, d: String,
-      sourceIdx: String, centroids: Array[Array[Double]]): String = {
-    val tag = graft.Fixtures.datasetTag(d, "embeddings", ivfReclaimSchemeVersion)
-    val dir = graft.Fixtures.ensure(java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_ivf_reclaim", tag)) { staging =>
+      sourceIdx: String, centroids: Array[Array[Double]]): String =
+    graft.Fixtures.ensureDerived(
+      "graft_ivf_reclaim", d, "embeddings") { staging =>
       val (cells, ids) = tombstoneCells(s, d, centroids)
       val idList = ids.toSeq.sorted
       compactCellLayout(s, sourceIdx, staging, purgeOf = c =>
         if (cells.contains(c)) Some(!col("vec_id").isin(idList: _*)) else None)
     }.toString
-    graft.Fixtures.sweepSuperseded("graft_ivf_reclaim", d,
-      ivfReclaimSchemeVersion, tag)
-    dir
-  }
 
   /** q_simsearch_append_delete — the APPEND × TOMBSTONE composition: a
     * batch is appended under the frozen codebook ([[simsearchAppend]]'s
@@ -1881,9 +1829,8 @@ object LlmData {
     */
   def simsearchCellStats(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val tag = ivfTag(d)
-    val centroids = ivfCentroids(s, d, tag)
-    val indexPath = ivfStagedIndexWith(s, d, tag, centroids)
+    val centroids = ivfCentroids(s, d)
+    val indexPath = ivfStagedIndexWith(s, d, centroids)
     s.read.parquet(indexPath)
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("n"))
@@ -1919,7 +1866,7 @@ object LlmData {
     */
   def simsearchDrift(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val centroids = ivfAppendCentroids(s, d, ivfAppendTag(d))
+    val centroids = ivfAppendCentroids(s, d)
     val scores = ivfCellsExpr(centroids, "embedding")
     t(s, d, "embeddings")
       .select(
@@ -1964,7 +1911,7 @@ object LlmData {
     */
   def simsearchRetrain(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val centroids0 = ivfAppendCentroids(s, d, ivfAppendTag(d))
+    val centroids0 = ivfAppendCentroids(s, d)
     val retrained = retrainedCentroids(s, d)
     val sFrozen = ivfCellsExpr(centroids0, "embedding")
     val sRetr = ivfCellsExpr(retrained, "embedding")
@@ -1988,13 +1935,10 @@ object LlmData {
   }
 
   /** JVM-lifetime cache of the retrained codebook, keyed like
-    * [[ivfCodebook]] (fixture fingerprint + scheme, so a regenerated
-    * fixture retrains).
+    * [[ivfCodebook]] (so a regenerated fixture retrains).
     */
   private val retrainCodebook =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-
-  private def ivfRetrainSchemeVersion = s"rt1-$ivfAppendSchemeVersion"
 
   /** One exact Lloyd refinement of the frozen codebook over the merged
     * index: per-cell unit-normalized means from exact integer-micro
@@ -2005,12 +1949,10 @@ object LlmData {
     */
   private def retrainedCentroids(s: SparkSession,
       d: String): Array[Array[Double]] = {
-    val tagR = graft.Fixtures.datasetTag(d, "embeddings",
-      ivfRetrainSchemeVersion)
-    retrainCodebook.computeIfAbsent(tagR, _ => {
-      val tagA = ivfAppendTag(d)
-      val centroids0 = ivfAppendCentroids(s, d, tagA)
-      val indexPath = ivfAppendIndexWith(s, d, tagA, centroids0)
+    retrainCodebook.computeIfAbsent(
+      graft.Fixtures.derivedKey("graft_ivf_retrain", d, "embeddings"), _ => {
+      val centroids0 = ivfAppendCentroids(s, d)
+      val indexPath = ivfAppendIndexWith(s, d, centroids0)
       val dims = centroids0(0).length
       val sumCols = (0 until dims).map(i =>
         sum(round(col("embedding").getItem(i).cast("double") * 1000000.0, 0))
@@ -2072,15 +2014,11 @@ object LlmData {
       probeOf: Int => Int): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val c1 = retrainedCentroids(s, d)
-    val tagR = graft.Fixtures.datasetTag(d, "embeddings",
-      ivfRetrainSchemeVersion)
-    val dir = graft.Fixtures.ensure(java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_ivf_retrain", tagR)) { staging =>
+    val dir = graft.Fixtures.ensureDerived(
+      "graft_ivf_retrain", d, "embeddings") { staging =>
       frozenAssign(c1)(t(s, d, "embeddings"))
         .write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
     }.toString
-    graft.Fixtures.sweepSuperseded("graft_ivf_retrain", d,
-      ivfRetrainSchemeVersion, tagR)
     val (qEmb, cells) = routeWith(s, d, c1, probeOf)
     probeCells(s, dir, typedlit(qEmb), cells)
   }
@@ -2092,9 +2030,8 @@ object LlmData {
   private[graft] def simsearchAppendDeleteProbe(s: SparkSession, d: String,
       probeOf: Int => Int): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val tag = ivfAppendTag(d)
-    val centroids = ivfAppendCentroids(s, d, tag)
-    val indexPath = ivfAppendIndexWith(s, d, tag, centroids)
+    val centroids = ivfAppendCentroids(s, d)
+    val indexPath = ivfAppendIndexWith(s, d, centroids)
     val (qEmb, cells) = routeWith(s, d, centroids, probeOf)
     probeCells(s, indexPath, typedlit(qEmb), cells,
       tombstones = Some(t(s, d, "embeddings")
@@ -2138,9 +2075,8 @@ object LlmData {
   private def ivfRoute(s: SparkSession, d: String,
       probeOf: Int => Int): (String, Seq[Float], Seq[Long]) = {
     graft.functions.GraftFunctions.register(s) // native graft_dot
-    val tag = ivfTag(d)
-    val centroids = ivfCentroids(s, d, tag)
-    val indexPath = ivfStagedIndexWith(s, d, tag, centroids)
+    val centroids = ivfCentroids(s, d)
+    val indexPath = ivfStagedIndexWith(s, d, centroids)
     val (qEmb, cells) = routeWith(s, d, centroids, probeOf)
     (indexPath, qEmb, cells)
   }
@@ -2184,8 +2120,10 @@ object LlmData {
   }
 
   /** JVM-lifetime cache of the per-dataset IVF codebook (≤256×64 doubles),
-    * keyed by [[ivfTag]] (path + leaf-file fingerprint — NOT just the
-    * path, so a regenerated fixture gets fresh centroids): the quantizer
+    * keyed by [[graft.Fixtures.derivedKey]] (path + leaf-file fingerprint
+    * + engine digest — NOT just the path, so a regenerated fixture gets
+    * fresh centroids), the full-corpus and appended codebooks under
+    * their own index families: the quantizer
     * is a deterministic function of the fixture bytes, so repeat probes
     * skip the count + centroid-sample collect routing jobs.
     */
@@ -2200,14 +2138,14 @@ object LlmData {
     * docs/SCALING.md). The codebook is a driver-held model (≤256×64
     * floats, O(1) like the routing row fetch), exactly how IVF centroids
     * ship to query routers. Identity for BOTH the codebook cache and the
-    * persisted index is the same tag, so a regenerated fixture
-    * invalidates them TOGETHER — a stale cached codebook could otherwise
-    * be baked into a fresh fingerprint-keyed index that later JVMs would
-    * trust.
+    * persisted index is the same derived identity, so a regenerated
+    * fixture invalidates them TOGETHER — a stale cached codebook could
+    * otherwise be baked into a fresh fingerprint-keyed index that later
+    * JVMs would trust.
     */
-  private def ivfCentroids(s: SparkSession, d: String,
-      tag: String): Array[Array[Double]] =
-    ivfCodebook.computeIfAbsent(tag, _ => {
+  private def ivfCentroids(s: SparkSession, d: String): Array[Array[Double]] =
+    ivfCodebook.computeIfAbsent(
+      graft.Fixtures.derivedKey("graft_ivf", d, "embeddings"), _ => {
       val emb = t(s, d, "embeddings")
       val nVecs = emb.count()
       val targetCells = ivfCellCount(nVecs)
@@ -2248,22 +2186,20 @@ object LlmData {
     */
   private def ivfStagedIndex(s: SparkSession, d: String): String = {
     graft.functions.GraftFunctions.register(s)
-    val tag = ivfTag(d)
-    ivfStagedIndexWith(s, d, tag, ivfCentroids(s, d, tag))
+    ivfStagedIndexWith(s, d, ivfCentroids(s, d))
   }
 
-  /** [[ivfStagedIndex]] with the identity tag and coarse centroids already
-    * in hand — [[ivfRoute]] derives them for routing anyway, and the tag
-    * is a leaf-file walk that should run once per query, not per layer.
+  /** [[ivfStagedIndex]] with the coarse centroids already in hand —
+    * [[ivfRoute]] derives them for routing anyway.
     */
-  private def ivfStagedIndexWith(s: SparkSession, d: String, tag: String,
+  private def ivfStagedIndexWith(s: SparkSession, d: String,
       centroids: Array[Array[Double]]): String = {
     def argmax(scores: String) =
       s"array_position($scores, array_max($scores))"
-    ivfIndex(s, d, tag, df => {
+    ivfIndex(s, d, df => {
       val withBest = df.select(col("vec_id") +: col("embedding") +:
         col("label") +:
-        (pqBestCols(pqTrainedCentroidsTagged(s, d, tag)) :+
+        (pqBestCols(pqTrainedCentroids(s, d)) :+
           expr(s"${argmax(ivfCellsExpr(centroids, "embedding"))}").as("cell")): _*)
       // label rides the index rows so FILTERED search is scan-local: the
       // metadata predicate pushes into the pruned parquet scan instead of
@@ -2276,44 +2212,19 @@ object LlmData {
     })
   }
 
-  /** Index/codebook identity: [[graft.Fixtures.datasetTag]] over the
-    * embeddings table (leaf-file fingerprint, so a regenerated fixture or
-    * sanitization collision gets its own index instead of silently
-    * serving another dataset's vectors). The v6 scheme-version prefix
-    * keys out indexes assigned by older quantizers/schemas (v1
-    * hash-anchor; v2 fixed 16 sample cells; v3 corpus-derived cell count;
-    * v4 adds the PQ codes column to the index rows; v5 stores
-    * Lloyd-TRAINED codes, which differ row-for-row from v4's
-    * sampled-codebook codes — v6 adds the label attribute payload for
-    * scan-local filtered search).
-    */
-  /** Single source of truth for the IVF index scheme version — used by
-    * BOTH the identity tag and the superseded-sweep prefix, which must
-    * never desynchronize (an unmatched sweep prefix is a silent no-op
-    * that would quietly resurrect the stale-artifact leak).
-    */
-  private val ivfSchemeVersion = "v6"
-
-  private def ivfTag(d: String): String =
-    graft.Fixtures.datasetTag(d, "embeddings", ivfSchemeVersion)
-
-  /** Build-or-reuse the persisted cell-partitioned IVF index under the
-    * given identity tag. Publication goes through [[graft.Fixtures.ensure]]
-    * — staged build, completeness marker, atomic rename, staging cleaned
-    * up on failure — so a concurrent Verify/Bench/test run either sees the
+  /** Build-or-reuse the persisted cell-partitioned IVF index of the
+    * embeddings table. Publication goes through
+    * [[graft.Fixtures.ensureDerived]] — staged build, completeness marker,
+    * atomic rename, staging cleaned up on failure, superseded builds swept
+    * at JVM exit — so a concurrent Verify/Bench/test run either sees the
     * complete index or builds its own copy, never a half-written overwrite.
     */
-  private def ivfIndex(s: SparkSession, d: String, tag: String,
-      assign: DataFrame => DataFrame): String = {
-    val dir = graft.Fixtures.ensure(java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_ivf", tag)) { staging =>
+  private def ivfIndex(s: SparkSession, d: String,
+      assign: DataFrame => DataFrame): String =
+    graft.Fixtures.ensureDerived("graft_ivf", d, "embeddings") { staging =>
       assign(t(s, d, "embeddings"))
         .write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
     }.toString
-    // superseded fingerprints of this index scheme die at JVM exit
-    graft.Fixtures.sweepSuperseded("graft_ivf", d, ivfSchemeVersion, tag)
-    dir
-  }
 
   /** Probe: scan only the given cells of the partitioned index (static
     * partition pruning), exact cosine inside, bounded top-k. An optional
@@ -2403,11 +2314,8 @@ object LlmData {
     * oracle-checked even though it is now trained, not sampled.
     */
   private[graft] def pqTrainedCentroids(s: SparkSession, d: String): Array[Array[Array[Float]]] =
-    pqTrainedCentroidsTagged(s, d, ivfTag(d))
-
-  private def pqTrainedCentroidsTagged(s: SparkSession, d: String,
-      tag: String): Array[Array[Array[Float]]] =
-    pqCodebook.computeIfAbsent(tag, _ => {
+    pqCodebook.computeIfAbsent(
+      graft.Fixtures.derivedKey("graft_pq", d, "embeddings"), _ => {
       val init = pqSampledCentroids(s, d)
       val train = evenSample(s, d, pqTrainN)
       val sub = init(0)(0).length
@@ -2643,7 +2551,8 @@ object LlmData {
   private def opqModel(s: SparkSession, d: String)
       : (Array[Array[Array[Float]]], Array[Array[Array[Float]]],
         Seq[(Int, Int, Double, Double)], Long, Long) =
-    opqCache.computeIfAbsent(graft.Fixtures.datasetTag(d, "embeddings", "opq1"), _ => {
+    opqCache.computeIfAbsent(
+      graft.Fixtures.derivedKey("graft_opq", d, "embeddings"), _ => {
       graft.functions.GraftFunctions.register(s)
       val cb = pqCentroids(s, d)
       val sub = cb(0)(0).length
@@ -3112,9 +3021,8 @@ object LlmData {
       probeOf: Int => Int): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     import s.implicits._
-    val tag = ivfTag(d)
-    val centroids = ivfCentroids(s, d, tag)
-    val indexPath = ivfStagedIndexWith(s, d, tag, centroids)
+    val centroids = ivfCentroids(s, d)
+    val indexPath = ivfStagedIndexWith(s, d, centroids)
     val nCells = centroids.length
     val probeN = math.min(math.max(probeOf(nCells), 1), nCells)
     // the batch's routing decision: per query the same ranked top-probeN
@@ -3279,8 +3187,7 @@ object LlmData {
     memo(s, s"frames_$d") { framesDecodedBuild(s) }
 
   private def framesDecodedBuild(s: SparkSession): DataFrame = {
-    val media = graft.Fixtures.ensure(
-      java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_media"))(
+    val media = graft.Fixtures.ensureDerived("graft_media")(
       graft.functions.BinaryBatch.writeMediaFixtures(_))
     val framed = s.read.format("binaryFile")
       .option("pathGlobFilter", "*.png").load(media.toString)
@@ -3369,8 +3276,7 @@ object LlmData {
     * batch-decode seam.
     */
   def multimodalAudio(s: SparkSession): DataFrame = {
-    val dir = graft.Fixtures.ensure(
-      java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_audio"))(
+    val dir = graft.Fixtures.ensureDerived("graft_audio")(
       graft.functions.BinaryBatch.writeAudioFixtures(_))
     val scanned = s.read.format("binaryFile")
       .option("pathGlobFilter", "*.wav").load(dir.toString)
@@ -3406,8 +3312,7 @@ object LlmData {
     * plan is unchanged.
     */
   def multimodalAudioSegments(s: SparkSession): DataFrame = {
-    val dir = graft.Fixtures.ensure(
-      java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_audioseg_a1"))(
+    val dir = graft.Fixtures.ensureDerived("graft_audioseg")(
       graft.functions.BinaryBatch.writeAudioSegFixtures(_))
     val scanned = s.read.format("binaryFile")
       .option("pathGlobFilter", "*.wav").load(dir.toString)
@@ -3491,9 +3396,8 @@ object LlmData {
     * and [[multimodalKeyframe]]. */
   /** The staged PNG-frame fixture dir (shared by the batch and streaming
     * transports). */
-  private def videoFixtureDir(): java.nio.file.Path =
-    graft.Fixtures.ensure(
-      java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_video_v2"))(
+  private[graft] def videoFixtureDir(): java.nio.file.Path =
+    graft.Fixtures.ensureDerived("graft_video")(
       graft.functions.BinaryBatch.writeVideoFixtures(_))
 
   private val videoFramePat = "vid_(\\d+)_f_(\\d+)\\.png$"
@@ -3552,8 +3456,7 @@ object LlmData {
     * lakehouse-commit recipe pointed at the decode stage.
     */
   private def streamVideoFeaturePath(s: SparkSession): java.nio.file.Path =
-    graft.Fixtures.ensure(java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_video_stream_feat_v1")) { staging =>
+    graft.Fixtures.ensureDerived("graft_video_stream_feat") { staging =>
       val dir = videoFixtureDir()
       val work = graft.Fixtures.tempDirCleanedAtExit("graft_video_stream_work_")
       val sinkOut = work.resolve("data")
@@ -3709,17 +3612,11 @@ object LlmData {
     * four times, and Catalyst does not CSE subplans — without staging,
     * each reference would re-run the full binaryFile scan + ImageIO decode.
     * Staged like `graft_simhash_sigs`: the signature table IS the
-    * maintained artifact at 100 TB, decode happens once per corpus.
-    * The `_p1` suffix is the scheme-version tag (ensureDerived's
-    * convention): bump it with any change to phashPixel /
-    * writePhashFixtures / dhash, or a prior JVM run's tmpdir would
-    * silently serve stale signatures. */
+    * maintained artifact at 100 TB, decode happens once per corpus. */
   private def phashSigsPath(s: SparkSession): String = {
-    val media = graft.Fixtures.ensure(
-      java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_phash_media_p1"))(
+    val media = graft.Fixtures.ensureDerived("graft_phash_media")(
       graft.functions.BinaryBatch.writePhashFixtures(_))
-    graft.Fixtures.ensure(
-      java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_phash_sigs_p1")) {
+    graft.Fixtures.ensureDerived("graft_phash_sigs") {
       staging =>
         val scanned = s.read.format("binaryFile")
           .option("pathGlobFilter", "*.png").load(media.toString)
@@ -3807,15 +3704,11 @@ object LlmData {
       "SELECT img_a, img_b, hamming FROM ipairs ORDER BY img_a, img_b"
 
   /** Fingerprint-once home for the audio signatures (4 bytes/clip),
-    * staged like the pHash signatures and version-tagged the same way
-    * (`_f2` — bump with any change to the fixture scheme or
-    * [[graft.functions.BinaryBatch.audioFpBatch]]). */
+    * staged like the pHash signatures. */
   private def audioFpSigsPath(s: SparkSession): String = {
-    val media = graft.Fixtures.ensure(
-      java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_audio_fp_f2"))(
+    val media = graft.Fixtures.ensureDerived("graft_audio_fp")(
       graft.functions.BinaryBatch.writeAudioFpFixtures(_))
-    graft.Fixtures.ensure(
-      java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_audio_fp_sigs_f2")) {
+    graft.Fixtures.ensureDerived("graft_audio_fp_sigs") {
       staging =>
         val scanned = s.read.format("binaryFile")
           .option("pathGlobFilter", "*.wav").load(media.toString)
@@ -5452,7 +5345,7 @@ object LlmData {
   }
 
   private[graft] def nswAdjPath(s: SparkSession, d: String): String =
-    graft.Fixtures.ensureDerived("graft_nsw", d, "embeddings", "n7") { staging =>
+    graft.Fixtures.ensureDerived("graft_nsw", d, "embeddings") { staging =>
       graft.functions.GraftFunctions.register(s)
       knnAdjBuild(t(s, d, "embeddings").where(col("vec_id") =!= 0),
         nswDegree, staging)
@@ -5702,7 +5595,7 @@ object LlmData {
     * [[hnswL1Degree]]. Same one-time fixture-scale build doctrine as
     * [[nswAdjPath]]. */
   private[graft] def hnswL1AdjPath(s: SparkSession, d: String): String =
-    graft.Fixtures.ensureDerived("graft_nsw_l1", d, "embeddings", "h4") { staging =>
+    graft.Fixtures.ensureDerived("graft_nsw_l1", d, "embeddings") { staging =>
       graft.functions.GraftFunctions.register(s)
       knnAdjBuild(t(s, d, "embeddings")
           .where(col("vec_id") =!= 0 && col("vec_id") % hnswL1Mod === 1),
@@ -6134,7 +6027,7 @@ object LlmData {
     * restricted to the standing subset — the index that existed before
     * today's batch arrived, never touched by the insert. */
   private[graft] def nswStandingAdjPath(s: SparkSession, d: String): String =
-    graft.Fixtures.ensureDerived("graft_nsw_std", d, "embeddings", "s3") { staging =>
+    graft.Fixtures.ensureDerived("graft_nsw_std", d, "embeddings") { staging =>
       graft.functions.GraftFunctions.register(s)
       knnAdjBuild(t(s, d, "embeddings")
           .where(col("vec_id") =!= 0 && !expr(nswInsertBatchCond)),
@@ -6216,7 +6109,7 @@ object LlmData {
     * IVF index (new files beside immutable standing files; compaction
     * composes later). */
   private[graft] def nswInsertDeltaPath(s: SparkSession, d: String): String =
-    graft.Fixtures.ensureDerived("graft_nsw_delta", d, "embeddings", "m1") { staging =>
+    graft.Fixtures.ensureDerived("graft_nsw_delta", d, "embeddings") { staging =>
       val newe = nswInsertEdges(s, d)
       newe.select(col("src"), col("dst"), col("demb"))
         .unionByName(newe.select(col("dst").as("src"), col("src").as("dst"),
@@ -6309,7 +6202,7 @@ object LlmData {
     * insert appends ([[simsearchNswInsert]]), delete marks
     * ([[simsearchNswDelete]]), compact absorbs. */
   private[graft] def nswCompactAdjPath(s: SparkSession, d: String): String =
-    graft.Fixtures.ensureDerived("graft_nsw_cmp", d, "embeddings", "k3") { staging =>
+    graft.Fixtures.ensureDerived("graft_nsw_cmp", d, "embeddings") { staging =>
       graft.functions.GraftFunctions.register(s)
       def dead(c: String) = expr(nswDeleteCond.replace("vec_id", c))
       val adj = s.read.parquet(nswAdjPath(s, d))
@@ -6838,7 +6731,7 @@ object LlmData {
     * means serving paths never re-pay training.
     */
   private def bpePath(s: SparkSession, d: String): java.nio.file.Path =
-    graft.Fixtures.ensureDerived("graft_bpe", d, "documents", "b1") { staging =>
+    graft.Fixtures.ensureDerived("graft_bpe", d, "documents") { staging =>
       var vocab = t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("tok"))
         .where(length(col("tok")) > 0)
@@ -7665,14 +7558,9 @@ object LlmData {
       .orderBy("curl")
   }
 
-  /** Adversarial-URL staged fixture scheme: u1 — (doc_id, url), 120
-    * canonical pages dressed with doc_id-dependent variance. Bump when
-    * the generation changes.
-    */
-  private val urlSchemeVersion = "u1"
-
-  /** The staged (doc_id, url) fixture table [[dedupUrl]] reads: built
-    * once per documents fixture (fingerprint-keyed, atomic publish),
+  /** The staged adversarial (doc_id, url) fixture table [[dedupUrl]]
+    * reads — 120 canonical pages dressed with doc_id-dependent variance,
+    * built once per documents fixture (fingerprint-keyed, atomic publish),
     * deterministic from doc_id so the DuckDB oracle regenerates the
     * identical column in SQL. Decor moduli (17/19/23/29/31/37/41) are
     * COPRIME to the 120-page cycle (unlike 2/3/5), so every dressed
@@ -7681,8 +7569,7 @@ object LlmData {
     * group (asserted in LlmDataSpec).
     */
   private[graft] def urlFixturePath(s: SparkSession, d: String): String =
-    graft.Fixtures.ensureDerived("graft_urls", d, "documents",
-      urlSchemeVersion) { staging =>
+    graft.Fixtures.ensureDerived("graft_urls", d, "documents") { staging =>
       t(s, d, "documents").select(col("doc_id"),
         concat(
           when(col("doc_id") % 2 === 0, lit("HTTPS://")).otherwise(lit("https://")),
@@ -7712,17 +7599,12 @@ object LlmData {
         .write.mode("overwrite").parquet(staging.toString)
     }.toString
 
-  /** Staged-HTML fixture scheme: h1 — (doc_id, html), every document
-    * dressed as a full web page (title, nav, optional aside, main carrying
-    * the document text with doc_id-dependent inline markup, footer). Bump
-    * when the generation changes.
-    */
-  private val htmlSchemeVersion = "h1"
-
   /** The staged (doc_id, html) fixture table [[textHtmlExtract]] reads —
-    * the landed state of a web crawl, built once per documents fixture
-    * (fingerprint-keyed, atomic publish) and deterministic from
-    * (doc_id, source, text) so the DuckDB oracle regenerates the identical
+    * every document dressed as a full web page (title, nav, optional
+    * aside, main carrying the document text with doc_id-dependent inline
+    * markup, footer): the landed state of a web crawl, built once per
+    * documents fixture (fingerprint-keyed, atomic publish) and
+    * deterministic from (doc_id, source, text) so the DuckDB oracle regenerates the identical
     * column in SQL ([[dedupUrl]]'s staging doctrine). The dressing is
     * adversarial enough to make extraction non-vacuous: boilerplate nav /
     * footer / aside blocks dense with links, inline `<a>`/`<b>` markup
@@ -7731,8 +7613,7 @@ object LlmData {
     * carry (so the segment inventory is data-dependent).
     */
   private[graft] def htmlFixturePath(s: SparkSession, d: String): String =
-    graft.Fixtures.ensureDerived("graft_html", d, "documents",
-      htmlSchemeVersion) { staging =>
+    graft.Fixtures.ensureDerived("graft_html", d, "documents") { staging =>
       t(s, d, "documents").select(col("doc_id"),
         concat(
           lit("<html><head><title>Doc "), col("doc_id").cast("string"),
@@ -9388,7 +9269,7 @@ object LlmData {
     * invocation — the production posture [[textClassify]]'s doc
     * prescribes. */
   private[graft] def classifyWeightsPath(s: SparkSession, d: String): String =
-    graft.Fixtures.ensureDerived("graft_clsw", d, "documents", "w1") {
+    graft.Fixtures.ensureDerived("graft_clsw", d, "documents") {
       staging =>
         classifyWeightsFrom(s, d, classifyX(s, d))
           .coalesce(1).write.parquet(staging.toString)

@@ -1545,7 +1545,7 @@ object Relational {
     * `input_file_name()` would dangle; the probe resolves basenames
     * against the published `table/`. */
   private[graft] def bloomIdxRoot(s: SparkSession, d: String): String =
-    graft.Fixtures.ensureDerived("graft_bloomidx", d, "orders", "i1") {
+    graft.Fixtures.ensureDerived("graft_bloomidx", d, "orders") {
       staging =>
         t(s, d, "orders")
           .repartitionByRange(16, col("o_orderdate"))

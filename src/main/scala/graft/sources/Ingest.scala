@@ -259,4 +259,10 @@ object Zip {
     }
     Files.write(landingDir.resolve("README.txt"), "not a zip".getBytes("UTF-8"))
   }
+
+  /** The staged landing fixtures ([[writeLandingFixtures]]), shared by the
+    * ingest and transfer keys, `PipelineMain` and its spec.
+    */
+  def landingFixtures(): Path =
+    graft.Fixtures.ensureDerived("graft_landing")(writeLandingFixtures(_))
 }

@@ -1,8 +1,8 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Paths
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,9 +36,7 @@ object PipelineIngest {
 
   /** q_pipeline_ingest — the §2A flow end-to-end. */
   def pipelineIngest(s: SparkSession): DataFrame = {
-    val landing = graft.Fixtures.ensure(
-      Paths.get(sys.props("java.io.tmpdir"), "graft_landing"))(
-      Zip.writeLandingFixtures(_))
+    val landing = Zip.landingFixtures()
     // sense_file: bounded availability poll (SFTPSensor semantics)
     require(LandingSensor.await(landing.resolve("balance_00.zip"), timeoutMs = 5000),
       "landing file did not appear within the sensor timeout")
@@ -337,6 +335,42 @@ object PipelineIngest {
       .orderBy("day")
   }
 
+  // ------------------------------------------------- manifest-style tables
+
+  /** The `part-` data files directly under `dir`, in path order. */
+  private def partFiles(fs: FileSystem, dir: String): Seq[FileStatus] =
+    fs.listStatus(new Path(dir))
+      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
+      .sortBy(_.getPath.toString).toSeq
+
+  private def partPaths(fs: FileSystem, dir: String): Seq[String] =
+    partFiles(fs, dir).map(_.getPath.toString)
+
+  /** Move the `part-` files of a staged write into `dir` as
+    * `$tag-$i-<name>`, then drop the staging dir.
+    */
+  private def adoptParts(fs: FileSystem, staged: String, dir: String,
+      tag: String): Unit = {
+    partFiles(fs, staged).zipWithIndex.foreach { case (st, i) =>
+      fs.rename(st.getPath, new Path(dir, s"$tag-$i-${st.getPath.getName}"))
+    }
+    fs.delete(new Path(staged), true)
+  }
+
+  /** Commit a manifest: one parquet column `path` naming the live files. */
+  private def writeManifest(s: SparkSession, files: Seq[String],
+      dir: String): Unit = {
+    import s.implicits._
+    files.toDF("path").coalesce(1).write.mode("overwrite").parquet(dir)
+  }
+
+  private def manifestFiles(s: SparkSession, dir: String): Seq[String] =
+    s.read.parquet(dir).select("path").collect().map(_.getString(0)).toSeq
+
+  /** Read a table through a manifest: the scan is planned from its list. */
+  private def readManifest(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(manifestFiles(s, dir): _*)
+
   /** q_maintain_compact — small-file COMPACTION, the lake-maintenance
     * operator every long-lived 100 TB table needs: streaming sinks and
     * per-partition upserts accrete thousands of KB-scale files, and scan
@@ -356,31 +390,25 @@ object PipelineIngest {
     * test seam for the file-count assertions).
     */
   private[graft] def compactFragPath(d: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_frag",
-      graft.Fixtures.datasetTag(d, "lineitem", "frag64_v1")).toString
+    graft.Fixtures.derivedDir("graft_frag", d, "lineitem").toString
 
   def maintainCompact(s: SparkSession, d: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val root = s"${sys.props("java.io.tmpdir")}/graft_out/q_maintain_compact"
     // the fragmented table is the operator's INPUT — a long-lived lake
     // table that accreted small files — so it is staged once per fixture
     // (fingerprint-keyed, like the IVF index) instead of re-shuffling the
     // fact table into 64 shards on every invocation; the measured work is
-    // the compaction itself
-    // ensureDerived (not bare ensure): each fixture regeneration mints a
-    // new fragment tag, and the superseded one is a full fact-table copy —
-    // stale tags are registered for exit-time sweep instead of accreting
+    // the compaction itself. A superseded generation is a full fact-table
+    // copy, so ensureDerived's exit-time sweep keeps them from accreting
     val frag = graft.Fixtures.ensureDerived(
-      "graft_frag", d, "lineitem", "frag64_v1") { staging =>
+      "graft_frag", d, "lineitem") { staging =>
       graft.Tables(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_extendedprice"), col("l_returnflag"))
         .repartition(64).write.mode("overwrite").parquet(staging.toString)
     }.toString
     val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(new Path(frag))
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-    val totalBytes = parts.map(_.getLen).sum
+    val totalBytes = partFiles(fs, frag).map(_.getLen).sum
     // local target is tiny so the test exercises >1 output file; the 100 TB
     // setting is 128 MB (spark.sql.files.maxPartitionBytes-aligned)
     val targetBytes = 256L * 1024
@@ -432,28 +460,20 @@ object PipelineIngest {
     * version-dir swap.
     */
   def maintainClone(s: SparkSession, d: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val root = s"${sys.props("java.io.tmpdir")}/graft_out/q_maintain_clone"
     val src = s"$root/source"
     val orders = graft.Tables(s, d, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     orders.repartition(8).write.mode("overwrite").parquet(src)
     val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(new Path(src))
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .map(st => (st.getPath.toString, st.getLen))
     val clone = s"$root/clone_v1"
     fs.delete(new Path(clone), true)
-    import s.implicits._
-    files.toSeq.toDF("path", "bytes").coalesce(1)
-      .write.mode("overwrite").parquet(s"$clone/manifest")
+    writeManifest(s, partPaths(fs, src), s"$clone/manifest")
     // the source moves on: an append lands AFTER the clone was taken
     orders.where(col("o_orderkey") % 10 === 0)
       .repartition(2).write.mode("append").parquet(src)
     // read THROUGH the clone: the scan is planned from the pinned file list
-    val pinned = s.read.parquet(s"$clone/manifest")
-      .select("path").collect().map(_.getString(0))
-    s.read.parquet(pinned: _*)
+    readManifest(s, s"$clone/manifest")
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n"), sumExact(col("o_totalprice"), 2).as("sum_price"))
       .orderBy("o_orderstatus")
@@ -478,7 +498,6 @@ object PipelineIngest {
     * exactly what the oracle checks.
     */
   def maintainDelete(s: SparkSession, d: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val root = s"${sys.props("java.io.tmpdir")}/graft_out/q_maintain_delete"
     val land = s"$root/table"
     val target = 7L
@@ -498,12 +517,7 @@ object PipelineIngest {
         .repartition(affected.length)
         .write.mode("overwrite").parquet(staged)
       affected.foreach(f => fs.delete(new Path(new java.net.URI(f)), false))
-      fs.listStatus(new Path(staged))
-        .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-        .zipWithIndex.foreach { case (st, i) =>
-          fs.rename(st.getPath, new Path(land, s"rw-$i-${st.getPath.getName}"))
-        }
-      fs.delete(new Path(staged), true)
+      adoptParts(fs, staged, land, "rw")
     }
     s.read.parquet(land)
       .groupBy("event_type")
@@ -585,7 +599,6 @@ object PipelineIngest {
     * mechanism shown.
     */
   def maintainVacuum(s: SparkSession, d: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val root = s"${sys.props("java.io.tmpdir")}/graft_out/q_maintain_vacuum"
     val tableDir = s"$root/table"
     val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -594,7 +607,7 @@ object PipelineIngest {
       .select(col("p_partkey"), col("p_brand"), col("p_retailprice"))
     // v1 landing: 8 files, all referenced by manifest v1 (implicit)
     src.repartition(8).write.mode("overwrite").parquet(tableDir)
-    def dataFiles(): Array[org.apache.hadoop.fs.FileStatus] =
+    def dataFiles(): Array[FileStatus] =
       fs.listStatus(new Path(tableDir))
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))
@@ -605,28 +618,19 @@ object PipelineIngest {
     // having to GC; manifest-tracked tables GC with vacuum instead)
     val staged = s"$root/staged"
     s.read.parquet(tableDir).coalesce(2).write.mode("overwrite").parquet(staged)
-    fs.listStatus(new Path(staged))
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .zipWithIndex.foreach { case (st, i) =>
-        fs.rename(st.getPath, new Path(tableDir, s"gen2-$i-${st.getPath.getName}"))
-      }
-    fs.delete(new Path(staged), true)
-    import s.implicits._
-    val live = dataFiles().filter(_.getPath.getName.startsWith("gen2-"))
-      .map(st => (new Path(tableDir, st.getPath.getName).toString, st.getLen)).toSeq
-    live.toDF("path", "bytes").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/manifest")
+    adoptParts(fs, staged, tableDir, "gen2")
+    writeManifest(s, dataFiles().map(_.getPath)
+      .filter(_.getName.startsWith("gen2-")).map(_.toString).toSeq,
+      s"$root/manifest")
     // VACUUM: directory listing minus manifest set; control-plane only
-    val manifested = s.read.parquet(s"$root/manifest")
-      .select("path").collect().map(r => new Path(r.getString(0)).getName).toSet
+    val manifested = manifestFiles(s, s"$root/manifest")
+      .map(new Path(_).getName).toSet
     val orphans = dataFiles().filterNot(st => manifested(st.getPath.getName))
     require(orphans.map(_.getPath.getName).toSet == v1Files,
       "vacuum must identify exactly the pre-compaction generation as orphans")
     orphans.foreach(st => fs.delete(st.getPath, false))
     // readers see identical content through the manifest (the oracle check)
-    val pinned = s.read.parquet(s"$root/manifest")
-      .select("path").collect().map(_.getString(0))
-    s.read.parquet(pinned: _*)
+    readManifest(s, s"$root/manifest")
       .groupBy("p_brand")
       .agg(count(lit(1)).as("n"), sumExact(col("p_retailprice"), 2).as("sum_price"))
       .orderBy("p_brand")
@@ -650,8 +654,17 @@ object PipelineIngest {
     * references.
     */
   def scanTimeTravel(s: SparkSession, d: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val root = s"${sys.props("java.io.tmpdir")}/graft_out/q_scan_time_travel"
+    versionedOrders(s, d, root)
+    ordersAt(s, root, 1).unionByName(ordersAt(s, root, 2))
+      .orderBy("version", "o_orderstatus")
+  }
+
+  /** The manifest-versioned orders table of [[scanTimeTravel]] and
+    * [[maintainRestore]] under `root`: v1 lands 90% of orders, then the
+    * append commit adds new files only, so v2 = v1 ∪ appended.
+    */
+  private def versionedOrders(s: SparkSession, d: String, root: String): Unit = {
     val tableDir = s"$root/table"
     val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new Path(root), true)
@@ -659,29 +672,18 @@ object PipelineIngest {
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     orders.where(col("o_orderkey") % 10 =!= 0)
       .repartition(8).write.mode("overwrite").parquet(tableDir)
-    def listData(): Seq[String] = fs.listStatus(new Path(tableDir))
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .map(_.getPath.toString).toSeq.sorted
-    import s.implicits._
-    val v1 = listData()
-    v1.toDF("path").coalesce(1).write.mode("overwrite").parquet(s"$root/v1")
-    // the append commit: new files only; v2 = v1 ∪ appended
+    writeManifest(s, partPaths(fs, tableDir), s"$root/v1")
     orders.where(col("o_orderkey") % 10 === 0)
       .repartition(2).write.mode("append").parquet(tableDir)
-    listData().toDF("path").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/v2")
-    def readAt(v: String): DataFrame = {
-      val files = s.read.parquet(s"$root/$v").select("path")
-        .collect().map(_.getString(0))
-      s.read.parquet(files: _*)
-    }
-    def agg(df: DataFrame, version: Int): DataFrame = df
+    writeManifest(s, partPaths(fs, tableDir), s"$root/v2")
+  }
+
+  /** Per-status aggregate of the orders table as of manifest `v$version`. */
+  private def ordersAt(s: SparkSession, root: String, version: Int): DataFrame =
+    readManifest(s, s"$root/v$version")
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n"), sumExact(col("o_totalprice"), 2).as("sum_price"))
       .select(lit(version).as("version"), col("o_orderstatus"), col("n"), col("sum_price"))
-    agg(readAt("v1"), 1).unionByName(agg(readAt("v2"), 2))
-      .orderBy("version", "o_orderstatus")
-  }
 
   /** q_maintain_restore — VERSION RESTORE WITHOUT REWRITE: the lake-table
     * undo button. A base commit (v1) and an append commit (v2) build the
@@ -697,39 +699,11 @@ object PipelineIngest {
     * the property that makes rollback viable on a 100 TB table.
     */
   def maintainRestore(s: SparkSession, d: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val root = s"${sys.props("java.io.tmpdir")}/graft_out/q_maintain_restore"
-    val tableDir = s"$root/table"
-    val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(root), true)
-    val orders = graft.Tables(s, d, "orders")
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    orders.where(col("o_orderkey") % 10 =!= 0)
-      .repartition(8).write.mode("overwrite").parquet(tableDir)
-    def listData(): Seq[String] = fs.listStatus(new Path(tableDir))
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .map(_.getPath.toString).toSeq.sorted
-    import s.implicits._
-    val v1 = listData()
-    v1.toDF("path").coalesce(1).write.mode("overwrite").parquet(s"$root/v1")
-    orders.where(col("o_orderkey") % 10 === 0)
-      .repartition(2).write.mode("append").parquet(tableDir)
-    listData().toDF("path").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/v2")
+    versionedOrders(s, d, root)
     // RESTORE: v3 manifest := v1 manifest (pure metadata commit)
-    s.read.parquet(s"$root/v1").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/v3")
-    def readAt(v: String): DataFrame = {
-      val files = s.read.parquet(s"$root/$v").select("path")
-        .collect().map(_.getString(0))
-      s.read.parquet(files: _*)
-    }
-    def agg(df: DataFrame, version: Int): DataFrame = df
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"), sumExact(col("o_totalprice"), 2).as("sum_price"))
-      .select(lit(version).as("version"), col("o_orderstatus"), col("n"),
-        col("sum_price"))
-    agg(readAt("v2"), 2).unionByName(agg(readAt("v3"), 3))
+    writeManifest(s, manifestFiles(s, s"$root/v1"), s"$root/v3")
+    ordersAt(s, root, 2).unionByName(ordersAt(s, root, 3))
       .orderBy("version", "o_orderstatus")
   }
 
@@ -780,7 +754,6 @@ object PipelineIngest {
     * input files exclude every base file.
     */
   def maintainMvRefresh(s: SparkSession, d: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val root = s"${sys.props("java.io.tmpdir")}/graft_out/q_maintain_mv_refresh"
     val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new Path(root), true)
@@ -846,11 +819,8 @@ object PipelineIngest {
   private[graft] def mergeApply(s: SparkSession, root: String,
       source: DataFrame, vIn: String, vOut: String)
       : (Seq[String], Seq[String], Seq[String]) = {
-    import org.apache.hadoop.fs.Path
-    import s.implicits._
     val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val current = s.read.parquet(s"$root/$vIn").select("path")
-      .collect().map(_.getString(0)).toSeq
+    val current = manifestFiles(s, s"$root/$vIn")
     val srcCols = source.select(col("o_orderkey").as("k"), col("op"),
       col("o_orderstatus").as("s_status"), col("o_totalprice").as("s_price"))
     // LOCATE: the files holding any source key — a key-column-only scan
@@ -863,10 +833,6 @@ object PipelineIngest {
       .select("f").distinct().collect()
       .map(r => new Path(r.getString(0)).toString).toSeq
     val untouched = current.filterNot(affected.toSet)
-    def listData(dir: String): Seq[String] =
-      fs.listStatus(new Path(dir))
-        .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-        .map(_.getPath.toString).toSeq.sorted
     // REWRITE the affected files only: matched D rows drop, matched U/I
     // rows take the source row's absolute values, everything else carries
     val rwDir = s"$root/files_$vOut/rewritten"
@@ -879,7 +845,7 @@ object PipelineIngest {
           coalesce(col("s_price"), col("o_totalprice")).as("o_totalprice"))
         .repartition(math.max(1, affected.length))
         .write.mode("overwrite").parquet(rwDir)
-      listData(rwDir)
+      partPaths(fs, rwDir)
     }
     // INSERT the not-matched U/I rows as new files (anti-join against the
     // live key set — the standard distributed-merge shape; D rows that
@@ -891,11 +857,10 @@ object PipelineIngest {
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       .repartition(2)
       .write.mode("overwrite").parquet(insDir)
-    val inserted = listData(insDir)
+    val inserted = partPaths(fs, insDir)
     // COMMIT: one manifest write — the atomicity boundary (readers plan
     // from a manifest version, so they see all of the merge or none)
-    (untouched ++ rewritten ++ inserted).toDF("path").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/$vOut")
+    writeManifest(s, untouched ++ rewritten ++ inserted, s"$root/$vOut")
     (untouched, rewritten, inserted)
   }
 
@@ -919,8 +884,6 @@ object PipelineIngest {
     * upstream. The oracle replays the merge as a FULL OUTER JOIN + CASE.
     */
   def maintainMerge(s: SparkSession, d: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    import s.implicits._
     val root = s"${sys.props("java.io.tmpdir")}/graft_out/q_maintain_merge"
     val tableDir = s"$root/table"
     val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -930,15 +893,10 @@ object PipelineIngest {
     orders.where(col("o_orderkey") % 10 =!= 0)
       .repartitionByRange(16, col("o_orderkey"))
       .write.mode("overwrite").parquet(tableDir)
-    fs.listStatus(new Path(tableDir))
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .map(_.getPath.toString).toSeq.sorted
-      .toDF("path").coalesce(1).write.mode("overwrite").parquet(s"$root/v1")
+    writeManifest(s, partPaths(fs, tableDir), s"$root/v1")
     val source = mergeSource(s, d, mergeCutoff(s, d))
     mergeApply(s, root, source, "v1", "v2")
-    val files = s.read.parquet(s"$root/v2").select("path")
-      .collect().map(_.getString(0))
-    s.read.parquet(files: _*)
+    readManifest(s, s"$root/v2")
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n"), sumExact(col("o_totalprice"), 2).as("sum_price"))
       .orderBy("o_orderstatus")

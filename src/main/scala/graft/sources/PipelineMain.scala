@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -185,9 +185,7 @@ object PipelineMain extends Logging {
 
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.build("graft-pipeline", graft.GraftSession.cores)
-    val landing = graft.Fixtures.ensure(
-      Paths.get(sys.props("java.io.tmpdir"), "graft_landing"))(
-      Zip.writeLandingFixtures(_))
+    val landing = Zip.landingFixtures()
     val workDir = graft.Fixtures.tempDirCleanedAtExit("graft_pipeline_main_")
     // next fire of the reference's daily cron, logged the way a scheduler
     // banner would (catchup=False → single next run)

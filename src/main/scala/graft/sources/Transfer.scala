@@ -86,9 +86,7 @@ object Transfer {
     * ingest's list_filter_suffix) and prove byte-for-byte integrity.
     */
   def transferFile(s: SparkSession): DataFrame = {
-    val landing = graft.Fixtures.ensure(
-      Paths.get(sys.props("java.io.tmpdir"), "graft_landing"))(
-      Zip.writeLandingFixtures(_))
+    val landing = Zip.landingFixtures()
     val dst = s"${sys.props("java.io.tmpdir")}/graft_out/q_transfer_file"
     transferDir(s, landing.toString, dst)
   }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FixturesSpec extends AnyFunSuite {
 
-  private def tmp(): Path = Files.createTempDirectory("graft_fixspec_")
+  private def tmp(): Path = Fixtures.tempDirCleanedAtExit("graft_fixspec_")
 
   test("ensure builds once, marks completion, and is idempotent") {
     val dir = tmp().resolve("fx")
@@ -126,40 +126,121 @@ class FixturesSpec extends AnyFunSuite {
         "the loader must normalize every physical encoding to TimestampType")
   }
 
+  /** A dataset dir holding one single-file table `t.parquet`. */
+  private def dataset(base: Path, name: String): String = {
+    val d = Files.createDirectories(base.resolve(name))
+    Files.write(d.resolve("t.parquet"), name.getBytes)
+    d.toString
+  }
+
+  private def touch(p: Path): Unit = {
+    Files.createDirectories(p)
+    Files.write(p.resolve("x"), Array[Byte](1))
+  }
+
+  /** A fresh family under tmpdir, deleted (and unregistered) afterwards. */
+  private def withFamily(body: String => Unit): Unit = {
+    val family = s"graft_test_fam_${java.util.UUID.randomUUID()}"
+    val parent = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), family)
+    try body(family)
+    finally if (Files.exists(parent)) {
+      val st = Files.list(parent)
+      try st.forEach(p => Fixtures.removeFromExitCleanup(p)) finally st.close()
+      org.apache.commons.io.FileUtils.deleteDirectory(parent.toFile)
+    }
+  }
+
+  test("code digest of a classes dir: stable, and changed by one byte of one class file") {
+    val dir = tmp()
+    Files.createDirectories(dir.resolve("graft/ops"))
+    Files.write(dir.resolve("graft/A.class"), Array[Byte](1, 2, 3))
+    Files.write(dir.resolve("graft/ops/B.class"), Array[Byte](4, 5, 6))
+    val d0 = Fixtures.codeDigest(dir)
+    assert(d0.matches("[0-9a-f]{16}"))
+    assert(Fixtures.codeDigest(dir) === d0, "digest must be stable when nothing changes")
+    Files.write(dir.resolve("graft/ops/B.class"), Array[Byte](4, 5, 7))
+    assert(Fixtures.codeDigest(dir) !== d0, "one changed byte must change the digest")
+  }
+
+  test("code digest of a jar: stable, and changed by one byte of one class file") {
+    def writeJar(p: Path, b: Array[Byte]): Unit = {
+      val out = new java.util.jar.JarOutputStream(Files.newOutputStream(p))
+      try {
+        val e = new java.util.jar.JarEntry("graft/A.class")
+        e.setTime(0L)
+        out.putNextEntry(e)
+        out.write(b)
+        out.closeEntry()
+      } finally out.close()
+    }
+    val jar = tmp().resolve("engine.jar")
+    writeJar(jar, Array[Byte](1, 2, 3))
+    val d0 = Fixtures.codeDigest(jar)
+    assert(Fixtures.codeDigest(jar) === d0, "digest must be stable when nothing changes")
+    writeJar(jar, Array[Byte](1, 2, 4))
+    assert(Fixtures.codeDigest(jar) !== d0, "one changed byte must change the digest")
+  }
+
+  test("ensureDerived: families over one table get distinct dirs and keys; a regenerated table moves the dir") {
+    withFamily { famA =>
+      withFamily { famB =>
+        val d = dataset(tmp(), "ds")
+        def build(p: Path): Unit = touch(p)
+        val a = Fixtures.ensureDerived(famA, d, "t")(build)
+        val b = Fixtures.ensureDerived(famB, d, "t")(build)
+        assert(a !== b)
+        assert(a.getFileName === b.getFileName, "same code and data: same tag")
+        assert(Fixtures.derivedKey(famA, d, "t") !== Fixtures.derivedKey(famB, d, "t"),
+          "the family must stay in the cache key")
+        assert(Fixtures.derivedDir(famA, d, "t") === a)
+        // regenerate the source table: new size, so a new fingerprint
+        Files.write(java.nio.file.Paths.get(d, "t.parquet"), "regenerated".getBytes)
+        val a2 = Fixtures.ensureDerived(famA, d, "t")(build)
+        assert(a2 !== a, "a regenerated source table must get a new dir")
+        assert(Fixtures.isPendingExitCleanup(a), "the superseded build must be swept at exit")
+      }
+    }
+  }
+
   test("sweepSuperseded registers only stale same-artifact tags for exit cleanup") {
-    val family = s"graft_test_sweep_${java.util.UUID.randomUUID()}"
-    val parent = Files.createDirectories(
-      java.nio.file.Paths.get(sys.props("java.io.tmpdir"), family))
-    def idHex(d: String): String =
-      java.lang.Long.toHexString(d.hashCode.toLong & 0xffffffffL)
-    val pX = s"v1_dsX_${idHex("dsX")}_"
-    try {
-      val live = Files.createDirectories(parent.resolve(pX + "aaa"))
-      val stale = Files.createDirectories(parent.resolve(pX + "bbb"))
-      val otherVersion = Files.createDirectories(
-        parent.resolve(s"v2_dsX_${idHex("dsX")}_ccc"))
-      val otherDataset = Files.createDirectories(
-        parent.resolve(s"v1_dsY_${idHex("dsY")}_ddd"))
-      val inFlight = Files.createDirectories(parent.resolve(pX + "staging_e"))
+    withFamily { family =>
+      val base = tmp()
+      val dX = dataset(base, "dsX")
       // sanitization collision: "ds.X" and "ds_X" share a sanitized name
       // but not the raw-path identity hash — the other dataset's LIVE
       // artifact must never be registered (the r10 review finding)
-      val collision = Files.createDirectories(
-        parent.resolve(s"v1_ds_X_${idHex("ds_X")}_eee"))
-      Fixtures.sweepSuperseded(family, "dsX", "v1", liveTag = pX + "aaa")
-      Fixtures.sweepSuperseded(family, "ds.X", "v1",
-        liveTag = s"v1_ds_X_${idHex("ds.X")}_fff")
-      assert(Fixtures.isPendingExitCleanup(stale),
+      val dDot = dataset(base, "ds.X")
+      val dUnderscore = dataset(base, "ds_X")
+      val dY = dataset(base, "dsY")
+      def build(p: Path): Unit = touch(p)
+      val otherDataset = Fixtures.ensureDerived(family, dY, "t")(build)
+      val collision = Fixtures.ensureDerived(family, dUnderscore, "t")(build)
+      // the live tag of dsX is <prefix><code digest>_<fingerprint>
+      val liveDir = Fixtures.derivedDir(family, dX, "t")
+      val parent = liveDir.getParent
+      val name = liveDir.getFileName.toString
+      val (head, fp) = name.splitAt(name.lastIndexOf('_') + 1)
+      val (prefix, code) = head.dropRight(1).splitAt(head.dropRight(1).lastIndexOf('_') + 1)
+      def flip(hex: String) = (if (hex.head == '0') "1" else "0") + hex.tail
+      val staleFp = parent.resolve(s"$prefix${code}_${flip(fp)}")
+      val staleCode = parent.resolve(s"$prefix${flip(code)}_$fp")
+      val inFlight = parent.resolve(s"${name}_staging_e")
+      // a tag in an older naming scheme (a version string in front)
+      val otherScheme = parent.resolve(s"v1_$name")
+      Seq(staleFp, staleCode, inFlight, otherScheme).foreach(touch)
+      val live = Fixtures.ensureDerived(family, dX, "t")(build)
+      assert(live === liveDir)
+      Fixtures.ensureDerived(family, dDot, "t")(build)
+      assert(Fixtures.isPendingExitCleanup(staleFp),
         "a superseded fingerprint of the same artifact must be swept at exit")
+      assert(Fixtures.isPendingExitCleanup(staleCode),
+        "a build by another engine digest of the same artifact must be swept at exit")
       // deferred, not deleted in place: a concurrent JVM may still scan it
-      assert(Files.exists(stale))
-      Seq(live, otherVersion, otherDataset, inFlight, collision).foreach { p =>
+      assert(Files.exists(staleFp) && Files.exists(staleCode))
+      Seq(live, otherScheme, otherDataset, inFlight, collision).foreach { p =>
         assert(!Fixtures.isPendingExitCleanup(p),
           s"${p.getFileName} must NOT be swept (live / other scheme / other dataset / in-flight / sanitize-collision)")
       }
-    } finally {
-      Fixtures.removeFromExitCleanup(parent.resolve(pX + "bbb"))
-      org.apache.commons.io.FileUtils.deleteDirectory(parent.toFile)
     }
   }
 

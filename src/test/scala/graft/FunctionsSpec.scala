@@ -69,7 +69,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("LandingSensor finds an appearing file and times out on a missing one") {
-    val dir = Files.createTempDirectory("graft_sensor")
+    val dir = Fixtures.tempDirCleanedAtExit("graft_sensor")
     val target = dir.resolve("late.txt")
     new Thread(() => { Thread.sleep(100); Files.write(target, "x".getBytes) }).start()
     assert(LandingSensor.await(target, timeoutMs = 3000, pokeIntervalMs = 20))
@@ -221,7 +221,7 @@ class FunctionsSpec extends AnyFunSuite {
     // configuration (a default `new Configuration()` on the executor would
     // throw UnsupportedFileSystemException)
     s.sparkContext.hadoopConfiguration.set("fs.graftfs.impl", classOf[GraftTestFs].getName)
-    val tmp = Files.createTempDirectory("graft_xfs_")
+    val tmp = Fixtures.tempDirCleanedAtExit("graft_xfs_")
     val srcDir = Files.createDirectory(tmp.resolve("src"))
     val payloads = Map("a.bin" -> "alpha-bytes", "b.bin" -> "beta-bytes")
     payloads.foreach { case (n, c) => Files.write(srcDir.resolve(n), c.getBytes) }

@@ -886,7 +886,7 @@ class LlmDataSpec extends AnyFunSuite {
     // duplicated, or mis-keyed a micro-batch's frames
     val feats = LlmData.streamVideoFeatures(s).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_video_v2")
+    val dir = LlmData.videoFixtureDir()
     val pat = "vid_(\\d+)_f_(\\d+)\\.png$".r
     val st = java.nio.file.Files.list(dir)
     val pngs =
@@ -1370,7 +1370,7 @@ class LlmDataSpec extends AnyFunSuite {
   }
 
   test("q_simsearch_delete: physical compaction of the tombstones preserves the probe result") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_compacted")
+    val tmp = Fixtures.tempDirCleanedAtExit("graft_ivf_compacted")
     try {
       val logical = LlmData.simsearchDelete(s, d)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -1455,7 +1455,7 @@ class LlmDataSpec extends AnyFunSuite {
   test("sink commit-log parser: honors action=delete, rejects unknown versions and actions") {
     import java.nio.file.{Files, Path}
     def withLog(lines: Seq[String])(body: Path => Unit): Unit = {
-      val dir = Files.createTempDirectory("graft_sinklog")
+      val dir = Fixtures.tempDirCleanedAtExit("graft_sinklog")
       try {
         val meta = dir.resolve("_spark_metadata")
         Files.createDirectories(meta)
@@ -1497,7 +1497,7 @@ class LlmDataSpec extends AnyFunSuite {
     // cross-file ordering is NUMERIC by batch id: batch 10's delete must
     // land after batch 2's add (lexicographic "10" < "2" would flip it)
     locally {
-      val dir = Files.createTempDirectory("graft_sinklog")
+      val dir = Fixtures.tempDirCleanedAtExit("graft_sinklog")
       try {
         val meta = dir.resolve("_spark_metadata")
         Files.createDirectories(meta)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -64,9 +64,7 @@ class PipelineMainSpec extends AnyFunSuite {
   }
 
   test("report DAG runs end-to-end and lands the exact fixture aggregate") {
-    val landing = Fixtures.ensure(
-      Paths.get(sys.props("java.io.tmpdir"), "graft_landing"))(
-      Zip.writeLandingFixtures(_))
+    val landing = Zip.landingFixtures()
     val workDir = Fixtures.tempDirCleanedAtExit("graft_pipeline_it_")
     val got = withStubApi(landing) { base =>
       PipelineMain.runReportDag(s, new JdkHttpTransport(), base,
@@ -89,9 +87,7 @@ class PipelineMainSpec extends AnyFunSuite {
   }
 
   test("statements DAG fans out per account and senses every landed file") {
-    val landing = Fixtures.ensure(
-      Paths.get(sys.props("java.io.tmpdir"), "graft_landing"))(
-      Zip.writeLandingFixtures(_))
+    val landing = Zip.landingFixtures()
     val rows = withStubApi(landing) { base =>
       PipelineMain.runStatementsDag(s, new JdkHttpTransport(), base,
         "client", "secret", Seq("acct-a", "acct-b"), landing,
