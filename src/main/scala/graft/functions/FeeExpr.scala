@@ -90,6 +90,13 @@ object GraftFunctions {
       s"expected an integer literal, got: $other")
   }
 
+  /** A (foldable) `array<array<bigint>>` literal argument — a centroid
+    * table — decoded once at plan build. */
+  private def longTable(e: Expression): Array[Array[Long]] = {
+    val arr = e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    Array.tabulate(arr.numElements())(i => arr.getArray(i).toLongArray())
+  }
+
   /** (name, implementing class, coercing builder) — the single source of
     * truth for every registration path.
     */
@@ -129,11 +136,13 @@ object GraftFunctions {
     ("graft_kmeans_best", classOf[KmeansBestExpr],
       exprs => KmeansBestExpr(
         Cast(exprs(0), ArrayType(LongType, containsNull = true)),
-        cents = {
-          val arr = exprs(1).eval()
-            .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          Array.tabulate(arr.numElements())(i => arr.getArray(i).toLongArray())
-        })),
+        cents = longTable(exprs(1)))),
+    ("graft_dot_best", classOf[DotBestExpr],
+      exprs => DotBestExpr(
+        Cast(exprs(0), ArrayType(LongType, containsNull = true)),
+        labels = exprs(1).eval()
+          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray(),
+        cents = longTable(exprs(2)))),
     ("graft_isect", classOf[SortedIntersectExpr],
       exprs => SortedIntersectExpr(
         Cast(exprs(0), ArrayType(LongType, containsNull = true)),

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Integer-micro vector kernels for the exact-arithmetic embedding
   * operators ([[graft.operators.LlmData.embedCentroidEval]] discipline):
@@ -104,4 +104,73 @@ case class DotLongExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotLongExpr =
     copy(left = newLeft, right = newRight)
+}
+
+/** Nearest-centroid label by exact integer dot product: for an
+  * `array<bigint>` vector and the driver-held table of `labels` with their
+  * `cents` (one `array<bigint>` centroid per label), the label whose
+  * centroid has the LARGEST Σ x·c, ties to the LOWEST label — the
+  * `row_number() OVER (PARTITION BY vec ORDER BY score DESC, label)` pick
+  * in one loop per row, with no (vector × label) rows and no window
+  * ([[KmeansBestExpr]] precedent: the table rides the expression object,
+  * so the generated code holds a reference slot, not the centroids).
+  *
+  * Exact Long arithmetic, the same sums [[DotLongExpr]] computes. Null
+  * scope: NULL array or any NULL element yields NULL; a vector whose
+  * length differs from a centroid's yields NULL; so does an empty table.
+  */
+case class DotBestExpr(child: Expression, labels: Array[Int],
+    cents: Array[Array[Long]]) extends UnaryExpression {
+
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_dot_best"
+
+  /** Index into `labels` of the best centroid, or -1 for a NULL result —
+    * public so generated code can call it. */
+  def bestIndex(a: ArrayData): Int = {
+    val n = a.numElements()
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) return -1
+      i += 1
+    }
+    var bk = -1
+    var bd = 0L
+    var k = 0
+    while (k < cents.length) {
+      val ce = cents(k)
+      if (ce.length != n) return -1
+      var dot = 0L
+      i = 0
+      while (i < n) {
+        dot += a.getLong(i) * ce(i)
+        i += 1
+      }
+      if (bk < 0 || dot > bd || (dot == bd && labels(k) < labels(bk))) {
+        bd = dot; bk = k
+      }
+      k += 1
+    }
+    bk
+  }
+
+  override def nullSafeEval(a: Any): Any = {
+    val k = bestIndex(a.asInstanceOf[ArrayData])
+    if (k < 0) null else labels(k)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => {
+      val ref = ctx.addReferenceObj("dotBest", this, classOf[DotBestExpr].getName)
+      val k = ctx.freshName("k")
+      s"""
+         |int $k = $ref.bestIndex($a);
+         |${ev.isNull} = $k < 0;
+         |if (!${ev.isNull}) ${ev.value} = $ref.labels()[$k];
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): DotBestExpr =
+    copy(child = newChild)
 }

@@ -2262,42 +2262,44 @@ object Analytics {
     * keeps only first arrivals — on an undirected graph a neighbor of a
     * dist-(k−1) node sits at dist k−2/k−1/k, so two frontiers are a
     * complete visited check and the state NEVER accumulates — each
-    * superstep is a self-contained shuffle-bounded job, state lives in
-    * DataFrames (never on the driver), the [[LlmData.dedupCluster]]
+    * superstep is self-contained, a bounded frontier is driver state and
+    * a larger one a persisted DataFrame, the [[LlmData.dedupCluster]]
     * iteration discipline. The oracle walks the same graph INDEPENDENTLY: a
     * recursive-CTE enumeration of ALL ≤3-hop paths reduced by min(dist) —
     * exponential in depth and only runnable at oracle scale, which is
     * exactly the point of the frontier formulation.
     *
-    * Scale: each hop shuffles |frontier ⋈ edges| rows keyed by node; the
-    * visited anti-join is node-grain. Per-hop distinct() bounds frontier
-    * rows at |V|. Depth is a constant (3), so the lineage stays shallow;
-    * persists are dropped as soon as the next round lands.
+    * Scale: a frontier of at most [[bfsBroadcastMaxRows]] nodes is
+    * driver state, exactly as a broadcast frontier already passes through
+    * the driver: each hop is one broadcast expansion over the memoized
+    * edges and one collect of the distinct neighbors, capped at bound + 1
+    * rows, with the two-frontier visited check a driver set difference.
+    * A frontier past the bound, or a collect that hits the cap, moves the
+    * search onto DataFrame frontiers for the rest of the run: each hop
+    * shuffles |frontier ⋈ edges| rows keyed by node against the edge view
+    * pre-partitioned on the join key, the visited anti-join is
+    * node-grain, and per-hop distinct() bounds frontier rows at |V|.
+    * Depth is a constant (3), so the lineage stays shallow; persists are
+    * dropped as soon as the result lands.
     */
-  def graphBfs(s: SparkSession, d: String): DataFrame = {
-    // AQE is pinned OFF for the BFS DAG (restored in the finally): every
-    // join strategy here is chosen explicitly from exact frontier counts
-    // and every shuffle is node-grain, so runtime re-planning has nothing
-    // to improve — but AQE's per-stage
-    // materialization serializes the iterative cached-union DAG into many
-    // adaptive stages, measured 4-30x wall-clock on the supersteps
-    // (0.9 s vs 3.7-31 s warm on the sf0.1 fixture). Static planning is
-    // the right posture for short iterative supersteps with hand-placed
-    // broadcasts; the surrounding session (scans, wide aggs) keeps AQE.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    s.conf.set(aqeKey, "false")
-    try graphBfsBody(s, d, bfsBroadcastMaxRows)
-    finally s.conf.set(aqeKey, aqeWas)
-  }
+  def graphBfs(s: SparkSession, d: String): DataFrame =
+    graphBfsWithBound(s, d, bfsBroadcastMaxRows)
 
-  /** Test seam: run the BFS with a caller-chosen broadcast bound — bound 0
-    * forces EVERY superstep onto the large-frontier shuffle path (the
-    * branch a small fixture can't reach naturally), so its equivalence to
-    * the broadcast path is asserted, not assumed (AnalyticsSpec).
+  /** The BFS with a caller-chosen frontier bound — the test seam: bound 0
+    * forces EVERY superstep onto the large-frontier shuffle path, and a
+    * bound equal to the hop-1 frontier switches over mid-search (the
+    * branches a small fixture can't reach naturally), so their equivalence
+    * to the driver-held path is asserted, not assumed (AnalyticsSpec).
     */
   private[graft] def graphBfsWithBound(s: SparkSession, d: String,
       broadcastMaxRows: Long): DataFrame = {
+    // AQE is pinned OFF for the search (restored in the finally): every
+    // join strategy here is chosen from exact frontier sizes, so runtime
+    // re-planning has nothing to improve, while AQE runs each small
+    // seed/distinct aggregate as one job per query stage with a
+    // re-optimization between them. Measured on sf0.01, 4 cores, four
+    // alternating benchmark runs: median BFS item 1.25 s with AQE, 1.13 s
+    // pinned (docs/PLANS.md). The surrounding session keeps AQE.
     val aqeKey = "spark.sql.adaptive.enabled"
     val aqeWas = s.conf.get(aqeKey)
     s.conf.set(aqeKey, "false")
@@ -2305,91 +2307,130 @@ object Analytics {
     finally s.conf.set(aqeKey, aqeWas)
   }
 
-  /** Frontier rows under this bound broadcast (~8 B/long-node → ≤ ~4 MB,
-    * inside the default 10 MB autoBroadcast budget with headroom); above
-    * it the superstep falls back to a shuffle join against the edge view
-    * pre-partitioned on `a`, where only the node-grain frontier moves.
+  /** Frontier rows under this bound stay on the driver and broadcast
+    * (~8 B/long-node → ≤ ~4 MB, inside the default 10 MB autoBroadcast
+    * budget with headroom); above it the superstep falls back to a shuffle
+    * join against the edge view pre-partitioned on `a`, where only the
+    * node-grain frontier moves.
     */
   private val bfsBroadcastMaxRows = 500000L
 
   private def graphBfsBody(s: SparkSession, d: String,
       broadcastMaxRows: Long): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    import s.implicits._
     val und = copurchaseEdges(s, d)
     // both-directions view is a NARROW union over the memoized base —
     // two cache scans beat a third persisted copy of the edge set
     val e = und.union(und.select(col("b").as("a"), col("a").as("b")))
-    // shuffle-path edge view: pre-partitioned on the join key and persisted
-    // LAZILY — it is materialized only if some superstep's frontier
-    // outgrows the broadcast bound, and from then on every such superstep
-    // is a local join on the cached partitioning (InMemoryTableScan keeps
-    // HashPartitioning(a)), so only the frontier side ever shuffles.
-    val eByA = e.repartition(col("a")).persist(MEMORY_AND_DISK)
     // global min node: und stores a = least(pair), so min(a) over the base
     // view IS the graph minimum — no need to scan the doubled union
-    val seed = und.agg(min(col("a")).as("node"))
-      .select(col("node"), lit(0L).as("dist"))
-      .persist(MEMORY_AND_DISK)
-    val frontiers = scala.collection.mutable.ArrayBuffer[DataFrame](seed)
-    val sizes = scala.collection.mutable.ArrayBuffer[Long](1L) // seed = 1 node
-    var frontier = seed
-    (1 to 3).foreach { depth =>
-      // UNDIRECTED two-frontier visited check: a neighbor of a dist-(k−1)
-      // node can only sit at dist k−2, k−1, or k, so anti-joining the LAST
-      // TWO frontiers (not the accumulated visited set) leaves exactly the
-      // dist-k nodes. This bounds the anti-join state at two frontier
-      // widths FOREVER — the accumulated-visited union the first cut
-      // carried grows to |V| and is the scale killer on a billion-node
-      // graph. (Directed graphs lose this property — back edges reach any
-      // earlier level — and need the full visited set.)
-      val recent =
-        if (frontiers.size < 2) frontiers.last
-        else frontiers.takeRight(2).reduce(_ unionByName _)
-      val recentRows = sizes.takeRight(2).sum
-      // SIZE-AWARE superstep join: while the frontier is provably small
-      // (its exact row count came from last superstep's materializing
-      // count) broadcast it — a map-side hash join over the persisted
-      // edges, no exchange but the node-grain distinct. Once a frontier
-      // crosses the bound — hop-2 of a co-purchase graph approaches
-      // O(|V|) — broadcasting it is the scale killer, so the expansion
-      // switches to the pre-partitioned edge view where the shuffle is
-      // bounded by the frontier, never the edges.
-      val small = sizes.last <= broadcastMaxRows
-      val expanded = (
-        if (small) e.join(broadcast(frontier), frontier("node") === e("a"))
-        else eByA.join(frontier, frontier("node") === eByA("a")))
-        .select(col("b").as("node"))
-      // Visited-check/dedup ORDER is chosen by the same size bound: a
-      // broadcastable visited set anti-joins BEFORE the distinct — a
-      // map-side filter on the raw neighbor mentions, so the distinct's
-      // exchange only carries genuinely-new nodes (at hop 2 most mentions
-      // are hop-0/1 backtracks; filtering them after the shuffle would
-      // move the whole candidate multiset). A too-big visited set flips
-      // the order: distinct first (map-side partial dedup bounds the
-      // exchange), then a shuffle anti-join at node grain.
-      val next = (
-        if (recentRows <= broadcastMaxRows)
-          expanded.join(broadcast(recent), Seq("node"), "left_anti").distinct()
-        else expanded.distinct().join(recent, Seq("node"), "left_anti"))
-        .select(col("node"), lit(depth.toLong).as("dist"))
-        .persist(MEMORY_AND_DISK)
-      // the count materializes the persist (reused by every later join and
-      // the final action) AND yields the exact size the NEXT superstep's
-      // join choice needs — one node-grain job per depth
-      sizes += next.count()
-      frontiers += next
-      frontier = next
+    val seed = und.agg(min(col("a"))).head()
+    if (seed.isNullAt(0))
+      return Seq.empty[(Long, Long, Long, Long, Long)]
+        .toDF("dist", "n_nodes", "sum_nodes", "min_node", "max_node")
+    // one frontier per depth: Left = driver-held nodes, Right = a persisted
+    // DataFrame frontier (node). Once a frontier is a DataFrame, every later
+    // one is too, so a driver-held frontier's predecessors are driver-held.
+    val layers = scala.collection.mutable.ArrayBuffer[Either[Array[Long], DataFrame]](
+      Left(Array(seed.getLong(0))))
+    val sizes = scala.collection.mutable.ArrayBuffer[Long](1L)
+    def asDf(l: Either[Array[Long], DataFrame]): DataFrame =
+      l.fold(_.toSeq.toDF("node"), identity)
+    // shuffle-path edge view: pre-partitioned on the join key and persisted
+    // on first use — only once some superstep's frontier outgrows the
+    // bound, and from then on every such superstep is a local join on the
+    // cached partitioning (InMemoryTableScan keeps HashPartitioning(a)),
+    // so only the frontier side ever shuffles.
+    var eByA: DataFrame = null
+    try {
+      (1 to 3).foreach { _ =>
+        // UNDIRECTED two-frontier visited check: a neighbor of a dist-(k−1)
+        // node can only sit at dist k−2, k−1, or k, so removing the LAST
+        // TWO frontiers (not the accumulated visited set) leaves exactly
+        // the dist-k nodes. This bounds the visited state at two frontier
+        // widths FOREVER — an accumulated-visited set grows to |V| and is
+        // the scale killer on a billion-node graph. (Directed graphs lose
+        // this property — back edges reach any earlier level — and need
+        // the full visited set.)
+        val local = layers.last match {
+          case Left(f) if f.length <= broadcastMaxRows =>
+            // one broadcast expansion, one capped collect: the distinct
+            // neighbors bound the next frontier from above, so a result
+            // within the bound keeps the search on the driver
+            val cap = broadcastMaxRows + 1
+            val nbrs = e.join(broadcast(asDf(Left(f))), col("node") === col("a"))
+              .select(col("b")).distinct().limit(cap.toInt).collect()
+            if (nbrs.length < cap) {
+              val recent = layers.takeRight(2).flatMap {
+                case Left(ns) => ns.toSeq
+                case Right(_) => Nil
+              }.toSet
+              Some(nbrs.map(_.getLong(0)).filterNot(recent))
+            } else None
+          case _ => None
+        }
+        local match {
+          case Some(next) =>
+            layers += Left(next)
+            sizes += next.length.toLong
+          case None =>
+            if (eByA == null) eByA = e.repartition(col("a")).persist(MEMORY_AND_DISK)
+            val frontier = asDf(layers.last)
+            val recent = layers.takeRight(2).map(asDf).reduce(_ unionByName _)
+            val recentRows = sizes.takeRight(2).sum
+            // SIZE-AWARE superstep join: while the frontier is provably
+            // small (its exact row count is known) broadcast it — a map-side
+            // hash join over the persisted edges, no exchange but the
+            // node-grain distinct. Once a frontier crosses the bound — hop-2
+            // of a co-purchase graph approaches O(|V|) — broadcasting it is
+            // the scale killer, so the expansion switches to the
+            // pre-partitioned edge view where the shuffle is bounded by the
+            // frontier, never the edges.
+            val expanded = (
+              if (sizes.last <= broadcastMaxRows)
+                e.join(broadcast(frontier), frontier("node") === e("a"))
+              else eByA.join(frontier, frontier("node") === eByA("a")))
+              .select(col("b").as("node"))
+            // Visited-check/dedup ORDER is chosen by the same size bound: a
+            // broadcastable visited set anti-joins BEFORE the distinct — a
+            // map-side filter on the raw neighbor mentions, so the
+            // distinct's exchange only carries genuinely-new nodes. A
+            // too-big visited set flips the order: distinct first (map-side
+            // partial dedup bounds the exchange), then a shuffle anti-join
+            // at node grain.
+            val next = (
+              if (recentRows <= broadcastMaxRows)
+                expanded.join(broadcast(recent), Seq("node"), "left_anti").distinct()
+              else expanded.distinct().join(recent, Seq("node"), "left_anti"))
+              .persist(MEMORY_AND_DISK)
+            // the count materializes the persist (reused by the next
+            // superstep and the final aggregate) AND yields the exact size
+            // the next superstep's join choice needs
+            sizes += next.count()
+            layers += Right(next)
+        }
+      }
+      // per-depth stats: driver-held layers locally, DataFrame layers in one
+      // union aggregate; an empty layer yields no row
+      val held = layers.zipWithIndex.collect {
+        case (Left(ns), k) if ns.nonEmpty =>
+          (k.toLong, ns.length.toLong, ns.sum, ns.min, ns.max)
+      }
+      val shuffled = layers.zipWithIndex.collect {
+        case (Right(df), k) => df.select(lit(k.toLong).as("dist"), col("node"))
+      }
+      val aggregated = shuffled.reduceOption(_ unionByName _).toSeq.flatMap(
+        _.groupBy("dist")
+          .agg(count(lit(1)), sum(col("node")), min(col("node")), max(col("node")))
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
+      (held ++ aggregated).sortBy(_._1).toSeq
+        .toDF("dist", "n_nodes", "sum_nodes", "min_node", "max_node")
+    } finally {
+      layers.foreach(_.foreach(_.unpersist()))
+      if (eByA != null) eByA.unpersist()
     }
-    val out = frontiers.reduce(_ unionByName _).groupBy("dist")
-      .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("sum_nodes"),
-        min(col("node")).as("min_node"), max(col("node")).as("max_node"))
-      .orderBy("dist")
-    val collected = out.collect()
-    frontiers.foreach(_.unpersist())
-    eByA.unpersist() // no-op if no superstep took the shuffle path
-    import s.implicits._
-    collected.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toSeq.toDF("dist", "n_nodes", "sum_nodes", "min_node", "max_node")
   }
 
   // ----------------------------------------------------------- spatial grid

@@ -4467,41 +4467,36 @@ object LlmData {
     * means, scores are integer dot products, ties break to the smallest
     * label.
     *
-    * Scale: the centroid table is |labels|·dims rows — broadcast; scoring
-    * explodes each vector against ≤|labels| candidates (bounded fan-out)
-    * and reduces with one keyed hash agg. No vector-vector pair ever
-    * materializes (contrast brute-force kNN eval).
+    * Scale: the centroid table is |labels|·dims longs of driver control
+    * plane, built from ONE collect of the exact per-(label, dim) integer
+    * sums ([[embedKmeansTrain]]'s round shape). Scoring is then one lazy
+    * plan — a scan where the native [[graft.functions.DotBestExpr]] picks
+    * each vector's label in one loop, a label-keyed hash aggregate and
+    * the label sort. No (vector × label) row, no window and no
+    * vector-vector pair ever materializes (contrast brute-force kNN eval).
     */
   def embedCentroidEval(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    // integer micros at ARRAY grain (one native kernel per row), not the
-    // previous (vec, dim)-exploded rows: the old scoring path joined the
-    // 64×-exploded corpus against the (label, dim) centroid table ON THE
-    // DIMENSION ALONE — a |corpus|·64·|labels|-row intermediate reduced
-    // by a wide-key hash agg. Scoring now runs at (vector × label) grain
-    // with one exact native Long dot per pair (guide §1.2 step 1: fix
-    // the algorithm's row count, then the per-row work). Same integers:
-    // identical per-element rounding, identical Σ xm·cm sums.
     val emb = t(s, d, "embeddings")
-      .select(col("vec_id"), col("label"),
-        call_function("graft_micro", col("embedding")).as("vm"))
-    // per-label per-dim integer-mean centroids — the exploded pass runs
-    // once at (label, dim) grain, then re-assembles to label-grain arrays
-    // (|labels| rows) for the scoring scan
-    val cent = emb
-      .select(col("label").as("cl"), posexplode(col("vm")).as(Seq("i", "xm")))
-      .groupBy("cl", "i")
-      .agg(expr("sum(xm) div count(1)").as("cm"))
-      .groupBy("cl")
-      .agg(expr("transform(sort_array(collect_list(struct(i, cm))), p -> p.cm)")
-        .as("cm"))
-    val scores = emb.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("label"), col("cl"),
-        call_function("graft_dot_long", col("vm"), col("cm")).as("score"))
-    scores
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("score").desc, col("cl"))))
-      .where(col("rk") === 1)
+    // integer micros at ARRAY grain (one native kernel per row). posexplode
+    // takes the kernel call itself: over a projected column, Catalyst's
+    // InferFiltersFromGenerate adds isnotnull/size > 0 on it, and pushdown
+    // turns that filter into two more kernel calls per row.
+    def micro = call_function("graft_micro", col("embedding"))
+    val sums = emb
+      .select(col("label"), posexplode(micro).as(Seq("i", "xm")))
+      .groupBy("label", "i")
+      .agg(sum(col("xm")).as("sx"), count(lit(1)).as("n"))
+      .collect()
+    // truncating integer-mean centroids: Long `/` rounds toward zero, as
+    // Spark `div` and the oracle's `//` do
+    val byLabel = sums.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+    val labels = byLabel.map(_._1)
+    val cents = byLabel.map { case (_, rs) =>
+      rs.sortBy(_.getInt(1)).map(r => r.getLong(2) / r.getLong(3)).toSeq }
+    emb
+      .select(col("label"), call_function("graft_dot_best", micro,
+        typedlit(labels), typedlit(cents)).as("cl"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_vectors"),
         sum(when(col("cl") === col("label"), 1L).otherwise(0L)).as("n_correct"))

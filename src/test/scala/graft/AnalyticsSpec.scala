@@ -695,12 +695,14 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(breaches > 0, "band never breached — vacuous fixture")
   }
 
-  test("q_graph_bfs layers match a driver-side queue BFS") {
-    val out = Analytics.graphBfs(s, d).collect()
+  private def bfsLayers(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long, Long, Long)] =
+    df.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toMap
-    assert(out.nonEmpty && out.contains(0L))
-    // rebuild the graph and BFS it in plain Scala
+
+  /** The co-purchase graph's adjacency and the 3-hop distances of a
+    * plain-Scala queue BFS from its smallest part. */
+  private lazy val queueBfs: (Map[Long, Set[Long]], Map[Long, Long]) = {
     val po = Tables(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey"))
       .distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
     val adj = scala.collection.mutable.Map.empty[Long, scala.collection.mutable.Set[Long]]
@@ -718,10 +720,19 @@ class AnalyticsSpec extends AnyFunSuite {
       frontier = frontier.flatMap(adj(_)).filterNot(dist.contains)
       frontier.foreach(n => dist(n) = dd.toLong)
     }
-    val want = dist.toSeq.groupBy(_._2).map { case (dd, ns) =>
+    (adj.map { case (k, v) => k -> v.toSet }.toMap, dist.toMap)
+  }
+
+  /** dist -> (count, sum, min, max) of the queue BFS. */
+  private lazy val queueBfsLayers: Map[Long, (Long, Long, Long, Long)] =
+    queueBfs._2.toSeq.groupBy(_._2).map { case (dd, ns) =>
       dd -> ((ns.size.toLong, ns.map(_._1).sum, ns.map(_._1).min, ns.map(_._1).max))
     }
-    assert(out === want)
+
+  test("q_graph_bfs layers match a driver-side queue BFS") {
+    val out = bfsLayers(Analytics.graphBfs(s, d))
+    assert(out.nonEmpty && out.contains(0L))
+    assert(out === queueBfsLayers)
     // non-vacuous: expansion actually happened beyond the seed's ego net
     assert(out.keySet.max >= 2L, s"graph saturated at 1 hop: ${out.keySet}")
   }
@@ -735,6 +746,18 @@ class AnalyticsSpec extends AnyFunSuite {
     val shufflePath =
       Analytics.graphBfsWithBound(s, d, 0L).collect().map(_.toSeq).toSeq
     assert(shufflePath === broadcastPath)
+  }
+
+  test("q_graph_bfs switches from driver-held frontiers to the shuffle path mid-search") {
+    // bound = the hop-1 frontier: hop 1 stays on the driver, and hop 2's
+    // capped collect of the frontier's distinct neighbors overflows, so
+    // the search finishes on DataFrame frontiers
+    val (adj, dist) = queueBfs
+    val hop1 = dist.collect { case (n, 1L) => n }.toSet
+    val hop2Nbrs = hop1.flatMap(adj)
+    assert(hop2Nbrs.size > hop1.size,
+      s"hop-2 collect (${hop2Nbrs.size} rows) would not overflow a bound of ${hop1.size}")
+    assert(bfsLayers(Analytics.graphBfsWithBound(s, d, hop1.size.toLong)) === queueBfsLayers)
   }
 
   test("q_join_spatial_grid equals the brute-force radius join; no cartesian plan") {

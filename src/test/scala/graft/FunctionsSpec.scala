@@ -403,6 +403,53 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
+  test("DotBestExpr: brute-force argmax label, ties to the lowest label, NULL scope, interpreted ≡ codegen") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    import graft.functions.{DotBestExpr, GraftFunctions}
+    GraftFunctions.register(s)
+    val emb = Tables(s, d, "embeddings")
+      .select(col("vec_id"), call_function("graft_micro", col("embedding")).as("vm"))
+    val vecs = emb.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+    // a label table in DESCENDING order (the kernel must not rely on the
+    // caller sorting it), centroids taken from fixture vectors
+    val labels = Array(70, 50, 30, 10)
+    val cents = labels.indices.map(k => vecs(k * 7)._2).toArray
+    def brute(v: Array[Long]): Int = labels.indices
+      .map(k => (labels(k), v.indices.map(i => v(i) * cents(k)(i)).sum))
+      .sortBy { case (lb, dot) => (-dot, lb) }.head._1
+    val got = emb
+      .select(col("vec_id"), call_function("graft_dot_best", col("vm"),
+        typedlit(labels.toSeq), typedlit(cents.map(_.toSeq).toSeq)))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got.size === vecs.length)
+    vecs.foreach { case (id, v) => assert(got(id) === brute(v), s"vec $id") }
+    assert(labels.count(lb => got.values.exists(_ == lb)) > 1, "one label won everything — vacuous")
+    // interpreted and codegen'd evaluation of the same expression agree,
+    // on fixture vectors, a constructed exact tie and every NULL case
+    def both(lbs: Array[Int], cs: Array[Array[Long]], v: Any): (Any, Any) = {
+      val e = DotBestExpr(BoundReference(0, ArrayType(LongType, containsNull = true), nullable = true),
+        lbs, cs)
+      val row = InternalRow(v)
+      val cg = GenerateUnsafeProjection.generate(Seq(e)).apply(row)
+      (e.eval(row), if (cg.isNullAt(0)) null else cg.getInt(0))
+    }
+    def arr(xs: Any*) = new GenericArrayData(xs.toArray)
+    vecs.take(50).foreach { case (id, v) =>
+      assert(both(labels, cents, arr(v: _*)) === ((brute(v), brute(v))), s"vec $id")
+    }
+    // exact tie: labels 9 and 4 share a centroid and beat label 6
+    val tie = both(Array(9, 6, 4), Array(Array(2L, 3L), Array(1L, 1L), Array(2L, 3L)), arr(5L, 7L))
+    assert(tie === ((4, 4)))
+    val two = Array(Array(1L, 2L), Array(3L, 4L))
+    assert(both(Array(1, 2), two, null) === ((null, null)), "NULL array")
+    assert(both(Array(1, 2), two, arr(1L, null)) === ((null, null)), "NULL element")
+    assert(both(Array(1, 2), two, arr(1L, 2L, 3L)) === ((null, null)), "length mismatch")
+  }
+
   test("JdkHttpTransport sends exactly one Authorization header with basicAuth + headers") {
     import com.sun.net.httpserver.{HttpExchange, HttpServer}
     val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)

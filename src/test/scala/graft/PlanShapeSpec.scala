@@ -954,4 +954,35 @@ class PlanShapeSpec extends AnyFunSuite {
         s"$name scores at corpus grain (cross product in plan):\n$po")
     }
   }
+
+  /** What `q` runs for its whole result in a fresh session (how the
+    * benchmark runs each key) at sf0.01, after one warm run in the shared
+    * session has staged its derived tables. */
+  private def ranFresh(q: (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame): TestSpark.Ran = {
+    val sf01 = java.nio.file.Paths.get(d).resolveSibling("sf0.01").toString
+    q(s, sf01).collect()
+    val fresh = s.newSession()
+    TestSpark.ran(fresh)(q(fresh, sf01).collect())
+  }
+
+  test("q_embed_centroid_eval scores in one pass: no window, no nested-loop cross, no micro-kernel filter copy, ≤ 7 jobs") {
+    val r = ranFresh(graft.operators.LlmData.embedCentroidEval)
+    val all = r.plans.mkString("\n")
+    assert(!all.contains("Window") && !all.contains("BroadcastNestedLoopJoin"),
+      s"centroid scoring fans out to (vector × label) rows:\n$all")
+    // posexplode over the kernel call itself: a projected-column input
+    // lets InferFiltersFromGenerate add size/isnotnull filters that
+    // pushdown rewrites into extra graft_micro calls per row
+    assert(!all.linesIterator.exists(l => l.contains("Filter") && l.contains("graft_micro")),
+      s"graft_micro re-evaluated in an inferred filter:\n$all")
+    info(s"${r.jobs} jobs, ${r.stages} stages")
+    assert(r.jobs <= 7, s"${r.jobs} jobs (budget 7)")
+  }
+
+  test("q_graph_bfs holds its small frontiers on the driver: ≤ 16 stages") {
+    val r = ranFresh(graft.operators.Analytics.graphBfs)
+    info(s"${r.jobs} jobs, ${r.stages} stages")
+    assert(r.stages <= 16, s"${r.stages} stages in ${r.jobs} jobs (budget 16)")
+  }
 }
