@@ -63,10 +63,11 @@ object Bench {
           spark.conf.set(providerKey, prov)
           try {
             val ms = MemoryStream[graft.streaming.Ev]
-            val q = ms.toDF().withWatermark("ts", "1 minute")
+            val q = graft.streaming.Streams.startQuery(spark)(ms.toDF()
+              .withWatermark("ts", "1 minute")
               .groupBy(window(col("ts"), "1 minute")).count()
               .writeStream.outputMode("append").format("memory")
-              .queryName("graft_bench_warm_stream").start()
+              .queryName("graft_bench_warm_stream").start())
             ms.addData(graft.streaming.Ev(1L,
               java.time.Instant.parse("2024-01-01T00:00:00Z"), 1L, "w", 1.0))
             q.processAllAvailable()

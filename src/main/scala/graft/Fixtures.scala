@@ -41,9 +41,10 @@ object Fixtures {
     dir
   }
 
-  /** Register an externally-created dir (e.g. under a RAM-backed root
-    * rather than tmpdir) for exit-time deletion — the crash-safety net
-    * behind the streaming harness's transient checkpoint dirs.
+  /** Register an externally-created dir (e.g. under the streaming root
+    * `SPARK_GRAFT_STREAM_CKPT_ROOT`) for exit-time deletion — the
+    * crash-safety net behind the streaming harness's transient checkpoint
+    * dirs.
     */
   def registerForExitCleanup(dir: Path): Unit = {
     exitHook
@@ -88,7 +89,7 @@ object Fixtures {
     * size, mtime — recursed when a table is a directory of part-files): a
     * regenerated fixture changes it.
     */
-  private def tablesFingerprint(d: String, tables: Seq[String]): String = {
+  private[graft] def tablesFingerprint(d: String, tables: Seq[String]): String = {
     val md = MessageDigest.getInstance("SHA-256")
     tables.foreach { table =>
       val src = Paths.get(d, s"$table.parquet")

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Fixture table loader.
   *
@@ -56,21 +58,58 @@ object Tables {
     }
   }
 
+  /** JVM-wide memo of inferred fixture schemas, see [[parquetSchema]]. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  private val inferNtz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+
+  /** The schema `spark.read.parquet` infers for one fixture table,
+    * memoized for the JVM. Inference runs a one-task Spark job per read
+    * (about 70 ms at bench scale), and every bench item gets a fresh
+    * session, so without the memo that job reran for every table of every
+    * item. Keyed by the path, the table's fingerprint (a regenerated table
+    * is inferred again) and the two parquet confs that decide how
+    * `events.ts` is inferred.
+    */
+  private[graft] def parquetSchema(spark: SparkSession, sfDir: String,
+      name: String): StructType = {
+    val path = s"$sfDir/$name.parquet"
+    val key = Seq(path, Fixtures.tablesFingerprint(sfDir, Seq(name)),
+      spark.conf.get(nanosAsLong), spark.conf.get(inferNtz)).mkString("\u0000")
+    val known = schemas.get(key)
+    if (known != null) known
+    else {
+      val inferred = spark.read.parquet(path).schema
+      val prev = schemas.putIfAbsent(key, inferred)
+      if (prev != null) prev else inferred
+    }
+  }
+
+  /** The raw `events` schema under the scan confs the loader's contract
+    * needs (set on the session), and a function that brings a frame read
+    * with it to a classic TimestampType `ts`; shared with the streaming
+    * read of the same file.
+    */
+  private[graft] def eventsRead(spark: SparkSession,
+      sfDir: String): (StructType, DataFrame => DataFrame) = {
+    spark.conf.set(nanosAsLong, "true")
+    spark.conf.set(inferNtz, "false")
+    val schema = parquetSchema(spark, sfDir, "events")
+    val toTs: DataFrame => DataFrame = schema("ts").dataType match {
+      case LongType => _.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case TimestampNTZType => _.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => identity
+    }
+    (schema, toTs)
+  }
+
   private def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table: $name")
+    val path = s"$sfDir/$name.parquet"
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
-      raw.schema("ts").dataType match {
-        case LongType =>
-          raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast(TimestampType))
-        case _ => raw
-      }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+      val (schema, toTs) = eventsRead(spark, sfDir)
+      toTs(spark.read.schema(schema).parquet(path))
+    } else spark.read.schema(parquetSchema(spark, sfDir, name)).parquet(path)
   }
 }

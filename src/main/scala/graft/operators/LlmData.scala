@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{TextOps, VectorOps}
+import graft.streaming.Streams
 
 /** LLM-training-data operator surface (SURVEY.md §2B north star): near-
   * duplicate detection (MinHash-LSH, SimHash, exact n-gram Jaccard,
@@ -1390,12 +1391,12 @@ object LlmData {
           }
           s.readStream.schema(schema).parquet(srcDir.toString)
         }
-      val q = assigned(src.where(expr(appendBatchCond)))
+      val q = Streams.startQuery(s)(assigned(src.where(expr(appendBatchCond)))
         .writeStream.format("parquet")
         .option("path", sinkOut.toString)
         .option("checkpointLocation", work.resolve("ckpt").toString)
         .partitionBy("cell")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
       q.awaitTermination()
       // publish: move ONLY the files the sink's _spark_metadata commit log
       // records into the standing cell dirs (a lakehouse commit job).
@@ -3470,10 +3471,10 @@ object LlmData {
         .load(dir.toString)
       val feats =
         graft.functions.BinaryBatch.frameLum(s, videoFrameKeys(src)).toDF()
-      val q = feats.writeStream.format("parquet")
+      val q = Streams.startQuery(s)(feats.writeStream.format("parquet")
         .option("path", sinkOut.toString)
         .option("checkpointLocation", work.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
       q.awaitTermination()
       java.nio.file.Files.createDirectories(staging)
       streamSinkCommittedFiles(sinkOut).foreach { f =>
@@ -8928,9 +8929,9 @@ object LlmData {
         min_by(col("lang"), col("doc_id")).as("lang"))
     val name = "graft_stream_curate"
     s.catalog.dropTempView(name)
-    val q = perContent.writeStream.outputMode("complete").format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    val q = Streams.startQuery(s)(perContent.writeStream.outputMode("complete")
+      .format("memory").queryName(name)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
     q.processAllAvailable(); q.stop()
     val scored = withLangScores(withQualityScore(s.table(name)))
     scored.join(broadcast(standing.withColumn("old", lit(1))), Seq("h"), "left")

@@ -4,7 +4,8 @@ import java.time.Instant
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 
 import graft.Tables
 import graft.operators.Det
@@ -301,22 +302,14 @@ object Streams {
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Streaming read of the events fixture (schema from the batch footer;
-    * both physical ts encodings handled exactly as in [[graft.Tables]]).
+  /** Streaming read of the events fixture (schema and both physical ts
+    * encodings exactly as in [[graft.Tables]]).
     */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val rawSchema = s.read.parquet(s"$d/events.parquet").schema
-    val raw = s.readStream.schema(rawSchema)
+    val (schema, toTs) = Tables.eventsRead(s, d)
+    toTs(s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet") // the source needs a dir
-      .parquet(d)
-    rawSchema("ts").dataType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
+      .parquet(d))
   }
 
   /** q_stream_tumbling — per-type counts + exact sums in 1-minute tumbling
@@ -416,8 +409,8 @@ object Streams {
     stagedEvents.computeIfAbsent(d, _ => {
       // exit-hook cleanup: the shared copy lives for the whole session, so
       // without it every Verify/Bench/test JVM would leave one events-table
-      // clone per dataset in tmpdir forever. Lives on the RAM-backed root
-      // (transient, a few MB at bench scale) so feed reads skip disk.
+      // clone per dataset in tmpdir forever. Lives on the streaming root
+      // so the {shared,own} feed glob stays one-component.
       val dir = java.nio.file.Files.createTempDirectory(
         streamCkptRoot, "graft_stream_events_")
       graft.Fixtures.registerForExitCleanup(dir)
@@ -455,42 +448,71 @@ object Streams {
     }
   }
 
-  /** Free space `/dev/shm` needs before [[streamCkptRoot]] picks it. */
-  private val ShmMinFreeBytes: Long = 256L << 20
-
-  /** Root for the harness's TRANSIENT per-query checkpoints (offset/commit
-    * WAL + state store deltas). Every query here creates its checkpoint,
-    * drains a finite feed, and discards it at stop — durability across a
-    * host reboot buys nothing — yet the default tmpdir placement put every
-    * WAL fsync and state-commit delta on ext4 (measured 90-160 ms of
-    * wal/offset commits plus 140-1300 ms of summed state commits per
-    * micro-batch at sf0.1). A RAM-backed root removes that I/O from the
-    * trigger path (guide §6). Long-lived production queries need a durable
-    * root instead — the env override is the deployment seam. `/dev/shm` is
-    * taken only when writable with [[ShmMinFreeBytes]] free (container
-    * defaults are often 64 MB, which a staged events copy plus checkpoints
-    * can fill mid-query); otherwise tmpdir, with one stderr line naming the
-    * override.
+  /** Root for the harness's TRANSIENT streaming dirs: per-query
+    * checkpoints (offset/commit logs, state store deltas), the staged
+    * events copy and the query-private feed dirs. Every query here creates
+    * its checkpoint, drains a finite feed and discards it at stop. The
+    * default is tmpdir; `SPARK_GRAFT_STREAM_CKPT_ROOT` chooses another
+    * root (a long-lived production query needs a durable one). A RAM-backed
+    * `/dev/shm` root bought nothing once [[startQuery]] pinned the
+    * FileSystem checkpoint manager: five alternating fresh-session runs of
+    * `q_stream_join_multiway` per root (sf0.01, 4 cores) took a median
+    * 1.19 s [1.08–1.71] on tmpdir and 1.30 s [1.16–1.71] on `/dev/shm`.
+    * Commit time was process forks, not I/O (docs/SCALING.md, "Process
+    * forks on the local filesystem").
     */
   private lazy val streamCkptRoot: java.nio.file.Path = {
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-    val root = sys.env.get("SPARK_GRAFT_STREAM_CKPT_ROOT")
-      .map(java.nio.file.Paths.get(_))
-      .getOrElse {
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        val free =
-          if (java.nio.file.Files.isWritable(shm)) shm.toFile.getUsableSpace else 0L
-        if (free >= ShmMinFreeBytes) shm
-        else {
-          if (java.nio.file.Files.exists(shm))
-            System.err.println(s"[stream] /dev/shm has ${free >> 20} MB usable " +
-              s"(< ${ShmMinFreeBytes >> 20} MB); streaming checkpoints go to " +
-              s"$tmp — set SPARK_GRAFT_STREAM_CKPT_ROOT to choose their root")
-          tmp
-        }
-      }
+    val root = java.nio.file.Paths.get(sys.env.getOrElse(
+      "SPARK_GRAFT_STREAM_CKPT_ROOT", sys.props("java.io.tmpdir")))
     java.nio.file.Files.createDirectories(root)
     root
+  }
+
+  /** Spark's FileSystem-API checkpoint manager, pinned by [[startQuery]]. */
+  private[graft] val FsCheckpointManager: String =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+
+  /** Offset-log checkpoint manager class of the query [[startQuery]] last
+    * started (reflection: StreamExecution and HDFSMetadataLog.fileManager
+    * are not public API).
+    */
+  @volatile var lastCheckpointManager: String = ""
+
+  /** The one way the engine starts a streaming query: `start` runs with
+    * the session's checkpoint manager pinned to [[FsCheckpointManager]],
+    * plus any `confs`, and every previous value is restored after. The
+    * query clones the session when it starts, so the pin covers its offset
+    * and commit logs, its state stores and a file sink's `_spark_metadata`
+    * log. Spark's default FileContext manager creates each checkpoint file
+    * and dir with an explicit permission and renames it through
+    * `FileContext`; on the local filesystem without the native Hadoop
+    * library every such call forks a `chmod` or `readlink` subprocess —
+    * 759 of the 796 forks of one `iterative` bench run, and most of each
+    * micro-batch's state commit time (docs/SCALING.md, "Process forks on
+    * the local filesystem"). Every engine checkpoint is a private,
+    * transient dir on the local filesystem, where rename(2) is atomic, so
+    * the FileContext manager's atomic-rename guarantee buys nothing here.
+    */
+  private[graft] def startQuery(s: SparkSession, confs: (String, String)*)(
+      start: => StreamingQuery): StreamingQuery = {
+    val pinned =
+      ("spark.sql.streaming.checkpointFileManagerClass" -> FsCheckpointManager) +: confs
+    val was = pinned.map { case (k, _) => k -> s.conf.getOption(k) }
+    val q =
+      try {
+        pinned.foreach { case (k, v) => s.conf.set(k, v) }
+        start
+      } finally was.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
+      }
+    lastCheckpointManager =
+      try {
+        val se = q.getClass.getMethod("streamingQuery").invoke(q)
+        val log = se.getClass.getMethod("offsetLog").invoke(se)
+        log.getClass.getMethod("fileManager").invoke(log).getClass.getName
+      } catch { case scala.util.control.NonFatal(_) => "(unavailable)" }
+    q
   }
 
   /** The single copy of the staged-feed plumbing (query-private staging
@@ -501,16 +523,16 @@ object Streams {
     */
   private def withStagedFeed(s: SparkSession, d: String,
       laterBatches: Seq[DataFrame], firstBatchExtra: Seq[DataFrame])(
-      start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      start: DataFrame => StreamingQuery): Unit = {
     val shared = java.nio.file.Paths.get(stagedEventsDir(s, d))
     // registered for exit cleanup too: the finally below removes it on the
-    // normal path, the hook covers a JVM killed mid-query; same RAM root
-    // as the shared dir so the {shared,own} glob stays one-component
+    // normal path, the hook covers a JVM killed mid-query; same root as
+    // the shared dir so the {shared,own} glob stays one-component
     val own = java.nio.file.Files.createTempDirectory(
       streamCkptRoot, "graft_stream_stage_")
     graft.Fixtures.registerForExitCleanup(own)
-    // single-component alternation (both dirs sit in tmpdir) — Hadoop globs
-    // do not allow '/' inside {}
+    // single-component alternation (both dirs sit in the streaming root)
+    // — Hadoop globs do not allow '/' inside {}
     val glob = s"${shared.getParent}/{${shared.getFileName},${own.getFileName}}"
     // frames staged BEFORE the query starts join the events table in micro-
     // batch 1. For append-mode AGGREGATIONS the flush sentinel can ride
@@ -523,22 +545,14 @@ object Streams {
     // no maxFilesPerTrigger → each drain consumes every staged file in one
     // micro-batch, keeping intra-batch rows ahead of the watermark
     val src = s.readStream.schema(normalizedEvents(s, d).schema).parquet(glob)
-    // transient checkpoint on the RAM-backed root (see [[streamCkptRoot]]);
-    // session-conf scoped so the builder lambdas stay untouched, restored
-    // immediately after start, deleted in the finally below
+    // transient checkpoint under [[streamCkptRoot]]; session-conf scoped
+    // by [[startQuery]] so the builder lambdas stay untouched, deleted in
+    // the finally below
     val ckpt = java.nio.file.Files.createTempDirectory(
       streamCkptRoot, "graft_stream_ckpt_")
     graft.Fixtures.registerForExitCleanup(ckpt)
-    val ckptKey = "spark.sql.streaming.checkpointLocation"
-    val ckptWas = s.conf.getOption(ckptKey)
-    val q =
-      try {
-        s.conf.set(ckptKey, ckpt.toString)
-        start(src)
-      } finally ckptWas match {
-        case Some(v) => s.conf.set(ckptKey, v)
-        case None => s.conf.unset(ckptKey)
-      }
+    val q = startQuery(s,
+      "spark.sql.streaming.checkpointLocation" -> ckpt.toString)(start(src))
     try {
       q.processAllAvailable()
       laterBatches.foreach { b =>
@@ -640,11 +654,11 @@ object Streams {
       ev.where(col("event_id") % 2 === 0)
         .write.mode("append").parquet(dir.toString)
       val src = s.readStream.schema(ev.schema).parquet(dir.toString)
-      val q = src
+      val q = startQuery(s)(src
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .writeStream.outputMode(OutputMode.Update()).format("memory")
-        .queryName(name).start()
+        .queryName(name).start())
       try {
         q.processAllAvailable()
         ev.where(col("event_id") % 2 === 1)
@@ -902,12 +916,12 @@ object Streams {
     // sink data + checkpoint mid-query; a fresh dir per run is both the
     // idempotent-rerun story and the collision-free one
     val base = graft.Fixtures.tempDirCleanedAtExit("graft_stream_sink_")
-    val q = eventsStream(s, d)
+    val q = startQuery(s)(eventsStream(s, d)
       .select("event_id", "user_id", "event_type", "value")
       .writeStream.format("parquet")
       .option("path", base.resolve("data").toString)
       .option("checkpointLocation", base.resolve("checkpoint").toString)
-      .trigger(Trigger.AvailableNow()).start()
+      .trigger(Trigger.AvailableNow()).start())
     q.awaitTermination()
     s.read.parquet(base.resolve("data").toString)
       .groupBy("event_type")

@@ -602,4 +602,38 @@ class StreamingSpec extends AnyFunSuite {
     assert(stream === lake,
       s"streaming HLL sketch diverged from the lake readout:\n$stream\nvs\n$lake")
   }
+
+  test("every engine streaming query starts on the FileSystem checkpoint manager; the session conf is restored") {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val preset =
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    // a dataset no earlier run has staged, so the stream-built IVF index
+    // is built (and its file-sink query started) here
+    val fresh = Fixtures.tempDirCleanedAtExit("graft_ckptmgr_ds_")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(d, "embeddings.parquet"),
+      fresh.resolve("embeddings.parquet"))
+    val starts = Seq[(String, () => Unit)](
+      "q_stream_tumbling" -> (() => Streams.streamTumbling(s, d).collect()),
+      "q_stream_sink_files" -> (() => Streams.streamSinkFiles(s, d).collect()),
+      "graft_ivf_stream" ->
+        (() => graft.operators.LlmData.ivfStreamIndexPath(s, fresh.toString)))
+    starts.foreach { case (name, run) =>
+      // an explicit session value: the pin overrides it for the start only
+      s.conf.set(key, preset)
+      try {
+        Streams.lastCheckpointManager = ""
+        run()
+        assert(Streams.lastCheckpointManager === Streams.FsCheckpointManager,
+          s"$name: offset log not on the FileSystem checkpoint manager")
+        assert(s.conf.getOption(key) === Some(preset),
+          s"$name: the session's checkpoint manager conf was not restored")
+      } finally s.conf.unset(key)
+    }
+    // and an unset conf reads unset again after the start
+    val unset = s.conf.getOption(key)
+    Streams.lastCheckpointManager = ""
+    Streams.streamTumbling(s, d).collect()
+    assert(Streams.lastCheckpointManager === Streams.FsCheckpointManager)
+    assert(s.conf.getOption(key) === unset)
+  }
 }

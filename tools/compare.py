@@ -41,10 +41,29 @@ def cells_equal(a, b):
     return a == b
 
 
+def mem_total_mb():
+    """Host RAM in MB, from /proc/meminfo's MemTotal."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+    raise SystemExit("compare: no MemTotal in /proc/meminfo")
+
+
+# DuckDB's buffer pool grows to memory_limit before it spills; a limit at
+# or above the host's RAM lets one oracle take the host down instead of
+# spilling or failing. So the lean cap is half of RAM, and the escalated
+# retry, for oracles whose pinned reservations outgrow it (on a 15 GB host
+# q_graph_louvain_level2 fails at 11.2 GB and passes at 13.5 GB), is nine
+# tenths.
+LEAN_MB = mem_total_mb() // 2
+ESCALATED_MB = mem_total_mb() * 9 // 10
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
-    def connect(limit="16GB"):
+    def connect(limit_mb=LEAN_MB):
         c = duckdb.connect()
         # long sessions accumulate allocator fragmentation across hundreds
         # of MATERIALIZED-CTE oracles; a temp dir lets big intermediates
@@ -54,7 +73,7 @@ def main():
         # modest per-instance cap: the buffer pool RETAINS cached blocks up
         # to this limit and close() only releases them once no relation
         # references the instance — heavy oracles spill to temp_directory
-        c.execute(f"SET memory_limit='{limit}'")
+        c.execute(f"SET memory_limit='{limit_mb}MB'")
         for t in TABLES:
             c.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -114,7 +133,7 @@ def main():
                 gc.collect()
                 # escalated limit: a few oracles (opq, unigram-EM) peak
                 # over the lean cap in pinned blocks that cannot spill
-                con = connect("64GB")
+                con = connect(ESCALATED_MB)
                 since_reconnect = 0
                 exp = con.sql(sql)
                 exp_cols = [c.lower() for c in exp.columns]
