@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
   * loops inside whole-stage codegen, the same 10× win [[DotExpr]] measured.
   *
   * Bit-parity doctrine (same as DotExpr): identical fold order (ascending
-  * index, double precision) and identical rounding (`round0` replicates
-  * Catalyst's `Round(_, 0)` on DoubleType: BigDecimal.valueOf → HALF_UP),
+  * index, double precision) and identical rounding ([[Round0Expr.round0]],
+  * bit-equal to Catalyst's `Round(_, 0)` on DoubleType),
   * asserted element-for-element against the HOF formulations in
   * FunctionsSpec and by the unchanged DuckDB oracle rows.
   *
@@ -103,8 +103,8 @@ case class QuantErrExpr(child: Expression) extends UnaryExpression {
       i = 0
       while (i < n) {
         val v = x.getFloat(i).toDouble
-        val err = math.abs(v - QuantErrExpr.round0(v / scale) * scale)
-        sumMicro += QuantErrExpr.round0(err * 1000000d).toLong
+        val err = math.abs(v - Round0Expr.round0(v / scale) * scale)
+        sumMicro += Round0Expr.round0(err * 1000000d).toLong
         if (err > errMax) errMax = err
         i += 1
       }
@@ -121,7 +121,7 @@ case class QuantErrExpr(child: Expression) extends UnaryExpression {
       val sum = ctx.freshName("sumMicro")
       val emax = ctx.freshName("errMax")
       val err = ctx.freshName("err")
-      val mod = "graft.functions.QuantErrExpr$.MODULE$"
+      val mod = "graft.functions.Round0Expr$.MODULE$"
       s"""
          |double $maxAbs = 0.0;
          |for (int $i = 0; $i < $a.numElements(); $i++) {
@@ -149,17 +149,4 @@ case class QuantErrExpr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): QuantErrExpr =
     copy(child = newChild)
-}
-
-object QuantErrExpr {
-  /** Catalyst `Round(_, 0)` on DoubleType, exactly: decimal (shortest-
-    * representation) HALF_UP — NOT `Math.floor(v + 0.5)`, which differs on
-    * values like 0.49999999999999994 where `v + 0.5` rounds up in binary.
-    * NaN/Infinity pass through unchanged (BigDecimal.valueOf would throw),
-    * matching Round's DoubleType behavior on non-finite inputs.
-    */
-  def round0(v: Double): Double =
-    if (java.lang.Double.isNaN(v) || java.lang.Double.isInfinite(v)) v
-    else java.math.BigDecimal.valueOf(v)
-      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
 }

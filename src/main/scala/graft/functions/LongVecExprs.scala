@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * interpreted, one dispatch per element per row — and several operators
   * paid them per (vector × anchor) PAIR after a crossJoin. These compile
   * to primitive loops with the identical arithmetic: float widened to
-  * double, [[QuantErrExpr.round0]] = Catalyst Round(_, 0) HALF_UP, the
+  * double, [[Round0Expr.round0]] = Catalyst Round(_, 0) HALF_UP, the
   * (long) cast's truncation, exact Long products/sums.
   */
 
@@ -35,7 +35,7 @@ case class MicroExpr(child: Expression) extends UnaryExpression {
     while (i < n) {
       out(i) =
         if (a.isNullAt(i)) null
-        else QuantErrExpr.round0(a.getFloat(i).toDouble * 1000000d).toLong
+        else Round0Expr.round0(a.getFloat(i).toDouble * 1000000d).toLong
       i += 1
     }
     new GenericArrayData(out)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   *
   * Bit parity: every term replicates the Catalyst expression it replaces
   * operation-for-operation — float elements widened to double, the same
-  * multiply order, [[QuantErrExpr.round0]] for Round(_, 0) HALF_UP, the
+  * multiply order, [[Round0Expr.round0]] for Round(_, 0) HALF_UP, the
   * (long) cast's truncation, and the byP-before-byQ rotation precedence.
   * Null scope (the [[SumSqExpr]] precedent): NULL input arrays yield
   * NULL; element nulls are out of parity scope (the fixtures' embeddings,
@@ -57,9 +57,9 @@ case class OpqStatsExpr(first: Expression, second: Expression,
         val xqq = x.getFloat(qq).toDouble
         val cpp = ce.getFloat(pp).toDouble
         val cqq = ce.getFloat(qq).toDouble
-        val t = QuantErrExpr.round0(xpp * cpp * 1000000d).toLong
-        val bt = QuantErrExpr.round0(xpp * cqq * 1000000d).toLong -
-          QuantErrExpr.round0(xqq * cpp * 1000000d).toLong
+        val t = Round0Expr.round0(xpp * cpp * 1000000d).toLong
+        val bt = Round0Expr.round0(xpp * cqq * 1000000d).toLong -
+          Round0Expr.round0(xqq * cpp * 1000000d).toLong
         out(pp) = new GenericInternalRow(
           Array[Any](pp, t, bt, if (pp == 0) e0 else 0L))
         i += 1
@@ -138,7 +138,7 @@ case class OpqPerJExpr(left: Expression, right: Expression,
       var i = 0
       while (i < sub) {
         val g = j * sub + i
-        xm(i) = QuantErrExpr.round0(x.getFloat(g).toDouble * 1000000d)
+        xm(i) = Round0Expr.round0(x.getFloat(g).toDouble * 1000000d)
         val xp: Float = kind(g) match {
           case 1 => (rc(g) * x.getFloat(rp(g)).toDouble -
             rs(g) * x.getFloat(rq(g)).toDouble).toFloat
@@ -146,7 +146,7 @@ case class OpqPerJExpr(left: Expression, right: Expression,
             rc(g) * x.getFloat(rq(g)).toDouble).toFloat
           case _ => x.getFloat(g)
         }
-        xpm(i) = QuantErrExpr.round0(xp.toDouble * 1000000d)
+        xpm(i) = Round0Expr.round0(xp.toDouble * 1000000d)
         i += 1
       }
       out(j) = new GenericInternalRow(Array[Any](j, code.getInt(j),

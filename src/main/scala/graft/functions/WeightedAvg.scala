@@ -30,15 +30,9 @@ object WeightedAvg extends Aggregator[(Double, Double), WeightedAvgBuf, Double] 
 
   override def zero: Buf = WeightedAvgBuf(0.0, 0.0)
 
-  /** round-half-away-from-zero, matching Spark's and DuckDB's `round(x, 0)`
-    * (math.rint would round half-to-even and disagree on exact halves).
-    */
-  private def roundHalfAway(v: Double): Double =
-    if (v >= 0) math.floor(v + 0.5) else math.ceil(v - 0.5)
-
   override def reduce(b: Buf, in: (Double, Double)): Buf = {
     val (value, weight) = in
-    b.weightedCents += roundHalfAway(value * 100) * weight
+    b.weightedCents += Round0Expr.round0(value * 100) * weight
     b.weightSum += weight
     b
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{TextOps, VectorOps}
+import graft.functions.{Round0Expr, TextOps, VectorOps}
 import graft.streaming.Streams
 
 /** LLM-training-data operator surface (SURVEY.md §2B north star): near-
@@ -2494,7 +2494,8 @@ object LlmData {
 
   /** The query's m×ks asymmetric-distance table, integer-micro per cell:
     * T[j][c] = ‖q_j − c‖², driver-computed with the same ascending fold
-    * both engines use.
+    * both engines use, rounded as the oracle's `round(·, 0)` (half away
+    * from zero; `math.round` takes a negative tie toward +∞).
     */
   private def pqAdcTable(cb: Array[Array[Array[Float]]],
       q: Array[Float]): Seq[Seq[Long]] = {
@@ -2503,7 +2504,7 @@ object LlmData {
       val qs = q.slice(j * sub, j * sub + sub)
       val qq = foldDot(qs, qs)
       cb(j).toSeq.map { ce =>
-        math.round((qq + foldDot(ce, ce) - 2.0 * foldDot(qs, ce)) * 1000000)
+        Round0Expr.round0((qq + foldDot(ce, ce) - 2.0 * foldDot(qs, ce)) * 1000000).toLong
       }
     }
   }

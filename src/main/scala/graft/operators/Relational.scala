@@ -22,12 +22,16 @@ import graft.Tables
   *    `round(x*10^k, 0)/10^k` which Spark and DuckDB evaluate identically
   *    (native `round(x, k)` differs between the engines on exact decimal
   *    boundaries: Spark rounds the shortest decimal representation, DuckDB
-  *    rounds the binary value).
+  *    rounds the binary value). At k = 0 the two readings agree on every
+  *    double, and `GraftExtensions` runs each such `round(·, 0)` as the
+  *    primitive `graft_round0` ([[graft.functions.Round0Expr]]) in place
+  *    of Catalyst's BigDecimal round trip.
   */
 object Det {
   /** Cross-engine-stable rounding: round(x*f, 0)/f. Safe whenever both
     * engines hold the identical double x (halves are exactly representable,
-    * and both engines round exact halves away from zero).
+    * and both engines round exact halves away from zero). The inner round
+    * plans as `graft_round0`, bit-equal to Spark's `round(·, 0)`.
     */
   def r(c: Column, scale: Int): Column = {
     val f = math.pow(10, scale)

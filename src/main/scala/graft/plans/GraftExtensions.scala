@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType}
 
-import graft.functions.DotExpr
+import graft.functions.{DotExpr, Round0Expr}
 
 /** Catalyst optimizer rule: rewrite the interpreted higher-order-function
   * dot-product pattern
@@ -52,15 +52,31 @@ object DotProductRewrite extends Rule[LogicalPlan] {
   }
 }
 
+/** Catalyst optimizer rule: rewrite `round(x, 0)` on a double into the
+  * native [[Round0Expr]], the same bits without Round's BigDecimal round
+  * trip. That is every cents rounding of the engine (`Det`, and each
+  * `round(c * 100, 0)`), with no change at any call site. Any other scale
+  * (Spark rounds the shortest decimal at k digits, which the helper's
+  * exactness argument does not cover), any non-double input and `bround`
+  * keep Catalyst's expression.
+  */
+object RoundRewrite extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
+    case Round(child, Literal(0, IntegerType), _) if child.dataType == DoubleType =>
+      Round0Expr(child)
+  }
+}
+
 /** Session extension entry point — the deployment-grade registration path:
   * `spark.sql.extensions=graft.plans.GraftExtensions` gives any session the
-  * engine's native functions (SQL-callable) and the optimizer rewrite, with
+  * engine's native functions (SQL-callable) and the optimizer rewrites, with
   * no imperative `register` call. The harness sessions (Verify/Bench/tests)
   * load it via that conf.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => DotProductRewrite)
+    ext.injectOptimizerRule(_ => RoundRewrite)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
     // same coercing builders as GraftFunctions.register — one source of truth
     graft.functions.GraftFunctions.defs.foreach { case (name, cls, builder) =>

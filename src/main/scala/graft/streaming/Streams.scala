@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   StreamingQuery, Trigger}
 
 import graft.Tables
+import graft.functions.Round0Expr
 import graft.operators.Det
 
 /** Event row for the staged-batch streaming queries (Instant keeps
@@ -90,9 +91,8 @@ object SessionFold {
 
   def us(i: Instant): Long = i.getEpochSecond * 1000000L + i.getNano / 1000L
 
-  // round-half-away-from-zero == Spark/DuckDB round(x, 0)
-  def cents(v: Double): Long =
-    if (v >= 0) math.floor(v * 100 + 0.5).toLong else math.ceil(v * 100 - 0.5).toLong
+  /** Integer cents of `v`, as Spark's and DuckDB's `round(v * 100, 0)`. */
+  def cents(v: Double): Long = Round0Expr.round0(v * 100).toLong
 
   def out(uid: Long, st: SessionState): SessionOut =
     SessionOut(uid, st.startUs, st.lastUs, st.n, st.cents.toDouble / 100)

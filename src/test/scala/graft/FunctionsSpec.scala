@@ -50,6 +50,15 @@ class FunctionsSpec extends AnyFunSuite {
     assert(one === many)
   }
 
+  test("WeightedAvg rounds cents as round(x, 0) at 0.49999999999999994 and odd integers past 2^52") {
+    // floor(v + 0.5) / ceil(v - 0.5) took each one integer further from zero
+    Round0Cases.halfUlpEdges.foreach { cents =>
+      val v = Round0Cases.preimage100(cents)
+      val b = WeightedAvg.reduce(WeightedAvg.zero, (v, 1.0))
+      assert(b.weightedCents === Round0Cases.catalyst(cents), s"cents=$cents")
+    }
+  }
+
   test("Retry retries exactly up to the attempt budget") {
     var calls = 0
     val out = Retry.withRetry(3, 1) { calls += 1; if (calls < 3) sys.error("boom"); 42 }
@@ -311,33 +320,26 @@ class FunctionsSpec extends AnyFunSuite {
   test("QuantErrExpr matches the HOF quantization audit bit-for-bit") {
     import graft.functions.GraftFunctions
     GraftFunctions.register(s)
+    // the reference audit runs DRIVER-side with Catalyst's BigDecimal
+    // rounding: TestSpark loads GraftExtensions, whose RoundRewrite would
+    // turn an in-plan HOF round(...) into the kernel's own helper
+    val bigRound = Round0Cases.catalyst _
     val rows = Tables(s, d, "embeddings")
-      .select(col("embedding"),
-        expr("graft_quant_err(embedding)").as("q"),
-        expr("array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127D")
-          .as("scale_raw"))
-      .select(col("q.scale_raw").as("n_scale"), col("q.err_sum_micro").as("n_sum"),
-        col("q.err_max_raw").as("n_max"),
-        col("scale_raw").as("h_scale"),
-        expr(
-          """CASE WHEN scale_raw = 0D THEN 0L ELSE
-            |aggregate(transform(embedding,
-            |  x -> CAST(round(abs(CAST(x AS DOUBLE) -
-            |    round(CAST(x AS DOUBLE) / scale_raw) * scale_raw) * 1000000) AS BIGINT)),
-            |  0L, (a, b) -> a + b) END""".stripMargin).as("h_sum"),
-        expr(
-          """CASE WHEN scale_raw = 0D THEN 0D ELSE
-            |array_max(transform(embedding,
-            |  x -> abs(CAST(x AS DOUBLE) - round(CAST(x AS DOUBLE) / scale_raw) * scale_raw)))
-            |END""".stripMargin).as("h_max"))
+      .select(col("embedding"), expr("graft_quant_err(embedding)").as("q"))
+      .select(col("embedding"), col("q.scale_raw"), col("q.err_sum_micro"),
+        col("q.err_max_raw"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
-        java.lang.Double.doubleToLongBits(r.getDouble(3)))
-      assert(r.getLong(1) === r.getLong(4))
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(2)) ===
-        java.lang.Double.doubleToLongBits(r.getDouble(5)))
+      val xs = r.getSeq[Float](0).map(_.toDouble)
+      val scale = xs.map(math.abs).max / 127D
+      val errs = if (scale == 0D) Seq(0D) else xs.map(x => math.abs(x - bigRound(x / scale) * scale))
+      val sum = if (scale == 0D) 0L else errs.map(e => bigRound(e * 1000000).toLong).sum
+      assert(java.lang.Double.doubleToLongBits(r.getDouble(1)) ===
+        java.lang.Double.doubleToLongBits(scale))
+      assert(r.getLong(2) === sum)
+      assert(java.lang.Double.doubleToLongBits(r.getDouble(3)) ===
+        java.lang.Double.doubleToLongBits(errs.max))
     }
   }
 
@@ -353,13 +355,13 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("QuantErrExpr: non-finite elements don't crash and round0 passes them through") {
-    import graft.functions.{GraftFunctions, QuantErrExpr}
+    import graft.functions.{GraftFunctions, Round0Expr}
     // Catalyst Round on DoubleType passes non-finite through; BigDecimal
     // .valueOf(NaN) would throw NumberFormatException instead
-    assert(QuantErrExpr.round0(Double.NaN).isNaN)
-    assert(QuantErrExpr.round0(Double.PositiveInfinity) === Double.PositiveInfinity)
-    assert(QuantErrExpr.round0(Double.NegativeInfinity) === Double.NegativeInfinity)
-    assert(QuantErrExpr.round0(0.49999999999999994) === 0.0)
+    assert(Round0Expr.round0(Double.NaN).isNaN)
+    assert(Round0Expr.round0(Double.PositiveInfinity) === Double.PositiveInfinity)
+    assert(Round0Expr.round0(Double.NegativeInfinity) === Double.NegativeInfinity)
+    assert(Round0Expr.round0(0.49999999999999994) === 0.0)
     GraftFunctions.register(s)
     import s.implicits._
     val r = Seq((1L, Seq(1f, Float.NaN, 2f)), (2L, Seq(Float.PositiveInfinity, 1f)))

@@ -50,6 +50,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // '*(n)' prefixes mark operators compiled into a WholeStageCodegen stage
     assert(feeLine.trim.matches("""^[+\-:\s]*\*\(\d+\).*"""),
       s"graft_fee projection not codegen'd: $feeLine\n$p")
+    // Det.r's round(fee * 10^4, 0) runs as the primitive graft_round0 in the
+    // same codegen stage, and no BigDecimal Round is left anywhere in the plan
+    assert(feeLine.contains("graft_round0("), s"fee not rounded by graft_round0: $feeLine\n$p")
+    assert(!"""\bround\(""".r.findFirstIn(p).isDefined, s"Catalyst Round left in:\n$p")
   }
 
   test("q_agg_hash uses hash aggregation with a partial (map-side) phase") {
@@ -314,6 +318,63 @@ class PlanShapeSpec extends AnyFunSuite {
     val native = emb.select(col("vec_id"),
       graft.functions.VectorOps.dot(col("embedding"), col("embedding")).as("sumsq"))
     assert(hof.orderBy("vec_id").collect() === native.orderBy("vec_id").collect())
+  }
+
+  test("RoundRewrite: double round(x, 0) only, in projections, filters and sum; bit-equal interpreted and codegen") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import java.lang.Double.doubleToRawLongBits
+    val xs = Round0Cases.edges.filter(x => !(math.abs(x) >= 1e16)) // NaN kept; fits decimal(20, 3)
+    val schema = StructType(Seq(StructField("id", LongType), StructField("x", DoubleType),
+      StructField("f", FloatType), StructField("dc", DecimalType(20, 3)),
+      StructField("i", IntegerType)))
+    val rows = xs.zipWithIndex.map { case (x, i) =>
+      Row(i.toLong, x, x.toFloat,
+        if (x.isNaN) null else new java.math.BigDecimal(x).setScale(3, java.math.RoundingMode.DOWN),
+        (x % 1000).toInt)
+    }
+    // an RDD source, so ConvertToLocalRelation cannot evaluate the rounds at plan time
+    def df(ss: org.apache.spark.sql.SparkSession) =
+      ss.createDataFrame(ss.sparkContext.parallelize(rows.toSeq, 4), schema)
+    def rewritten(q: org.apache.spark.sql.DataFrame): Boolean =
+      q.queryExecution.optimizedPlan.toString.contains("graft_round0")
+    val base = df(s)
+    val fires = Seq(
+      "projection" -> base.select(col("id"), round(col("x"), 0).as("r")),
+      "filter" -> base.where(round(col("x"), 0) === 1.0),
+      "sum" -> base.agg(sum(round(col("x") * 100, 0))),
+      "SQL" -> base.selectExpr("round(x, 0) AS r"))
+    fires.foreach { case (what, q) => assert(rewritten(q), s"$what:\n${q.queryExecution.optimizedPlan}") }
+    val keeps = Seq(
+      "round(x, 2)" -> base.select(round(col("x"), 2)),
+      "decimal" -> base.select(round(col("dc"), 0)),
+      "float" -> base.select(round(col("f"), 0)),
+      "integer" -> base.select(round(col("i"), 0)),
+      "bround" -> base.select(bround(col("x"), 0)))
+    keeps.foreach { case (what, q) => assert(!rewritten(q), s"$what:\n${q.queryExecution.optimizedPlan}") }
+    // results equal Catalyst's BigDecimal formula bit for bit, under
+    // whole-stage codegen and with every expression interpreted
+    def check(ss: org.apache.spark.sql.SparkSession, how: String): Unit = {
+      val got = df(ss).select(col("id"), round(col("x"), 0)).collect()
+        .map(r => r.getLong(0).toInt -> r.getDouble(1))
+      assert(got.length === xs.length)
+      got.foreach { case (i, g) =>
+        val want = Round0Cases.catalyst(xs(i))
+        if (want.isNaN) assert(g.isNaN, s"$how x=${xs(i)}")
+        else assert(doubleToRawLongBits(g) === doubleToRawLongBits(want), s"$how x=${xs(i)} got $g want $want")
+      }
+      // |x| < 1e9 keeps every partial sum of cents an exact integer double
+      val cents = df(ss).where(abs(col("x")) < 1e9).agg(sum(round(col("x") * 100, 0))).head().getDouble(0)
+      val wantCents = xs.filter(x => math.abs(x) < 1e9).map(x => Round0Cases.catalyst(x * 100)).sum
+      assert(cents === wantCents, how)
+    }
+    check(s, "codegen")
+    val interp = s.newSession()
+    interp.conf.set("spark.sql.codegen.wholeStage", "false")
+    interp.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    assert(rewritten(df(interp).select(round(col("x"), 0))))
+    check(interp, "interpreted")
   }
 
   test("q_pack_sequences has no single-partition window over the corpus") {

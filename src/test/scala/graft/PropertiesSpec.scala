@@ -79,6 +79,42 @@ class PropertiesSpec extends AnyFunSuite {
     }
   }
 
+  test("Round0Expr.round0 is bit-equal to Catalyst's Round(x, 0) on random bits and every edge class") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Round}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.DoubleType
+    import graft.functions.Round0Expr.round0
+    import java.lang.Double.doubleToRawLongBits
+    def same(x: Double, got: Double, want: Double): Unit =
+      assert(doubleToRawLongBits(got) === doubleToRawLongBits(want),
+        s"x=$x (0x${java.lang.Long.toHexString(doubleToRawLongBits(x))}): got $got want $want")
+    // the formula itself, over the edge classes and 2M random values
+    val rnd = new java.util.Random(20261019L)
+    Round0Cases.edges.foreach(x => same(x, round0(x), Round0Cases.catalyst(x)))
+    (0 until 1000000).foreach { _ =>
+      val x = java.lang.Double.longBitsToDouble(rnd.nextLong())
+      same(x, round0(x), Round0Cases.catalyst(x))
+    }
+    (0 until 1000000).foreach { _ =>
+      val x = (rnd.nextDouble() - 0.5) * math.pow(2, rnd.nextInt(60) - 4)
+      same(x, round0(x), Round0Cases.catalyst(x))
+    }
+    // and Catalyst's own Round, interpreted and generated, on the edge classes
+    val round = Round(BoundReference(0, DoubleType, nullable = false), Literal(0))
+    val gen = GenerateUnsafeProjection.generate(Seq(round))
+    Round0Cases.edges.foreach { x =>
+      val row = InternalRow(x)
+      val want = round0(x)
+      // UnsafeRow canonicalizes NaN, so NaN is compared as NaN
+      if (x.isNaN) assert(round.eval(row).asInstanceOf[Double].isNaN && gen(row).getDouble(0).isNaN)
+      else {
+        same(x, round.eval(row).asInstanceOf[Double], want)
+        same(x, gen(row).getDouble(0), want)
+      }
+    }
+  }
+
   test("TopKPerKey equals per-key sort-take on random tables, any k, any partitioning") {
     val spark = TestSpark.spark
     import spark.implicits._
@@ -174,5 +210,55 @@ class PropertiesSpec extends AnyFunSuite {
       assert(next > now && next <= now + 86400)
       assert(java.lang.Math.floorMod(next, 86400L) === h * 3600L + m * 60L)
     }
+  }
+}
+
+/** The edge classes of double `round(x, 0)` and Catalyst's formula for it,
+  * shared by the helper's property test and the rewrite's scope test. */
+object Round0Cases {
+  /** Catalyst's `Round(x, 0)` on DoubleType, as Spark 4.1 generates it. */
+  def catalyst(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** Both signs of: ties k + 0.5 (small k and k up to 2^52) with both
+    * neighbours, scaled cents c / 100 * 100, zero, subnormals,
+    * 0.49999999999999994, 2^52 ± 0.5 and odd integers in [2^52, 2^53),
+    * MAX, and the non-finite values (a non-canonical NaN included). */
+  /** The two classes where `floor(v + 0.5)` / `ceil(v - 0.5)` miss: the
+    * largest double below 0.5 and odd integers in [2^52, 2^53), where the
+    * half is below the ulp and the sum rounds to the even neighbour. */
+  val halfUlpEdges: Seq[Double] = {
+    val pos = Seq(0.49999999999999994, math.pow(2, 52) + 1, math.pow(2, 52) + 12345679,
+      math.pow(2, 53) - 1)
+    pos ++ pos.map(-_)
+  }
+
+  /** A double v with v * 100 == target exactly (searched over a few ulps of
+    * target / 100), for driving a kernel that scales by 100 itself. */
+  def preimage100(target: Double): Double = {
+    var v = target / 100
+    (0 until 8).foreach(_ => v = Math.nextDown(v))
+    Iterator.iterate(v)(Math.nextUp).take(17).find(_ * 100 == target)
+      .getOrElse(throw new IllegalArgumentException(s"no exact preimage of $target"))
+  }
+
+  val edges: Array[Double] = {
+    val rnd = new java.util.Random(42L)
+    val two52 = math.pow(2, 52)
+    val b = Array.newBuilder[Double]
+    def near(x: Double): Unit = { b += x; b += Math.nextUp(x); b += Math.nextDown(x) }
+    (0 until 2048).foreach(k => near(k + 0.5))
+    (0 until 2048).foreach(_ => near((rnd.nextLong() >>> 12).toDouble + 0.5))
+    (0 until 2048).foreach(_ => b += (rnd.nextLong() % 100000000000000L) / 100.0 * 100)
+    (0 until 256).foreach(_ => b += java.lang.Double.longBitsToDouble(rnd.nextLong() >>> 12))
+    (0 until 256).foreach(_ => b += two52 + 2 * (rnd.nextLong() >>> 13) + 1)
+    Seq(0.0, Double.MinPositiveValue, java.lang.Double.MIN_NORMAL, 0.49999999999999994,
+      0.3, 0.5, 1.5, 2.5, two52 - 0.5, two52 + 1, two52 + 3, 2 * two52 - 1, 2 * two52,
+      1e300, Double.MaxValue, Double.PositiveInfinity, Double.NaN,
+      java.lang.Double.longBitsToDouble(0x7ff0000000000001L)).foreach(near)
+    val pos = b.result()
+    pos ++ pos.map(-_)
   }
 }

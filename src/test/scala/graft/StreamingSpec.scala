@@ -245,6 +245,15 @@ class StreamingSpec extends AnyFunSuite {
       s"multi-way join fell back to chained stream-stream joins:\n$p")
   }
 
+  test("SessionFold.cents rounds as round(x, 0) at 0.49999999999999994 and odd integers past 2^52") {
+    // floor(v + 0.5) / ceil(v - 0.5) took each to the next integer away from zero
+    Round0Cases.halfUlpEdges.foreach { cents =>
+      val v = Round0Cases.preimage100(cents)
+      assert(graft.streaming.SessionFold.cents(v) === Round0Cases.catalyst(cents).toLong,
+        s"cents=$cents")
+    }
+  }
+
   test("MultiwayFold: two watermark-separated steps equal a brute-force 3-way join") {
     import java.time.{Duration, Instant}
     import graft.streaming.{Ev, MultiwayFold, MultiwayOut, MultiwayState, SessionFold}
