@@ -18,12 +18,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.aggHash(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * first opts its session into the shared class loader
+    * ([[GraftSession.adopt]]).
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Relational.queries ++ operators.Scalars.queries ++
+    (operators.Relational.queries ++ operators.Scalars.queries ++
       operators.LlmData.queries ++ streaming.Streams.queries ++
       sources.PipelineIngest.queries ++ sources.Transfer.queries ++
-      operators.Quality.queries ++ operators.Analytics.queries
+      operators.Quality.queries ++ operators.Analytics.queries)
+      .map { case (k, q) => k -> ((s: SparkSession, d: String) => q(GraftSession.adopt(s), d)) }
 
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get the driver's weaker

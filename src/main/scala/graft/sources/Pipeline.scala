@@ -50,6 +50,7 @@ object PipelineIngest {
     * rather than the original landing).
     */
   def ingestLanding(s: SparkSession, landingDir: String, out: String): DataFrame = {
+    graft.GraftSession.adopt(s)
     import s.implicits._
     // list_filter_suffix: only *.zip, the README.txt decoy is skipped
     val archives = s.read.format("binaryFile")

@@ -35,6 +35,7 @@ object PipelineMain extends Logging {
       clientId: String, secret: String, landing: Path, workDir: Path,
       today: java.time.LocalDate, attempts: Int = 3,
       retryDelayMs: Long = 1000, sensorTimeoutMs: Long = 5000): DataFrame = {
+    graft.GraftSession.adopt(s)
     val ingest = new RestIngest(http, baseUrl)
     // each REST stage under the reference's retry budget; the token is
     // re-acquired INSIDE each retried attempt (the reference
@@ -79,6 +80,7 @@ object PipelineMain extends Logging {
       clientId: String, secret: String, accountIds: Seq[String],
       landing: Path, today: java.time.LocalDate, attempts: Int = 3,
       retryDelayMs: Long = 1000, sensorTimeoutMs: Long = 5000): DataFrame = {
+    graft.GraftSession.adopt(s)
     import s.implicits._
     val ingest = new RestIngest(http, baseUrl)
     val landed = accountIds.map { acct =>
@@ -118,6 +120,7 @@ object PipelineMain extends Logging {
     */
   def backfillDays(s: SparkSession, sfDir: String, out: String,
       from: java.time.LocalDate, nDays: Int): DataFrame = {
+    graft.GraftSession.adopt(s)
     require(nDays >= 1, s"backfill range must be non-empty, got $nDays")
     val ev = graft.Tables(s, sfDir, "events")
       .select(col("event_id"), col("event_type"), col("value"),

@@ -42,6 +42,7 @@ object Transfer {
     * return one row per file: (file, src_bytes, bytes_match, checksum_match).
     */
   def transferDir(s: SparkSession, srcDir: String, dstDir: String): DataFrame = {
+    graft.GraftSession.adopt(s)
     import s.implicits._
     val src = s.read.format("binaryFile").load(srcDir)
       .select(col("path"), col("content"))

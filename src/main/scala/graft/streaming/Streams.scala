@@ -381,27 +381,38 @@ object Streams {
     dir
   })
 
-  /** Append one staged batch into a query-private feed dir: the memoized
-    * sentinel goes in as a file copy; anything else pays the distributed
-    * write it needs.
+  /** Land one staged batch as a new feed dir `<own>-<uuid>` beside `own`
+    * and return it: the memoized sentinel goes in as a file copy; anything
+    * else pays the distributed write it needs. The batch is written to a
+    * hidden dir inside `own`, which the feed glob does not reach, and
+    * renamed into place in one step, so a trigger sees all of its files or
+    * none. The query polls the feed while a later batch is appended, and a
+    * write commits its files one by one: a trigger that saw the sentinel's
+    * file but not the tombstone wave's advanced the watermark past the
+    * wave, and `q_stream_scd2` lost the history of every tombstoned user.
     */
   private def appendBatch(s: SparkSession, b: DataFrame,
-      own: java.nio.file.Path): Unit =
+      own: java.nio.file.Path): java.nio.file.Path = {
+    val name = s"${own.getFileName}-${java.util.UUID.randomUUID()}"
+    val hidden = own.resolve(s".$name")
     if (b eq sentinelBatch(s)) {
-      val src = stagedSentinelDir(s)
-      val st = java.nio.file.Files.list(src)
+      java.nio.file.Files.createDirectory(hidden)
+      val st = java.nio.file.Files.list(stagedSentinelDir(s))
       try st.filter(_.getFileName.toString.startsWith("part-")).forEach { p =>
-        java.nio.file.Files.copy(p,
-          own.resolve(s"sentinel-${java.util.UUID.randomUUID()}.parquet"))
+        java.nio.file.Files.copy(p, hidden.resolve(p.getFileName))
       } finally st.close()
-    } else b.write.mode("append").parquet(own.toString)
+    } else b.write.parquet(hidden.toString)
+    val landed = own.resolveSibling(name)
+    graft.Fixtures.registerForExitCleanup(landed)
+    java.nio.file.Files.move(hidden, landed, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
 
   /** Per-dataset immutable staging of the events table (one distributed
     * parquet write per JVM per dataset): every staged-batch streaming query
     * starts from the full events table, so staging it once and sharing it
     * read-only removes one events-table write job from EACH streaming query
     * (7 queries × ~1 s at sf0.1). The dir lives directly under tmpdir so it
-    * can appear in a single-component {shared,own} source glob.
+    * can appear in the single-component source glob of a staged feed.
     */
   private val stagedEvents = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -410,7 +421,7 @@ object Streams {
       // exit-hook cleanup: the shared copy lives for the whole session, so
       // without it every Verify/Bench/test JVM would leave one events-table
       // clone per dataset in tmpdir forever. Lives on the streaming root
-      // so the {shared,own} feed glob stays one-component.
+      // so the staged feed's glob stays one-component.
       val dir = java.nio.file.Files.createTempDirectory(
         streamCkptRoot, "graft_stream_events_")
       graft.Fixtures.registerForExitCleanup(dir)
@@ -516,7 +527,7 @@ object Streams {
   }
 
   /** The single copy of the staged-feed plumbing (query-private staging
-    * dir, {shared,own} glob source, first-batch extras, drain loop,
+    * dir, one-component glob source, first-batch extras, drain loop,
     * last-plan capture, cleanup) shared by the memory-sink harness above
     * and the foreachBatch upsert — a fix to the scaffold lands in one
     * place.
@@ -525,15 +536,17 @@ object Streams {
       laterBatches: Seq[DataFrame], firstBatchExtra: Seq[DataFrame])(
       start: DataFrame => StreamingQuery): Unit = {
     val shared = java.nio.file.Paths.get(stagedEventsDir(s, d))
-    // registered for exit cleanup too: the finally below removes it on the
-    // normal path, the hook covers a JVM killed mid-query; same root as
-    // the shared dir so the {shared,own} glob stays one-component
+    // registered for exit cleanup too: the finally below removes it and
+    // every batch landed beside it on the normal path, the hook covers a
+    // JVM killed mid-query; same root as the shared dir so the feed glob
+    // stays one-component
     val own = java.nio.file.Files.createTempDirectory(
       streamCkptRoot, "graft_stream_stage_")
     graft.Fixtures.registerForExitCleanup(own)
-    // single-component alternation (both dirs sit in the streaming root)
+    val landed = scala.collection.mutable.ArrayBuffer(own)
+    // single-component alternation (all dirs sit in the streaming root)
     // — Hadoop globs do not allow '/' inside {}
-    val glob = s"${shared.getParent}/{${shared.getFileName},${own.getFileName}}"
+    val glob = s"${shared.getParent}/{${shared.getFileName},${own.getFileName}-*}"
     // frames staged BEFORE the query starts join the events table in micro-
     // batch 1. For append-mode AGGREGATIONS the flush sentinel can ride
     // along here: the watermark advances after batch 1 commits and the
@@ -541,7 +554,7 @@ object Streams {
     // runs-and-awaits the watermark-only flush batch — one data batch
     // instead of two. (Stream-stream OUTER-join eviction does NOT run in
     // that no-data batch — q_stream_join_outer keeps its double-sentinel.)
-    firstBatchExtra.foreach(appendBatch(s, _, own))
+    firstBatchExtra.foreach(b => landed += appendBatch(s, b, own))
     // no maxFilesPerTrigger → each drain consumes every staged file in one
     // micro-batch, keeping intra-batch rows ahead of the watermark
     val src = s.readStream.schema(normalizedEvents(s, d).schema).parquet(glob)
@@ -556,7 +569,7 @@ object Streams {
     try {
       q.processAllAvailable()
       laterBatches.foreach { b =>
-        appendBatch(s, b, own)
+        landed += appendBatch(s, b, own)
         q.processAllAvailable()
       }
       // second drain: the watermark-only flush batch that follows the last
@@ -578,8 +591,10 @@ object Streams {
       // the transient checkpoint would otherwise accumulate per
       // invocation (the shared events staging is one copy per dataset
       // per JVM, reused read-only)
-      deleteRecursively(own)
-      graft.Fixtures.removeFromExitCleanup(own)
+      landed.foreach { p =>
+        deleteRecursively(p)
+        graft.Fixtures.removeFromExitCleanup(p)
+      }
       deleteRecursively(ckpt)
       graft.Fixtures.removeFromExitCleanup(ckpt)
     }

@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{SessionArtifacts, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{JdkHttpTransport, PipelineMain, Zip}
+import graft.sources.{JdkHttpTransport, PipelineIngest, PipelineMain, Transfer, Zip}
 
 /** Integration test for the composed driver: both reference DAG chains run
   * end-to-end over real HTTP (stub Dock API + production JdkHttpTransport),
@@ -133,6 +134,34 @@ class PipelineMainSpec extends AnyFunSuite {
     val second = PipelineMain.backfillDays(s, d, out, from, span)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(second === first)
+  }
+
+  test("every pipeline entry point opts a fresh isolated session out of artifact isolation") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    // a fresh session reads isolation as a default Spark 4 session does;
+    // after the call the key reads false and the session ran unisolated
+    def assertAdopts(name: String)(run: SparkSession => Any): Unit = {
+      val f = s.newSession()
+      f.conf.set(key, "true")
+      run(f)
+      assert(f.conf.get(key) === "false", s"$name left isolation on")
+      assert(!SessionArtifacts.isolated(f), s"$name ran its session isolated")
+    }
+    val landing = Zip.landingFixtures()
+    val work = Fixtures.tempDirCleanedAtExit("graft_adopt_")
+    val today = java.time.LocalDate.of(2024, 1, 5)
+    withStubApi(landing) { base =>
+      assertAdopts("runReportDag")(PipelineMain.runReportDag(_, new JdkHttpTransport(), base,
+        "client", "secret", landing, work.resolve("report"), today, retryDelayMs = 10))
+      assertAdopts("runStatementsDag")(PipelineMain.runStatementsDag(_, new JdkHttpTransport(),
+        base, "client", "secret", Seq("acct-a"), landing, today, retryDelayMs = 10))
+    }
+    assertAdopts("backfillDays")(PipelineMain.backfillDays(_, TestSpark.sf,
+      work.resolve("lake").toString, java.time.LocalDate.of(1990, 1, 1), 1))
+    assertAdopts("transferDir")(Transfer.transferDir(_, landing.toString,
+      work.resolve("copy").toString))
+    assertAdopts("ingestLanding")(PipelineIngest.ingestLanding(_, landing.toString,
+      work.resolve("ingest").toString))
   }
 
   test("backfill of a range with no source events returns an empty audit, not a crash") {

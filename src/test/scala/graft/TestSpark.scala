@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -14,8 +16,11 @@ object TestSpark {
   val sf: String = "/root/testdata/sf0.001"
 
   /** What a block ran: its jobs, the stages those jobs executed (skipped
-    * stages excluded), and the executed plan of every query it ran on `s`. */
-  final case class Ran(jobs: Int, stages: Int, plans: Seq[String])
+    * stages excluded), the executed plan of every query it ran on `s`, and
+    * the generated classes Janino compiled meanwhile with their compile
+    * time (JVM-wide counters, so they also count other threads). */
+  final case class Ran(jobs: Int, stages: Int, plans: Seq[String], compiles: Long,
+      compileMs: Double)
 
   /** Runs `body` on session `s` and reports what it ran, read after the
     * listener bus has delivered every event. Jobs are matched by a local
@@ -46,6 +51,8 @@ object TestSpark {
     sc.addSparkListener(jobListener)
     s.listenerManager.register(planListener)
     sc.setLocalProperty(key, tag)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     try {
       body
       org.apache.spark.ListenerBusDrain(sc)
@@ -54,7 +61,9 @@ object TestSpark {
       s.listenerManager.unregister(planListener)
       sc.removeSparkListener(jobListener)
     }
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
     import scala.jdk.CollectionConverters._
-    Ran(jobs.get, stages.get, plans.asScala.toSeq)
+    Ran(jobs.get, stages.get, plans.asScala.toSeq, compiles, compileMs)
   }
 }
