@@ -60,8 +60,7 @@ object Bench {
       Seq(defaultProvider,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         .foreach { prov =>
-          spark.conf.set(providerKey, prov)
-          try {
+          GraftSession.withConfs(spark, providerKey -> prov) {
             val ms = MemoryStream[graft.streaming.Ev]
             val q = graft.streaming.Streams.startQuery(spark)(ms.toDF()
               .withWatermark("ts", "1 minute")
@@ -75,7 +74,7 @@ object Bench {
               java.time.Instant.parse("2030-01-01T00:00:00Z"), 1L, "w", 1.0))
             q.processAllAvailable()
             q.stop()
-          } finally spark.conf.set(providerKey, defaultProvider)
+          }
         }
     }
     // args given → run exactly those, IN ARG ORDER (lets local iteration

@@ -22,6 +22,11 @@ object GraftSession {
 
   private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
 
+  /** Session confs the engine pins for one block through [[withConfs]]. */
+  val AdaptiveEnabled = "spark.sql.adaptive.enabled"
+  val ShufflePartitions = "spark.sql.shuffle.partitions"
+  val PartitionOverwriteMode = "spark.sql.sources.partitionOverwriteMode"
+
   /** Cores of a local run: `SPARK_GRAFT_CPUS`, default 4. */
   lazy val cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
@@ -35,9 +40,9 @@ object GraftSession {
   def build(appName: String, cores: Int): SparkSession = {
     val b = SparkSession.builder()
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config(ShufflePartitions, cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+      .config(AdaptiveEnabled, "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
@@ -63,5 +68,31 @@ object GraftSession {
   def adopt(s: SparkSession): SparkSession = {
     s.conf.set(ArtifactIsolation, "false")
     s
+  }
+
+  /** Runs `body` with every `(key, value)` of `pins` set on `s`, then
+    * restores each key as it was before the call, also when `body` throws:
+    * a key set on the session gets its value back, a key that was not set
+    * (it read its default) is unset again. This is the engine's one way to
+    * change a session conf for the length of a block; nested calls restore
+    * innermost first.
+    *
+    * The pins are evaluated before anything is set, so a sizing argument
+    * that throws leaves the session untouched. For sequential use within
+    * one session: a session conf is shared state, so a query planned on
+    * another thread of the same session while `body` runs sees the pins
+    * too. A lazy frame returned past the call is physically planned at its
+    * action, under the confs the session holds then.
+    */
+  def withConfs[T](s: SparkSession, pins: (String, String)*)(body: => T): T = {
+    val current = s.conf.getAll
+    val was = pins.map { case (k, _) => k -> current.get(k) }
+    try {
+      pins.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally was.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 }

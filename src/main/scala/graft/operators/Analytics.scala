@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.{AdaptiveEnabled, ShufflePartitions, withConfs}
 import graft.Tables
 
 /** Graph / time-series / interval / order-statistic analytics over the
@@ -2293,18 +2294,14 @@ object Analytics {
     */
   private[graft] def graphBfsWithBound(s: SparkSession, d: String,
       broadcastMaxRows: Long): DataFrame = {
-    // AQE is pinned OFF for the search (restored in the finally): every
+    // AQE is pinned OFF for the search: every
     // join strategy here is chosen from exact frontier sizes, so runtime
     // re-planning has nothing to improve, while AQE runs each small
     // seed/distinct aggregate as one job per query stage with a
     // re-optimization between them. Measured on sf0.01, 4 cores, four
     // alternating benchmark runs: median BFS item 1.25 s with AQE, 1.13 s
     // pinned (docs/PLANS.md). The surrounding session keeps AQE.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    s.conf.set(aqeKey, "false")
-    try graphBfsBody(s, d, broadcastMaxRows)
-    finally s.conf.set(aqeKey, aqeWas)
+    withConfs(s, AdaptiveEnabled -> "false")(graphBfsBody(s, d, broadcastMaxRows))
   }
 
   /** Frontier rows under this bound stay on the driver and broadcast
@@ -2748,107 +2745,101 @@ object Analytics {
     // past the first aggregate is vocabulary-grain, the shapes are known,
     // and adaptive re-planning only fragments the funnel into extra
     // stage-jobs of scheduling overhead (the [[graphBfs]] doctrine)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    val names =
-      try t(s, d, "part")
+    withConfs(s, AdaptiveEnabled -> "false") {
+      val names = t(s, d, "part")
         .groupBy(col("p_name").as("name"))
         .agg(count(lit(1)).as("n_parts"), min(col("p_partkey")).as("nid"))
         .localCheckpoint(true)
-      catch { case e: Throwable => s.conf.set(aqeKey, aqeWas); throw e }
-    try {
-    // the one cardinality the whole funnel is bounded by — read off the
-    // already-materialized checkpoint (a metadata-cheap job) and reused
-    // for the funnel's shuffle sizing below
-    val nNames = names.count()
-    // Shuffle partitions DERIVED from the name vocabulary (match pairs ≤
-    // names after blocking at this grain) — the previous hardcoded 1 was
-    // a serial point the vocabulary size never justified by measurement
-    // (r18 verdict item 4).
-    s.conf.set(partsKey, math.max(1L, nNames / 500000L).toString)
-    // BLOCK: edit distance ≤ 2 implies |len(a)−len(b)| ≤ 2, so one side
-    // replicates into the 5 adjacent length buckets (lossless blocking)
-    val probe = names.select(col("name").as("name_a"), col("nid").as("nid_a"),
-      explode(expr("sequence(length(name) - 2, length(name) + 2)")).as("cand_len"))
-    val build = names.select(col("name").as("name_b"), col("nid").as("nid_b"),
-      length(col("name")).as("cand_len"))
-    // SCORE rides the same checkpoint as BLOCK (optimization round): the
-    // thresholded Levenshtein becomes an is_match flag on the candidate
-    // rows, so candidates and matches share ONE materialization instead
-    // of two chained ones (guide §5: cache only what is reused). The
-    // 3-arg levenshtein computes the BANDED distance (O(t·n) with early
-    // abandon, returning −1 past the threshold) instead of the full
-    // O(n²) matrix — ~10× less per-pair work on ~25-char names, exactly
-    // the same match set (guide §1.2 step 2).
-    val scored = probe.join(build, "cand_len")
-      .where(col("name_a") < col("name_b"))
-      .select(col("name_a"), col("nid_a"), col("name_b"), col("nid_b"),
-        (levenshtein(col("name_a"), col("name_b"), 2) >= 0).as("is_match"))
-      .localCheckpoint(true)
-    // the cluster/survivorship/ledger tail ALSO runs under the pinned
-    // static-planning confs and is materialized before they restore:
-    // every frame here is vocabulary-grain, and letting the deferred
-    // final action run under session AQE split it into ~10 per-exchange
-    // stage-jobs of pure scheduling overhead (the r18 verdict's "8
-    // sequential ledger jobs", measured as half this query's wall time)
-      // comps feeds exactly one consumer (the resolved build) — lazy over
-      // ccLabels' own checkpointed fixpoint state, no extra checkpoint
-      val comps = ccLabels(s, scored.where(col("is_match"))
-        .select(col("nid_a").as("a"), col("nid_b").as("b")))
-      val resolved = names
-        .join(comps.withColumnRenamed("node", "nid"), Seq("nid"), "left")
-        .select(col("name"), col("n_parts"),
-          coalesce(col("component"), col("nid")).as("component"))
-        .localCheckpoint(true)
-      // SURVIVORSHIP: canonical spelling per cluster = most parts, then
-      // lexicographic min — one component-keyed window
-      val reps = resolved
-        .withColumn("rk", row_number().over(Window.partitionBy("component")
-          .orderBy(col("n_parts").desc, col("name"))))
-        .where(col("rk") === 1)
-        .select(col("component"), col("name").as("canon"))
-      // mapping feeds exactly one consumer (the fused ledger aggregate) —
-      // the previous checkpoint bought nothing
-      val mapping = resolved.join(reps, "component")
-        .select("name", "n_parts", "canon")
-      // the audit ledger, FUSED (r18 verdict item 2): the eight stage
-      // counts previously ran as eight separate aggregate legs; mapping
-      // carries names 1:1 (reps is unique per component), so stages
-      // 1/2/6/7/8 are one aggregate over mapping, 3/4 one aggregate over
-      // scored, and 5 its two-level component rollup — three aggregate
-      // subtrees in ONE materialized job instead of eight legs. Values
-      // are identical: count of a filtered frame = count(when(cond, 1));
-      // empty-input nulls match the originals (sums stay null, counts
-      // stay 0, 7 keeps coalesce 0).
-      val aggM = mapping.agg(
-        sum(col("n_parts")).as("v1"),
-        count(lit(1)).as("v2"),
-        count(when(col("name") =!= col("canon"), lit(1))).as("v6"),
-        coalesce(sum(when(col("name") =!= col("canon"), col("n_parts"))),
-          lit(0L)).as("v7"),
-        countDistinct(col("canon")).as("v8"))
-      val aggS = scored.agg(
-        count(lit(1)).as("v3"),
-        count(when(col("is_match"), lit(1))).as("v4"))
-      val agg5 = resolved.groupBy("component").agg(count(lit(1)).as("sz"))
-        .where(col("sz") >= 2).agg(count(lit(1)).as("v5"))
-      aggM.crossJoin(aggS).crossJoin(agg5)
-        .select(explode(array(
-          struct(lit("1_parts").as("stage"), col("v1").as("n")),
-          struct(lit("2_names").as("stage"), col("v2").as("n")),
-          struct(lit("3_candidate_pairs").as("stage"), col("v3").as("n")),
-          struct(lit("4_matched_pairs").as("stage"), col("v4").as("n")),
-          struct(lit("5_clusters_multi").as("stage"), col("v5").as("n")),
-          struct(lit("6_names_merged").as("stage"), col("v6").as("n")),
-          struct(lit("7_parts_merged").as("stage"), col("v7").as("n")),
-          struct(lit("8_entities").as("stage"), col("v8").as("n")))).as("r"))
-        .select(col("r.stage").as("stage"), col("r.n").as("n"))
-        .localCheckpoint(true)
-        .orderBy("stage")
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+      // the one cardinality the whole funnel is bounded by — read off the
+      // already-materialized checkpoint (a metadata-cheap job) and reused
+      // for the funnel's shuffle sizing below
+      val nNames = names.count()
+      // Shuffle partitions DERIVED from the name vocabulary (match pairs ≤
+      // names after blocking at this grain) — the previous hardcoded 1 was
+      // a serial point the vocabulary size never justified by measurement
+      // (r18 verdict item 4).
+      withConfs(s, ShufflePartitions -> iterationParts(nNames)) {
+        // BLOCK: edit distance ≤ 2 implies |len(a)−len(b)| ≤ 2, so one side
+        // replicates into the 5 adjacent length buckets (lossless blocking)
+        val probe = names.select(col("name").as("name_a"), col("nid").as("nid_a"),
+          explode(expr("sequence(length(name) - 2, length(name) + 2)")).as("cand_len"))
+        val build = names.select(col("name").as("name_b"), col("nid").as("nid_b"),
+          length(col("name")).as("cand_len"))
+        // SCORE rides the same checkpoint as BLOCK (optimization round): the
+        // thresholded Levenshtein becomes an is_match flag on the candidate
+        // rows, so candidates and matches share ONE materialization instead
+        // of two chained ones (guide §5: cache only what is reused). The
+        // 3-arg levenshtein computes the BANDED distance (O(t·n) with early
+        // abandon, returning −1 past the threshold) instead of the full
+        // O(n²) matrix — ~10× less per-pair work on ~25-char names, exactly
+        // the same match set (guide §1.2 step 2).
+        val scored = probe.join(build, "cand_len")
+          .where(col("name_a") < col("name_b"))
+          .select(col("name_a"), col("nid_a"), col("name_b"), col("nid_b"),
+            (levenshtein(col("name_a"), col("name_b"), 2) >= 0).as("is_match"))
+          .localCheckpoint(true)
+        // the cluster/survivorship/ledger tail ALSO runs under the pinned
+        // static-planning confs and is materialized before they restore:
+        // every frame here is vocabulary-grain, and letting the deferred
+        // final action run under session AQE split it into ~10 per-exchange
+        // stage-jobs of pure scheduling overhead (the r18 verdict's "8
+        // sequential ledger jobs", measured as half this query's wall time)
+        // comps feeds exactly one consumer (the resolved build) — lazy over
+        // ccLabels' own checkpointed fixpoint state, no extra checkpoint
+        val comps = ccLabels(s, scored.where(col("is_match"))
+          .select(col("nid_a").as("a"), col("nid_b").as("b")))
+        val resolved = names
+          .join(comps.withColumnRenamed("node", "nid"), Seq("nid"), "left")
+          .select(col("name"), col("n_parts"),
+            coalesce(col("component"), col("nid")).as("component"))
+          .localCheckpoint(true)
+        // SURVIVORSHIP: canonical spelling per cluster = most parts, then
+        // lexicographic min — one component-keyed window
+        val reps = resolved
+          .withColumn("rk", row_number().over(Window.partitionBy("component")
+            .orderBy(col("n_parts").desc, col("name"))))
+          .where(col("rk") === 1)
+          .select(col("component"), col("name").as("canon"))
+        // mapping feeds exactly one consumer (the fused ledger aggregate) —
+        // the previous checkpoint bought nothing
+        val mapping = resolved.join(reps, "component")
+          .select("name", "n_parts", "canon")
+        // the audit ledger, FUSED (r18 verdict item 2): the eight stage
+        // counts previously ran as eight separate aggregate legs; mapping
+        // carries names 1:1 (reps is unique per component), so stages
+        // 1/2/6/7/8 are one aggregate over mapping, 3/4 one aggregate over
+        // scored, and 5 its two-level component rollup — three aggregate
+        // subtrees in ONE materialized job instead of eight legs. Values
+        // are identical: count of a filtered frame = count(when(cond, 1));
+        // empty-input nulls match the originals (sums stay null, counts
+        // stay 0, 7 keeps coalesce 0).
+        val aggM = mapping.agg(
+          sum(col("n_parts")).as("v1"),
+          count(lit(1)).as("v2"),
+          count(when(col("name") =!= col("canon"), lit(1))).as("v6"),
+          coalesce(sum(when(col("name") =!= col("canon"), col("n_parts"))),
+            lit(0L)).as("v7"),
+          countDistinct(col("canon")).as("v8"))
+        val aggS = scored.agg(
+          count(lit(1)).as("v3"),
+          count(when(col("is_match"), lit(1))).as("v4"))
+        val agg5 = resolved.groupBy("component").agg(count(lit(1)).as("sz"))
+          .where(col("sz") >= 2).agg(count(lit(1)).as("v5"))
+        aggM.crossJoin(aggS).crossJoin(agg5)
+          .select(explode(array(
+            struct(lit("1_parts").as("stage"), col("v1").as("n")),
+            struct(lit("2_names").as("stage"), col("v2").as("n")),
+            struct(lit("3_candidate_pairs").as("stage"), col("v3").as("n")),
+            struct(lit("4_matched_pairs").as("stage"), col("v4").as("n")),
+            struct(lit("5_clusters_multi").as("stage"), col("v5").as("n")),
+            struct(lit("6_names_merged").as("stage"), col("v6").as("n")),
+            struct(lit("7_parts_merged").as("stage"), col("v7").as("n")),
+            struct(lit("8_entities").as("stage"), col("v8").as("n")))).as("r"))
+          .select(col("r.stage").as("stage"), col("r.n").as("n"))
+          .localCheckpoint(true)
+          .orderBy("stage")
+      }
+    }
   }
 
   // ------------------------------------------------------------- seq match
@@ -4729,96 +4720,90 @@ object Analytics {
     val ledger = scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Long, Long)]()
     val s1 = stats(dec1)
     ledger += ((1, s1._1, s1._2, s1._3, s1._4))
-    // level-1 contraction: the STAGED shared artifact (built under the
-    // session conf, BEFORE the iteration pin — the graphScc ordering)
+    // level-1 contraction: the STAGED shared artifact, built under the
+    // session conf
     val g1 = louvainContracted(s, d)
-    // iteration conf pin (the graphConnectedComponents discipline): the
-    // contracted graphs are |communities|-sized, so the level loop's many
-    // small jobs must not each pay a 32-partition shuffle
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partsKey, "1")
-    // level graphs are |communities|-grain; the level-1 ledger row's
-    // community count gates the hand-placed broadcasts (the [[ccLabels]]
-    // gate — AQE is off for the level loop, checkpointed/staged frames
-    // carry no stats)
-    val tiny = s1._4 <= graphBroadcastMaxRows(s)
-    try {
-    var g = g1
-    // nodes stays LAZY: a distinct over the (checkpointed or staged)
-    // decision frame — two tiny recomputes per level beat a
-    // materialization job per level
-    var nodes = dec1.select(col("bc").as("u")).distinct()
-    var converged = s1._2 == 0L
-    (2 to LouvainLevels).foreach { k =>
-      if (converged) {
-        // idempotent tail: a no-move level's contraction is the identity
-        val n = ledger.last._5
-        ledger += ((k, n, 0L, 0L, n))
-      } else {
-        val nonself = g.where(col("a") =!= col("b"))
-        val selfw = g.where(col("a") === col("b"))
-          .select(col("a").as("u"), col("w").as("w_self"))
-        val dir = nonself.select(col("a").as("u"), col("b").as("v"), col("w"))
-          .union(nonself.select(col("b").as("u"), col("a").as("v"), col("w")))
-        val kNode = nodes
-          .join(bcastIf(dir.groupBy("u").agg(sum(col("w")).as("k_ext")), tiny),
-            Seq("u"), "left")
-          .join(bcastIf(selfw, tiny), Seq("u"), "left")
-          .na.fill(0L, Seq("k_ext", "w_self"))
-          .select(col("u"), (col("k_ext") + lit(2L) * col("w_self")).as("k_u"))
-        // broadcast the one-row total: a plain crossJoin plans a
-        // CartesianProduct whose partitioning multiplies (measured 2.7×
-        // slower per level) — the broadcast job is the cheaper floor
-        val tw = g.agg(sum(col("w")).as("tw"))
-        val cand = dir
-          .join(bcastIf(kNode, tiny), "u")
-          .join(bcastIf(kNode.select(col("u").as("v"), col("k_u").as("k_v")),
-            tiny), "v")
-          .crossJoin(broadcast(tw))
-          .select(col("u"), col("v"),
-            (lit(2L) * col("tw") * col("w") - col("k_u") * col("k_v")).as("gain"))
-        val wdw = Window.partitionBy("u").orderBy(desc("gain"), asc("v"))
-        val best = cand.withColumn("rn", row_number().over(wdw))
-          .where(col("rn") === 1).select(col("u"), col("v"), col("gain"))
-        // DOWNHILL-ONLY apply (oscillation breaker): a merge is applied
-        // only toward a LEXICOGRAPHICALLY SMALLER label. Simultaneous
-        // unrestricted merges livelock — u→v and v→u swap labels forever
-        // (observed on the fixture: two supernodes trading places every
-        // level) — while downhill moves cannot cycle (u→v needs v < u)
-        // and every applied level strictly removes the largest mover's
-        // label, so n_comms strictly decreases and convergence is
-        // PROVABLE within |communities| levels. The standard distributed-
-        // Louvain ordering heuristic; the single-level operators keep
-        // reporting the raw argmax decisions.
-        val applied = col("gain") > 0 && col("v") < col("u")
-        val dec = nodes.join(bcastIf(best, tiny), Seq("u"), "left")
-          .select(col("u"),
-            when(applied, col("v")).otherwise(col("u")).as("bc"),
-            when(applied, col("gain")).otherwise(lit(0L)).as("g"),
-            coalesce(applied, lit(false)).as("mv"))
-          .localCheckpoint(true)
-        val sk = stats(dec)
-        ledger += ((k, sk._1, sk._2, sk._3, sk._4))
-        converged = sk._2 == 0L
-        if (!converged && k < LouvainLevels) {
-          val nextG = g
-            .join(bcastIf(dec.select(col("u").as("a"), col("bc").as("ma")), tiny), "a")
-            .join(bcastIf(dec.select(col("u").as("b"), col("bc").as("mb")), tiny), "b")
-            .select(least(col("ma"), col("mb")).as("a"),
-              greatest(col("ma"), col("mb")).as("b"), col("w"))
-            .groupBy("a", "b").agg(sum(col("w")).as("w"))
+    // the contracted graphs are |communities|-sized, so the level loop's
+    // many small jobs run static plans on one shuffle partition instead
+    // of each paying a core-count-wide shuffle
+    withConfs(s, AdaptiveEnabled -> "false", ShufflePartitions -> "1") {
+      // level graphs are |communities|-grain; the level-1 ledger row's
+      // community count gates the hand-placed broadcasts (the [[ccLabels]]
+      // gate — AQE is off for the level loop, checkpointed/staged frames
+      // carry no stats)
+      val tiny = s1._4 <= graphBroadcastMaxRows(s)
+      var g = g1
+      // nodes stays LAZY: a distinct over the (checkpointed or staged)
+      // decision frame — two tiny recomputes per level beat a
+      // materialization job per level
+      var nodes = dec1.select(col("bc").as("u")).distinct()
+      var converged = s1._2 == 0L
+      (2 to LouvainLevels).foreach { k =>
+        if (converged) {
+          // idempotent tail: a no-move level's contraction is the identity
+          val n = ledger.last._5
+          ledger += ((k, n, 0L, 0L, n))
+        } else {
+          val nonself = g.where(col("a") =!= col("b"))
+          val selfw = g.where(col("a") === col("b"))
+            .select(col("a").as("u"), col("w").as("w_self"))
+          val dir = nonself.select(col("a").as("u"), col("b").as("v"), col("w"))
+            .union(nonself.select(col("b").as("u"), col("a").as("v"), col("w")))
+          val kNode = nodes
+            .join(bcastIf(dir.groupBy("u").agg(sum(col("w")).as("k_ext")), tiny),
+              Seq("u"), "left")
+            .join(bcastIf(selfw, tiny), Seq("u"), "left")
+            .na.fill(0L, Seq("k_ext", "w_self"))
+            .select(col("u"), (col("k_ext") + lit(2L) * col("w_self")).as("k_u"))
+          // broadcast the one-row total: a plain crossJoin plans a
+          // CartesianProduct whose partitioning multiplies (measured 2.7×
+          // slower per level) — the broadcast job is the cheaper floor
+          val tw = g.agg(sum(col("w")).as("tw"))
+          val cand = dir
+            .join(bcastIf(kNode, tiny), "u")
+            .join(bcastIf(kNode.select(col("u").as("v"), col("k_u").as("k_v")),
+              tiny), "v")
+            .crossJoin(broadcast(tw))
+            .select(col("u"), col("v"),
+              (lit(2L) * col("tw") * col("w") - col("k_u") * col("k_v")).as("gain"))
+          val wdw = Window.partitionBy("u").orderBy(desc("gain"), asc("v"))
+          val best = cand.withColumn("rn", row_number().over(wdw))
+            .where(col("rn") === 1).select(col("u"), col("v"), col("gain"))
+          // DOWNHILL-ONLY apply (oscillation breaker): a merge is applied
+          // only toward a LEXICOGRAPHICALLY SMALLER label. Simultaneous
+          // unrestricted merges livelock — u→v and v→u swap labels forever
+          // (observed on the fixture: two supernodes trading places every
+          // level) — while downhill moves cannot cycle (u→v needs v < u)
+          // and every applied level strictly removes the largest mover's
+          // label, so n_comms strictly decreases and convergence is
+          // PROVABLE within |communities| levels. The standard distributed-
+          // Louvain ordering heuristic; the single-level operators keep
+          // reporting the raw argmax decisions.
+          val applied = col("gain") > 0 && col("v") < col("u")
+          val dec = nodes.join(bcastIf(best, tiny), Seq("u"), "left")
+            .select(col("u"),
+              when(applied, col("v")).otherwise(col("u")).as("bc"),
+              when(applied, col("gain")).otherwise(lit(0L)).as("g"),
+              coalesce(applied, lit(false)).as("mv"))
             .localCheckpoint(true)
-          g.unpersist()
-          g = nextG
-          nodes = dec.select(col("bc").as("u")).distinct()
+          val sk = stats(dec)
+          ledger += ((k, sk._1, sk._2, sk._3, sk._4))
+          converged = sk._2 == 0L
+          if (!converged && k < LouvainLevels) {
+            val nextG = g
+              .join(bcastIf(dec.select(col("u").as("a"), col("bc").as("ma")), tiny), "a")
+              .join(bcastIf(dec.select(col("u").as("b"), col("bc").as("mb")), tiny), "b")
+              .select(least(col("ma"), col("mb")).as("a"),
+                greatest(col("ma"), col("mb")).as("b"), col("w"))
+              .groupBy("a", "b").agg(sum(col("w")).as("w"))
+              .localCheckpoint(true)
+            g.unpersist()
+            g = nextG
+            nodes = dec.select(col("bc").as("u")).distinct()
+          }
         }
       }
     }
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
     ledger.toSeq.toDF("level", "n_nodes", "n_moved", "gain_total", "n_comms")
       .orderBy("level")
   }
@@ -4882,6 +4867,27 @@ object Analytics {
 
   private def bcastIf(df: DataFrame, tiny: Boolean): DataFrame =
     if (tiny) broadcast(df) else df
+
+  /** Rows of an iteration's sizing table (edges, names, pairs) per
+    * shuffle partition. */
+  private val IterationRowsPerPartition = 500000L
+
+  /** Shuffle partitions for an iteration whose sizing table has `rows`
+    * rows: one per [[IterationRowsPerPartition]], at least one. */
+  private[operators] def iterationParts(rows: Long): String =
+    math.max(1L, rows / IterationRowsPerPartition).toString
+
+  /** Runs a graph iteration with AQE off and shuffle partitions sized to
+    * its edge table. AQE re-plans between query stages, so each of a
+    * loop's short supersteps of known shape splits into one job per stage
+    * and the superstep DAG runs serially; and the session's scan-oriented
+    * partition count makes every small superstep pay a core-count-wide
+    * shuffle. `rows` is taken by value: the edge count, which may build
+    * the staged edge table on first touch, runs before anything is pinned,
+    * so a throw there leaves the session as it was.
+    */
+  private[graft] def withIterationConfs[T](s: SparkSession, rows: Long)(body: => T): T =
+    withConfs(s, AdaptiveEnabled -> "false", ShufflePartitions -> iterationParts(rows))(body)
 
   /** One LARGE-STAR round: every node u connects its strictly-LARGER
     * neighbors to m(u) = min(Γ(u) ∪ {u}). Output pairs keep the
@@ -5026,19 +5032,7 @@ object Analytics {
     */
   def graphConnectedComponents(s: SparkSession, d: String): DataFrame = {
     val edges = ccEdges(s, d)
-    // sized BEFORE any conf.set: the first ccEdgeCount call can trigger the
-    // staged-fixture build, and a throw there must not leave the session
-    // with AQE off / shuffle partitions unrestored (r15 advisory)
-    val edgeParts = math.max(1L, ccEdgeCount(s, d) / 500000L).toString
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partsKey, edgeParts)
-    val labels =
-      try ccLabels(s, edges)
-      finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+    val labels = withIterationConfs(s, ccEdgeCount(s, d))(ccLabels(s, edges))
     val sizes = labels.groupBy("component").agg(count(lit(1)).as("csize"))
     // component-size attach: component grain ≪ node grain — broadcast
     labels.join(broadcast(sizes), "component")
@@ -5091,30 +5085,16 @@ object Analytics {
     graft.Fixtures.ensureDerived(
       "graft_cc_base", d, "lineitem") { staging =>
       val edges = ccEdges(s, d)
-      val edgeParts = math.max(1L, ccEdgeCount(s, d) / 500000L).toString
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val aqeWas = s.conf.get(aqeKey)
-      val partsKey = "spark.sql.shuffle.partitions"
-      val partsWas = s.conf.get(partsKey)
-      s.conf.set(aqeKey, "false")
-      s.conf.set(partsKey, edgeParts)
-      try {
+      withIterationConfs(s, ccEdgeCount(s, d)) {
         val standing = edges.where(!expr(ccIncrBatchCond)).localCheckpoint(true)
         ccLabels(s, standing).write.mode("overwrite").parquet(staging.toString)
-      } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+      }
     }
 
   def graphCcIncremental(s: SparkSession, d: String): DataFrame = {
     val edges = ccEdges(s, d)
     val basePath = ccBasePath(s, d).toString
-    val edgeParts = math.max(1L, ccEdgeCount(s, d) / 500000L).toString
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partsKey, edgeParts)
-    try {
+    withIterationConfs(s, ccEdgeCount(s, d)) {
       val batch = edges.where(expr(ccIncrBatchCond))
       // label tables are node-grain ≤ 2|E| — the staged manifest count
       // decides the relabel joins' strategy (the [[ccLabels]] broadcast
@@ -5151,7 +5131,7 @@ object Analytics {
       relabeled.join(broadcast(sizes), "component")
         .select(col("node").as("part"), col("component"), col("csize"))
         .orderBy("part")
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+    }
   }
 
   /** q_graph_coreness — FULL CORE DECOMPOSITION (core number per node) of
@@ -5182,19 +5162,8 @@ object Analytics {
     */
   def graphCoreness(s: SparkSession, d: String): DataFrame = {
     val edges = ccEdges(s, d) // (a, b) undirected, a < b
-    // iteration conf pin (the [[graphConnectedComponents]] discipline,
-    // previously missing here): shuffle partitions sized to the EDGE
-    // table, not the session's scan-oriented default — the h-iteration's
-    // many small supersteps otherwise each pay a core-count-wide shuffle
-    val edgeParts = math.max(1L, ccEdgeCount(s, d) / 500000L).toString
     val tiny = ccEdgeCount(s, d) <= graphBroadcastMaxRows(s)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partsKey, edgeParts)
-    try {
+    withIterationConfs(s, ccEdgeCount(s, d)) {
       // loop-invariant edge view, pre-partitioned on the first per-round
       // join key (u) and materialized once (guide §2.4, r18 verdict item
       // 4): every h-iteration round previously re-derived the doubled
@@ -5262,7 +5231,7 @@ object Analytics {
       und.unpersist()
       c.select(col("node").as("part"), col("c").as("coreness"))
         .orderBy("part")
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+    }
   }
 
   /** Betweenness horizon and sample size: shortest paths of length ≤ 3
@@ -5293,20 +5262,12 @@ object Analytics {
     * two-frontier visited proof, valid per source) + one combinable σ-sum;
     * the backward pass is one keyed equi-join per level (verdict ask).
     * State never leaves DataFrames; lineage cut per level; AQE pinned off
-    * and shuffle partitions sized to the staged edge table (the
-    * [[graphConnectedComponents]] iteration discipline).
+    * and shuffle partitions sized to the staged edge table
+    * ([[withIterationConfs]]).
     */
   def graphBetweenness(s: SparkSession, d: String): DataFrame = {
     val edges = ccEdges(s, d)
-    // sized BEFORE any conf.set (the r15 advisory ordering)
-    val edgeParts = math.max(1L, ccEdgeCount(s, d) / 500000L).toString
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partsKey, edgeParts)
-    try {
+    withIterationConfs(s, ccEdgeCount(s, d)) {
       // both-directions edge view (v → u), PRE-PARTITIONED on the
       // per-level join key (v) and materialized once (guide §2.4, r18
       // verdict item 4): above the broadcast cutoff every forward
@@ -5374,7 +5335,7 @@ object Analytics {
         .groupBy(col("node").as("part"))
         .agg(sum(col("delta")).as("bc_micro"))
         .orderBy("part")
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+    }
   }
 
   /** Sampled-source horizon/sample for closeness — contract constants
@@ -5407,14 +5368,7 @@ object Analytics {
     */
   def graphCloseness(s: SparkSession, d: String): DataFrame = {
     val edges = ccEdges(s, d)
-    val edgeParts = math.max(1L, ccEdgeCount(s, d) / 500000L).toString
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partsKey, edgeParts)
-    try {
+    withIterationConfs(s, ccEdgeCount(s, d)) {
       // pre-partitioned on the per-level join key (v), see
       // [[graphBetweenness]] — only the frontier side shuffles per level
       // above the broadcast cutoff
@@ -5455,7 +5409,7 @@ object Analytics {
         .agg(count(lit(1)).as("reached"),
           sum(expr("1000000 div dist")).as("hc_micro"))
         .orderBy("part")
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+    }
   }
 
   /** Landmark-oracle contract constants: k landmarks, q query nodes, and
@@ -5488,14 +5442,7 @@ object Analytics {
     */
   def graphLandmarkDist(s: SparkSession, d: String): DataFrame = {
     val we = ccWeightedEdges(s, d)
-    val edgeParts = math.max(1L, ccEdgeCount(s, d) / 500000L).toString
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partsKey, edgeParts)
-    try {
+    withIterationConfs(s, ccEdgeCount(s, d)) {
       // pre-partitioned on the relaxation join key (v), see
       // [[graphBetweenness]] — only the (landmark, node) distance table
       // shuffles per round above the broadcast cutoff
@@ -5553,7 +5500,7 @@ object Analytics {
         .groupBy("u", "v")
         .agg(min(col("du") + col("dv")).as("est_micro"))
         .orderBy("u", "v")
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+    }
   }
 
   /** Horizon of the neighborhood function — a contract constant like the
@@ -5613,14 +5560,7 @@ object Analytics {
     */
   def graphNeighborhood(s: SparkSession, d: String): DataFrame = {
     val edges = ccEdges(s, d)
-    val edgeParts = math.max(1L, ccEdgeCount(s, d) / 500000L).toString
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partsKey, edgeParts)
-    try {
+    withIterationConfs(s, ccEdgeCount(s, d)) {
       // pre-partitioned on the propagation join key (v), see
       // [[graphBetweenness]] — only the sketch/reach side shuffles per
       // round above the broadcast cutoff
@@ -5655,7 +5595,7 @@ object Analytics {
       }
       import s.implicits._
       out.toDF("h", "n_nodes", "nf_exact", "nf_est_ok").orderBy("h")
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+    }
   }
 
   /** Round bound for the SSSP relaxation — a provable-headroom guard like
@@ -5744,14 +5684,7 @@ object Analytics {
     */
   def graphSssp(s: SparkSession, d: String): DataFrame = {
     val we = ccWeightedEdges(s, d)
-    val edgeParts = math.max(1L, ccEdgeCount(s, d) / 500000L).toString
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partsKey, edgeParts)
-    try {
+    withIterationConfs(s, ccEdgeCount(s, d)) {
       // pre-partitioned on the relaxation join key (v), see
       // [[graphBetweenness]] — only the node-grain distance table
       // shuffles per round above the broadcast cutoff
@@ -5786,7 +5719,7 @@ object Analytics {
         s"SSSP did not reach its fixpoint within $SsspRounds rounds")
       dist.select(col("node").as("part"), col("dist").as("dist_micro"))
         .orderBy("part")
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+    }
   }
 
   /** The truss threshold: every surviving edge closes ≥ KTrussK − 2
@@ -5904,62 +5837,58 @@ object Analytics {
     * MONOTONE (next ⊆ current), so an unchanged edge COUNT is an exact
     * fixpoint test (no set compare needed) and rounds are provably
     * bounded by |E|. Lineage cut per round, AQE pinned off, shuffle
-    * partitions sized to the edge table (the
-    * [[graphConnectedComponents]] iteration discipline). The oracle
-    * unrolls 12 support-recompute rounds — idempotent past the fixpoint;
-    * AnalyticsSpec re-checks the 12-round bound per oracle tier (the
+    * partitions sized to the edge table and floored at core count. The
+    * oracle unrolls 12 support-recompute rounds — idempotent past the
+    * fixpoint; AnalyticsSpec re-checks the 12-round bound per oracle tier (the
     * coreness guard discipline).
     */
   def graphKtruss(s: SparkSession, d: String): DataFrame = {
     val edges0 = copurchaseEdges(s, d)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    try {
+    // static planning for the peel: short supersteps of known shapes
+    withConfs(s, AdaptiveEnabled -> "false") {
       var e = edges0.select("a", "b").localCheckpoint(true)
       var n = e.count()
       // sized AFTER the first action (the staged build may run inside it)
-      // but before the loop's shuffles; restored in the finally. FLOORED
-      // AT CORE COUNT, unlike the node-grain iterations: the wedge join
-      // amplifies far beyond edge grain (Σ deg per edge), so sizing by
-      // edges alone starved the round to 2 partitions at sf0.1 with AQE
-      // pinned off — 100 s where the per-round work is seconds (r17).
-      s.conf.set(partsKey, math.max(s.sparkContext.defaultParallelism.toLong,
-        n / 250000L).toString)
-      val maxRounds = n + 1
-      var rounds = 0
-      var converged = n == 0L
-      while (!converged) {
-        rounds += 1
-        require(rounds <= maxRounds,
-          "truss peel failed to converge — each non-final round removes " +
-            "at least one edge, so rounds are bounded by |E|; state is corrupt")
-        // round 1 runs on the FULL graph — take the staged-orientation
-        // path; the peeled remnants use the generic size-aware pass
-        val (sup, stagedAdj) = if (rounds == 1) {
-          val (s0, adjRaw) = trussSupportStaged(s, d)
-          (s0, Some(adjRaw))
-        } else (trussSupport(e, n), None)
-        val next = sup
-          .where(col("sup") >= KTrussK - 2).select("a", "b")
-          .localCheckpoint(true)
-        // the eager checkpoint above materialized the round-1 support —
-        // the staged adjacency cache has served its one purpose
-        stagedAdj.foreach(_.unpersist())
-        val m = next.count()
-        require(m <= n,
-          "truss peel grew the edge set — the peel is monotone; state is corrupt")
-        converged = m == n
-        e.unpersist()
-        e = next
-        n = m
+      // but before the loop's shuffles. FLOORED AT CORE COUNT, unlike the
+      // node-grain iterations: the wedge join amplifies far beyond edge
+      // grain (Σ deg per edge), so sizing by edges alone starved the round
+      // to 2 partitions at sf0.1 with AQE pinned off — 100 s where the
+      // per-round work is seconds (r17).
+      withConfs(s, ShufflePartitions ->
+          math.max(s.sparkContext.defaultParallelism.toLong, n / 250000L).toString) {
+        val maxRounds = n + 1
+        var rounds = 0
+        var converged = n == 0L
+        while (!converged) {
+          rounds += 1
+          require(rounds <= maxRounds,
+            "truss peel failed to converge — each non-final round removes " +
+              "at least one edge, so rounds are bounded by |E|; state is corrupt")
+          // round 1 runs on the FULL graph — take the staged-orientation
+          // path; the peeled remnants use the generic size-aware pass
+          val (sup, stagedAdj) = if (rounds == 1) {
+            val (s0, adjRaw) = trussSupportStaged(s, d)
+            (s0, Some(adjRaw))
+          } else (trussSupport(e, n), None)
+          val next = sup
+            .where(col("sup") >= KTrussK - 2).select("a", "b")
+            .localCheckpoint(true)
+          // the eager checkpoint above materialized the round-1 support —
+          // the staged adjacency cache has served its one purpose
+          stagedAdj.foreach(_.unpersist())
+          val m = next.count()
+          require(m <= n,
+            "truss peel grew the edge set — the peel is monotone; state is corrupt")
+          converged = m == n
+          e.unpersist()
+          e = next
+          n = m
+        }
+        trussSupport(e, n)
+          .select(col("a").as("part_a"), col("b").as("part_b"), col("sup"))
+          .orderBy("part_a", "part_b")
       }
-      trussSupport(e, n)
-        .select(col("a").as("part_a"), col("b").as("part_b"), col("sup"))
-        .orderBy("part_a", "part_b")
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+    }
   }
 
   /** The weighted repeat-co-purchase edge set (a, b, m = co-purchase
@@ -5993,7 +5922,7 @@ object Analytics {
     * HALVE per round, so rounds ≤ log₂|V| — the published bound — and
     * the 64-round require is provable headroom for any |V| < 2⁶⁴.
     * Lineage cut per round; AQE pinned off; shuffle partitions sized to
-    * the edge table (the [[graphConnectedComponents]] discipline). The
+    * the edge table ([[withIterationConfs]]). The
     * oracle unrolls 8 rounds — idempotent past the fixpoint (sf0.01
     * converges in 5) — each with a recursive-CTE contraction; the spec
     * re-checks the 8-round bound per tier and replays the whole forest
@@ -6001,14 +5930,7 @@ object Analytics {
     */
   def graphMst(s: SparkSession, d: String): DataFrame = {
     val we = ccWeightedEdges(s, d)
-    val edgeParts = math.max(1L, ccEdgeCount(s, d) / 500000L).toString
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partsKey, edgeParts)
-    try {
+    withIterationConfs(s, ccEdgeCount(s, d)) {
       val e = we.localCheckpoint(true)
       // node/component tables are ≤ 2|E| rows — the staged edge manifest
       // count decides the loop's join strategy once (guide §3.1; the
@@ -6124,7 +6046,7 @@ object Analytics {
         .select(col("a").as("part_a"), col("b").as("part_b"),
           col("m").as("support"), col("round_found"))
         .orderBy("part_a", "part_b")
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+    }
   }
 
   // ---------------------------------------------- strongly connected comps
@@ -6466,29 +6388,20 @@ object Analytics {
     * and each outer round provably retires the live minimum's SCC. Every
     * step is an edge-grain keyed join or node-grain aggregate — state
     * lives in DataFrames, never on the driver, and shuffle partitions are
-    * sized to the staged edge table ([[graphConnectedComponents]]'s
-    * discipline). The oracle labels the same graph INDEPENDENTLY: a
-    * recursive-CTE reachability closure intersected with its transpose —
-    * Σ|SCC|² rows, runnable only at oracle scale, which is exactly the
-    * point of the MultiStep formulation. AQE pinned off for the iteration
-    * (the [[graphBfs]] doctrine: short supersteps with known shapes).
+    * sized to the staged edge table ([[withIterationConfs]]). The oracle
+    * labels the same graph INDEPENDENTLY: a recursive-CTE reachability
+    * closure intersected with its transpose — Σ|SCC|² rows, runnable only
+    * at oracle scale, which is exactly the point of the MultiStep
+    * formulation. AQE pinned off for the iteration
+    * (short supersteps with known shapes).
     */
   def graphScc(s: SparkSession, d: String): DataFrame = {
     val edges = sccEdges(s, d)
-    // sized BEFORE any conf.set — sccEdgeCount can trigger the staged
-    // fixture build, and a throw there must not leak the pinned confs
-    // (the graphConnectedComponents ordering, r15 advisory)
-    val edgeParts = math.max(1L, sccEdgeCount(s, d) / 500000L).toString
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partsKey, edgeParts)
     val labels =
-      try sccLabels(edges,
-        tiny = sccEdgeCount(s, d) <= graphBroadcastMaxRows(s))
-      finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+      withIterationConfs(s, sccEdgeCount(s, d)) {
+        sccLabels(edges,
+          tiny = sccEdgeCount(s, d) <= graphBroadcastMaxRows(s))
+      }
     val sizes = labels.groupBy("scc").agg(count(lit(1)).as("scc_size"))
     // SCC grain ≪ node grain — broadcast the size attach
     labels.join(broadcast(sizes), "scc")
@@ -6529,9 +6442,8 @@ object Analytics {
     * aggregate + two one-row global sums — the Pregel superstep expressed
     * relationally, state always a (node, rank) table, never
     * driver-resident. AQE pinned off, shuffle partitions sized to the
-    * staged edge table, lineage cut per round (the
-    * [[graphConnectedComponents]] iteration discipline). The oracle
-    * unrolls the identical rounds as chained MATERIALIZED CTEs.
+    * staged edge table ([[withIterationConfs]]), lineage cut per round.
+    * The oracle unrolls the identical rounds as chained MATERIALIZED CTEs.
     */
   def graphPagerankFull(s: SparkSession, d: String): DataFrame = {
     val e = sccEdges(s, d)
@@ -6553,16 +6465,7 @@ object Analytics {
     */
   private def pagerankLoop(s: SparkSession, d: String, e: DataFrame,
       teleport: DataFrame): DataFrame = {
-    // sized before any conf.set (the graphScc ordering): a staged-build
-    // throw must not leak the pinned confs
-    val edgeParts = math.max(1L, sccEdgeCount(s, d) / 500000L).toString
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = s.conf.get(aqeKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsWas = s.conf.get(partsKey)
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partsKey, edgeParts)
-    try {
+    withIterationConfs(s, sccEdgeCount(s, d)) {
       // loop-invariant edge view, PRE-PARTITIONED on the per-round join
       // key and materialized once (guide §2.4: two operations keyed the
       // same way share one exchange; r18 verdict item 4): every damped
@@ -6646,7 +6549,7 @@ object Analytics {
       backing.unpersist()
       eLoop.unpersist()
       out
-    } finally { s.conf.set(aqeKey, aqeWas); s.conf.set(partsKey, partsWas) }
+    }
   }
 
   /** q_graph_ppr — PERSONALIZED PAGERANK / random walk with restart (r16,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.{AdaptiveEnabled, ShufflePartitions, withConfs}
 import graft.Tables
 import graft.functions.{Round0Expr, TextOps, VectorOps}
 import graft.streaming.Streams
@@ -567,11 +568,8 @@ object LlmData {
     // propagation round pays per-partition scheduling overhead × iteration
     // count (32 corpus-sized partitions on a 50-edge fixture graph spent
     // ~5 s on pure task dispatch)
-    val parts = math.max(1L, edges.count() / 500000L).toString
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts)
-    try dedupClusterIterate(edges)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    withConfs(s, ShufflePartitions -> Analytics.iterationParts(edges.count()))(
+      dedupClusterIterate(edges))
   }
 
   private def dedupClusterIterate(edges: DataFrame): DataFrame = {
@@ -5460,26 +5458,17 @@ object LlmData {
     * both the next frontier and the visited union, and without
     * truncation the per-hop anti-join doubles the subplan each hop —
     * so the whole walk still materializes in the single final action. */
-  /** Pin AQE off while `f` builds (and eagerly materializes) its plans:
-    * for CONTROL-PLANE-SIZED frames AQE has nothing to adapt, but its
-    * per-exchange re-planning doubles scheduler jobs (measured 57 → 28
-    * on the 6-hop walk, ~2× wall time). Checkpoints bake their physical
-    * plans at call time, so wrapping construction covers them; the
-    * session conf is restored before any corpus-scale outer plan is
-    * built. */
-  private def withAqeOff[T](spark: SparkSession)(f: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = spark.conf.get(aqeKey)
-    spark.conf.set(aqeKey, "false")
-    try f finally spark.conf.set(aqeKey, aqePrev)
-  }
-
   private def nswWalkBatch(adj: DataFrame, corpus: DataFrame,
       seeds: DataFrame, beam: Int, hops: Int,
       truncate: Boolean = true): DataFrame = {
-    // The walk's interior frames are all control-plane-sized (ef·M rows
-    // per query per hop) — see [[withAqeOff]].
-    withAqeOff(corpus.sparkSession) {
+    // AQE off while the walk builds (and eagerly materializes) its plans:
+    // the interior frames are all control-plane-sized (ef·M rows per
+    // query per hop), so AQE has nothing to adapt, but its per-exchange
+    // re-planning doubles scheduler jobs (measured 57 → 28 on the 6-hop
+    // walk, ~2× wall time). Checkpoints bake their physical plans at call
+    // time, so the pin covers them; the session conf is restored before
+    // any corpus-scale outer plan is built.
+    withConfs(corpus.sparkSession, AdaptiveEnabled -> "false") {
       def cp(df: DataFrame): DataFrame =
         if (truncate) df.localCheckpoint(false) else df
       val w = Window.partitionBy("qid").orderBy(desc("cm_micro"), asc("vec_id"))
@@ -6041,7 +6030,10 @@ object LlmData {
     * (src=batch, dst=standing, semb, demb, cm). Exposed for the spec's
     * non-vacuousness assertions. */
   private[graft] def nswInsertEdges(s: SparkSession, d: String): DataFrame =
-      withAqeOff(s) {
+      // AQE off while the plans build: the eager coarse-cell checkpoint
+      // is a control-plane-sized frame (nswInsertCents rows), which AQE
+      // has nothing to adapt on but splits into extra re-planned jobs
+      withConfs(s, AdaptiveEnabled -> "false") {
     graft.functions.GraftFunctions.register(s)
     val corpus = t(s, d, "embeddings").where(col("vec_id") =!= 0)
     val standing = corpus.where(!expr(nswInsertBatchCond))

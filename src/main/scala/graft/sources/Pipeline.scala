@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.{PartitionOverwriteMode, withConfs}
 import graft.operators.Det
 
 /** The reference pipeline re-expressed in-engine (SURVEY.md §2A →
@@ -320,15 +321,13 @@ object PipelineIngest {
       .select(col("event_id"), col("event_type"), col("value"),
         to_date(col("ts")).as("day"))
     ev.write.mode("overwrite").partitionBy("day").parquet(out)
-    val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    withConfs(s, PartitionOverwriteMode -> "dynamic") {
       // corrected re-extract of the max day only (broadcast one-row scalar)
       ev.join(broadcast(ev.agg(max(col("day")).as("mx"))), col("day") === col("mx"))
         .drop("mx")
         .withColumn("value", col("value") * 2)
         .write.mode("overwrite").partitionBy("day").parquet(out)
-    } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    }
     s.read.parquet(out)
       .groupBy("day")
       .agg(count(lit(1)).as("n"), sumExact(col("value"), 2).as("sum_value"))

@@ -6,6 +6,8 @@ import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.{PartitionOverwriteMode, withConfs}
+
 /** The two reference DAGs composed as one runnable driver program — the
   * chain the reference declares at script-dag-dock-report:263-269
   * (`auth >> request >> ticket >> sense >> transfer >> unzip >> ingest`)
@@ -125,15 +127,13 @@ object PipelineMain extends Logging {
     val ev = graft.Tables(s, sfDir, "events")
       .select(col("event_id"), col("event_type"), col("value"),
         to_date(col("ts")).as("day"))
-    val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    withConfs(s, PartitionOverwriteMode -> "dynamic") {
       (0 until nDays).map(from.plusDays(_)).foreach { day =>
         logInfo(s"backfill: landing $day into $out")
         ev.where(col("day") === lit(java.sql.Date.valueOf(day)))
           .write.mode("overwrite").partitionBy("day").parquet(out)
       }
-    } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    }
     // ONE audit shape for both exits — a schema change cannot silently
     // diverge the empty-range result from the normal one
     def audit(df: DataFrame): DataFrame = df

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery, Trigger}
 
+import graft.GraftSession.{PartitionOverwriteMode, ShufflePartitions, withConfs}
 import graft.Tables
 import graft.functions.Round0Expr
 import graft.operators.Det
@@ -288,19 +289,15 @@ object Streams {
     * Default 4 locally (r11: measured ~7% family-wide and ~15% on the
     * stream-stream joins vs 8 — the per-batch store lifecycles are the
     * floor's biggest term); deployments with hundred-GB state raise it
-    * (env override).
+    * here.
     */
-  private def streamStateParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4")
+  private val StreamStateParts = "4"
 
   /** Run `body` with shuffle partitions (→ state partitions) sized for
-    * streaming state; restore the batch setting after.
+    * streaming state; the batch setting is restored after.
     */
-  private def withStreamParts[T](s: SparkSession)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamStateParts)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private def withStreamParts[T](s: SparkSession)(body: => T): T =
+    withConfs(s, ShufflePartitions -> StreamStateParts)(body)
 
   /** Streaming read of the events fixture (schema and both physical ts
     * encodings exactly as in [[graft.Tables]]).
@@ -506,17 +503,9 @@ object Streams {
     */
   private[graft] def startQuery(s: SparkSession, confs: (String, String)*)(
       start: => StreamingQuery): StreamingQuery = {
-    val pinned =
-      ("spark.sql.streaming.checkpointFileManagerClass" -> FsCheckpointManager) +: confs
-    val was = pinned.map { case (k, _) => k -> s.conf.getOption(k) }
-    val q =
-      try {
-        pinned.foreach { case (k, v) => s.conf.set(k, v) }
-        start
-      } finally was.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+    val q = withConfs(s,
+      ("spark.sql.streaming.checkpointFileManagerClass" -> FsCheckpointManager) +:
+        confs: _*)(start)
     lastCheckpointManager =
       try {
         val se = q.getClass.getMethod("streamingQuery").invoke(q)
@@ -1394,11 +1383,8 @@ object Streams {
     */
   def streamStatefulTws(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(s, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       runStagedBatches(s,
         src => src
           .withWatermark("ts", "10 minutes")
@@ -1414,9 +1400,6 @@ object Streams {
           expr("timestamp_micros(end_us)").as("session_end"),
           col("n_events"), col("total_value"))
         .orderBy("user_id", "session_start")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 
@@ -1624,13 +1607,11 @@ object Streams {
         src.writeStream
           .option("checkpointLocation", base.resolve("checkpoint").toString)
           .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-            val spark = batch.sparkSession
-            val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try batch
-              .withColumn("day", to_date(col("ts"))).drop("ts")
-              .write.mode("overwrite").partitionBy("day").parquet(dataDir)
-            finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            withConfs(batch.sparkSession, PartitionOverwriteMode -> "dynamic") {
+              batch
+                .withColumn("day", to_date(col("ts"))).drop("ts")
+                .write.mode("overwrite").partitionBy("day").parquet(dataDir)
+            }
           }
           .start()
       }

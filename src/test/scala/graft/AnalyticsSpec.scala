@@ -3387,4 +3387,28 @@ class AnalyticsSpec extends AnyFunSuite {
         }
       }
   }
+
+  test("every key that pins a session conf leaves the session's confs as it found them") {
+    // each of these runs a block under GraftSession.withConfs: the graph
+    // and ER iterations, the NSW walk, the dedup-cluster sizing, the
+    // streaming state-store and overwrite-mode pins, the partition upsert
+    val pinning = Seq("q_graph_bfs", "q_er_resolve", "q_graph_louvain_full",
+      "q_graph_connected_components", "q_graph_cc_incremental", "q_graph_coreness",
+      "q_graph_betweenness", "q_graph_closeness", "q_graph_landmark_dist",
+      "q_graph_neighborhood", "q_graph_sssp", "q_graph_ktruss", "q_graph_mst",
+      "q_graph_scc", "q_graph_pagerank_full", "q_graph_ppr", "q_dedup_cluster",
+      "q_simsearch_nsw_insert", "q_stream_stateful_tws", "q_stream_foreach_upsert",
+      "q_upsert_partition")
+    val f = s.newSession()
+    val keys = Seq(GraftSession.AdaptiveEnabled, GraftSession.ShufflePartitions,
+      GraftSession.PartitionOverwriteMode)
+    def snapshot = keys.map(k => k -> f.conf.getAll.get(k))
+    val before = snapshot
+    val leaks = pinning.flatMap { q =>
+      SparkEntry.queries(q)(f, d).collect()
+      val after = snapshot
+      Option.when(after != before)(s"$q: $before -> $after")
+    }
+    assert(leaks.isEmpty, leaks.mkString("\n"))
+  }
 }

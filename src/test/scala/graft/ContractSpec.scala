@@ -209,4 +209,33 @@ class ContractSpec extends AnyFunSuite {
     assert(noOracle.subsetOf(allowedNoOracle),
       s"queries missing an oracle without justification: ${noOracle -- allowedNoOracle}")
   }
+
+  test("session confs change only through GraftSession") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    val sources: Seq[Path] =
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList.sorted
+      finally walk.close()
+    val lines = sources.map(p => p -> Files.readAllLines(p).asScala.toIndexedSeq)
+    // Tables.eventsRead sets the events scan confs on purpose and leaves
+    // them set: the read it serves is lazy and plans after it returns
+    def inEventsRead(p: Path, ls: IndexedSeq[String], i: Int): Boolean =
+      p.getFileName.toString == "Tables.scala" && {
+        val start = ls.indexWhere(_.contains("def eventsRead("))
+        start >= 0 && i > start && i < ls.indexWhere(_ == "  }", start)
+      }
+    val setter = raw"\.conf\.(set|unset)\(".r
+    val stray = for {
+      (p, ls) <- lines
+      (l, i) <- ls.zipWithIndex
+      if setter.findFirstIn(l).isDefined
+      if p.getFileName.toString != "GraftSession.scala" && !inEventsRead(p, ls, i)
+    } yield s"$p:${i + 1}: ${l.trim}"
+    assert(stray.isEmpty,
+      s"set or unset session confs through GraftSession.withConfs:\n${stray.mkString("\n")}")
+    val aqeLiterals = lines.map(_._2.count(_.contains("\"spark.sql.adaptive.enabled\""))).sum
+    assert(aqeLiterals === 1, "the AQE key is spelled once, in GraftSession")
+  }
 }

@@ -1805,10 +1805,8 @@ class LlmDataSpec extends AnyFunSuite {
     // REAL, and the executed plan is asserted broadcast-free to prove it.
     val broadcastPath = LlmData.dedupIncremental(s, d).collect().map(_.toSeq).toSeq
     val threshKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = s.conf.get(threshKey)
     val shufflePath =
-      try {
-        s.conf.set(threshKey, "-1")
+      try GraftSession.withConfs(s, threshKey -> "-1") {
         // memoized frames embed their materialization-time physical plan
         // in the executed-plan dump (InMemoryRelation keeps the cached
         // plan it was built with, broadcast joins included) — clear them
@@ -1823,7 +1821,6 @@ class LlmDataSpec extends AnyFunSuite {
           "bound-0 path must execute a genuine shuffle join")
         rows
       } finally {
-        s.conf.set(threshKey, prev)
         // drop the SMJ-planned caches so later tests rebuild under the
         // restored default conf
         LlmData.clearMemo(s)

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSession.withConfs
 import graft.operators.{Relational, Scalars}
 
 /** Plan-shape assertions (SURVEY.md §4/§5 item 5): the efficiency claims —
@@ -65,9 +66,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("q_join_bucketed joins without shuffling either side (bucket co-location)") {
     // disable broadcast so the join must pick SMJ — the point is that the
     // bucketed layout satisfies its distribution requirement with NO exchange
-    val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = Relational.joinBucketed(s, d)
       val p = plan(df)
       val joinIdx = p.indexOf("SortMergeJoin")
@@ -76,7 +75,7 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(!p.substring(joinIdx).contains("Exchange hashpartitioning"),
         s"bucketed join still shuffles a side:\n$p")
       assert(p.contains("SelectedBucketsCount"), s"not a bucketed scan:\n$p")
-    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q_sample_stratified shares one lang exchange across windows and aggregate, prunes text") {
@@ -112,9 +111,7 @@ class PlanShapeSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     // AQE wraps stages in leaf QueryStageExec nodes that a tree walk can't
     // cross; disable it so the executed plan is the full static tree
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    try {
-      s.conf.set("spark.sql.adaptive.enabled", "false")
+    withConfs(s, "spark.sql.adaptive.enabled" -> "false") {
       val df = Relational.joinBloomPruned(s, d)
       val p = plan(df)
       assert(p.contains("graft_bloom_contains"), s"no bloom probe in plan:\n$p")
@@ -128,7 +125,7 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(exchanges.exists(_.children.exists(
           _.toString.contains("graft_bloom_contains"))),
         s"bloom probe not below any shuffle exchange (rows shuffle unpruned):\n$p")
-    } finally s.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 
   test("q_topk_per_key plans two-phase bounded heaps: no Window, no pre-shuffle Sort") {
@@ -408,11 +405,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // the shuffle plan a corpus-scale input would use, and AQE so the
     // static tree carries the ShuffleExchangeExec nodes (AQE's pre-
     // preparation inputPlan predates EnsureRequirements — no exchanges yet)
-    val prevB = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevA = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConfs(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
       val df = graft.operators.LlmData.dedupSimhash(s, d)
       val root = df.queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.inputPlan
@@ -430,9 +424,6 @@ class PlanShapeSpec extends AnyFunSuite {
           !e.child.output.exists(a => Set("text", "tok", "toks").contains(a.name)),
           s"band exchange carries payload columns: ${e.child.output.mkString(", ")}")
       }
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      s.conf.set("spark.sql.adaptive.enabled", prevA)
     }
   }
 
@@ -457,11 +448,8 @@ class PlanShapeSpec extends AnyFunSuite {
   test("q_text_containment's shingle-keyed exchanges carry index rows, not document text") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val prevB = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevA = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConfs(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
       val df = graft.operators.LlmData.textContainment(s, d)
       val root = df.queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.inputPlan
@@ -478,9 +466,6 @@ class PlanShapeSpec extends AnyFunSuite {
           !e.child.output.exists(a => Set("text", "shs").contains(a.name)),
           s"shingle exchange carries payload: ${e.child.output.mkString(", ")}")
       }
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      s.conf.set("spark.sql.adaptive.enabled", prevA)
     }
   }
 
@@ -496,9 +481,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
+    withConfs(s, confs.toSeq: _*) {
       val sel = Tables(s, d, "orders").where(col("o_orderpriority") === "1-URGENT")
       val j = Tables(s, d, "lineitem")
         .join(sel, col("l_orderkey") === col("o_orderkey"))
@@ -508,8 +491,6 @@ class PlanShapeSpec extends AnyFunSuite {
         s"no bloom filter built on the selective side:\n$p")
       assert(p.contains("might_contain"),
         s"no bloom probe applied to the fact side:\n$p")
-    } finally prev.foreach { case (k, v) =>
-      v match { case Some(x) => s.conf.set(k, x); case None => s.conf.unset(k) }
     }
   }
 
@@ -569,10 +550,8 @@ class PlanShapeSpec extends AnyFunSuite {
     val small = o.where(col("o_orderkey") % 500 === 0)
       .select(col("o_orderkey").as("k"))
     val li = Tables(s, d, "lineitem")
-    val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // static planning must NOT broadcast (threshold off) …
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // static planning must NOT broadcast (threshold off) …
+    withConfs(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // … but AQE's runtime re-plan may (its own threshold left at default)
       val df = li.join(small, li("l_orderkey") === small("k"))
         .agg(count(lit(1)).as("n"))
@@ -581,7 +560,7 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(p.contains("AQEShuffleRead") || p.contains("BroadcastHashJoin"),
         s"AQE did not re-plan the tiny filtered side:\n$p")
       assert(p.contains("isFinalPlan=true"))
-    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q_dq_benford reads orders exactly once") {
@@ -808,9 +787,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val keys = Seq("spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> "2",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val was = keys.map { case (k, _) => k -> s.conf.get(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+    withConfs(s, keys: _*) {
       val p = plan(graft.operators.Analytics.ssspStepShuffledForTest(s, d))
       val vExchanges = p.linesIterator
         .count(l => l.contains("Exchange hashpartitioning(v#"))
@@ -818,7 +795,7 @@ class PlanShapeSpec extends AnyFunSuite {
         s"expected exactly 1 v-keyed exchange (the distance side), got $vExchanges:\n$p")
       assert(p.contains("Scan ExistingRDD"),
         s"the edge side should read the checkpointed partitioning:\n$p")
-    } finally was.foreach { case (k, v) => s.conf.set(k, v) }
+    }
   }
 
   test("q_graph_neighborhood: the sketch round plans keyed equi joins only") {
