@@ -15,8 +15,10 @@ import graft.operators.Det
   *
   * Scale design: `binaryFile` scans distribute archives across executors;
   * [[Zip.unzip]] streams entries inside `flatMap` so peak memory per task is
-  * one decompressed entry; parsing/validation are codegen'd column ops; the
-  * day-partitioned write is the reference's daily landing layout
+  * one decompressed entry; the same decompressing task splits each line
+  * once into its three fields, and validation (Spark's `try_cast` and a
+  * day pattern) runs as codegen'd column ops; the day-partitioned write is
+  * the reference's daily landing layout
   * (script-dag-dock-report:59) and enables partition pruning downstream. The
   * Lambda fan-out of the reference (script-dag-dock-report:209-216) becomes
   * ordinary task parallelism.
@@ -48,48 +50,72 @@ object PipelineIngest {
   /** The decompress→parse→validate→land→re-read core of the ingest flow,
     * over any landed directory (also the final stage of
     * [[PipelineMain.runReportDag]], where the input is the transferred copy
-    * rather than the original landing).
+    * rather than the original landing). One job lands the day; the
+    * read-back passes the schema it just wrote, so it infers nothing.
     */
   def ingestLanding(s: SparkSession, landingDir: String, out: String): DataFrame = {
     graft.GraftSession.adopt(s)
+    val parsed = parseLanding(s, landingDir)
+    // idempotent overwrite (replace=True, script-dag-dock-report:172),
+    // day-partitioned like the reference's daily cadence
+    parsed.write.mode("overwrite").partitionBy("day").parquet(out)
+
+    s.read.schema(parsed.schema).parquet(out)
+      .groupBy("day")
+      .agg(count(lit(1)).as("n"), sumExact(col("amount"), 2).as("sum_amount"))
+      // one row per day: sorted in one task, not by a range shuffle that
+      // costs a sampling job and a stage
+      .coalesce(1).sortWithinPartitions("day")
+  }
+
+  /** The valid rows (id, day, amount) of every `*.zip` archive under
+    * `landingDir`. The decompressing task splits each line once and keeps
+    * its first three fields; a line with fewer than three fields (a short
+    * row, a blank line) is malformed and dropped there. The fields are then
+    * checked with Spark's own `try_cast` and a day pattern, so the kept rows
+    * are exactly those of `split(line, ",")` + `try_cast` on every line that
+    * has three or more fields.
+    */
+  def parseLanding(s: SparkSession, landingDir: String): DataFrame = {
     import s.implicits._
     // list_filter_suffix: only *.zip, the README.txt decoy is skipped
     val archives = s.read.format("binaryFile")
       .option("pathGlobFilter", "*.zip").load(landingDir)
 
     // fanout_invoke → in-engine: stream-decompress each archive in parallel
-    val lines = archives.select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) =>
-        Zip.unzip(bytes).flatMap { case (entry, data) =>
-          new String(data, UTF_8).linesIterator.drop(1).map(line => (entry, line))
+    val fields = archives.select(col("content")).as[Array[Byte]]
+      .flatMap { bytes =>
+        Zip.unzip(bytes).flatMap { case (_, data) =>
+          new String(data, UTF_8).linesIterator.drop(1).flatMap(firstThreeFields)
         }
       }
-      .toDF("entry", "line")
+      .toDF("id", "day", "amount")
 
-    // parse + fail-fast validation (null-checked like the reference's
-    // extract-and-raise, script-dag-dock-report:75-76): malformed rows drop
-    val parsed = lines
-      .withColumn("parts", split(col("line"), ","))
+    // fail-fast validation (null-checked like the reference's
+    // extract-and-raise, script-dag-dock-report:75-76): malformed rows drop.
+    // try_cast: malformed values become NULL for the validation filter
+    // (ANSI-mode cast would fail the whole job on one bad row)
+    fields
       .select(
-        // try_cast: malformed values become NULL for the validation filter
-        // (ANSI-mode cast would fail the whole job on one bad row)
-        expr("try_cast(parts[0] AS BIGINT)").as("id"),
-        col("parts").getItem(1).as("day"),
-        expr("try_cast(parts[2] AS DOUBLE)").as("amount"))
+        expr("try_cast(id AS BIGINT)").as("id"),
+        col("day"),
+        expr("try_cast(amount AS DOUBLE)").as("amount"))
       .where(col("id").isNotNull &&
         col("day").rlike("^\\d{4}-\\d{2}-\\d{2}$") &&
         col("amount").isNotNull)
+  }
 
-    // idempotent overwrite (replace=True, script-dag-dock-report:172),
-    // day-partitioned like the reference's daily cadence
-    parsed.write.mode("overwrite").partitionBy("day").parquet(out)
-
-    s.read.parquet(out)
-      .withColumn("day", col("day").cast("string"))
-      .groupBy("day")
-      .agg(count(lit(1)).as("n"), sumExact(col("amount"), 2).as("sum_amount"))
-      .orderBy("day")
+  /** The first three fields of `line` split on every comma, as
+    * `split(line, ",")[0..2]`, or None when it has fewer than three. */
+  private def firstThreeFields(line: String): Option[(String, String, String)] = {
+    val c1 = line.indexOf(',')
+    val c2 = if (c1 < 0) -1 else line.indexOf(',', c1 + 1)
+    if (c2 < 0) None
+    else {
+      val c3 = line.indexOf(',', c2 + 1)
+      Some((line.substring(0, c1), line.substring(c1 + 1, c2),
+        line.substring(c2 + 1, if (c3 < 0) line.length else c3)))
+    }
   }
 
   /** q_ingest_json — the REST-response field-extraction stage as a query:

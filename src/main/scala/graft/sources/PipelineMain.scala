@@ -59,15 +59,10 @@ object PipelineMain extends Logging {
     // transfer_file: distributed copy + in-engine integrity proof; a
     // checksum mismatch aborts the run before ingest sees a byte
     val transferred = workDir.resolve("transferred")
-    val integrity = Transfer.transferDir(s, landing.toString, transferred.toString)
-    // NULL-safe gate: a full_outer row where the file exists on only one
-    // side has NULL match flags — `!NULL` is NULL and a plain WHERE drops
-    // it, counting a MISSING file as not-broken; anything not provably
-    // matched is broken
-    val broken = integrity
-      .where(not(col("bytes_match") <=> true) ||
-        not(col("checksum_match") <=> true)).count()
-    require(broken == 0, s"$broken file(s) failed transfer integrity")
+    val broken = Transfer.unproven(
+      Transfer.transferDir(s, landing.toString, transferred.toString))
+    require(broken.isEmpty,
+      s"${broken.size} file(s) failed transfer integrity: ${broken.mkString(", ")}")
 
     PipelineIngest.ingestLanding(s, transferred.toString,
       workDir.resolve("report_out").toString)
@@ -141,16 +136,16 @@ object PipelineMain extends Logging {
       .agg(count(lit(1)).as("n"),
         sum(round(col("value") * 100, 0)).cast("long").as("sum_cents"))
       .withColumn("day", col("day").cast("string"))
-      .orderBy("day")
-    // a range whose every day landed zero rows leaves no parquet footer to
-    // infer a schema from (or no lake dir at all) — that is the documented
-    // all-days-empty no-op, so return the empty audit instead of letting
-    // the read throw
-    try audit(s.read.parquet(out))
+      // one row per day: sorted in one task, not by a range shuffle
+      .coalesce(1).sortWithinPartitions("day")
+    // the read-back passes the schema just written, so it runs no
+    // schema-inference job; a range whose every day landed zero rows may
+    // leave no lake dir at all — the documented all-days-empty no-op — so
+    // return the empty audit instead of letting the read throw
+    try audit(s.read.schema(ev.schema).parquet(out))
     catch {
       case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("Unable to infer schema") ||
-            e.getMessage.contains("Path does not exist") =>
+          if e.getMessage.contains("Path does not exist") =>
         audit(ev.limit(0))
     }
   }

@@ -225,17 +225,23 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("transferDir copies to a NON-file scheme resolved from the session Hadoop conf") {
-    // a second FileSystem scheme, registered ONLY in the session conf — the
-    // copy tasks must resolve graftfs:// through the propagated session
-    // configuration (a default `new Configuration()` on the executor would
-    // throw UnsupportedFileSystemException)
-    s.sparkContext.hadoopConfiguration.set("fs.graftfs.impl", classOf[GraftTestFs].getName)
+    // a second FileSystem scheme, registered ONLY in a fresh session's conf
+    // (uncached, so no FileSystem instance outlives the test) — the copy
+    // tasks and the destination listing must resolve graftfs:// through the
+    // propagated session configuration (the SparkContext's JVM-wide conf,
+    // or a default `new Configuration()` on the executor, would throw
+    // UnsupportedFileSystemException)
+    val f = s.newSession()
+    f.conf.set("fs.graftfs.impl", classOf[GraftTestFs].getName)
+    f.conf.set("fs.graftfs.impl.disable.cache", "true")
     val tmp = Fixtures.tempDirCleanedAtExit("graft_xfs_")
     val srcDir = Files.createDirectory(tmp.resolve("src"))
     val payloads = Map("a.bin" -> "alpha-bytes", "b.bin" -> "beta-bytes")
     payloads.foreach { case (n, c) => Files.write(srcDir.resolve(n), c.getBytes) }
     val dst = s"graftfs://${tmp.resolve("dst")}"
-    val rows = graft.sources.Transfer.transferDir(s, srcDir.toString, dst).collect()
+    val rows = graft.sources.Transfer.transferDir(f, srcDir.toString, dst).collect()
+    assert(s.sparkContext.hadoopConfiguration.get("fs.graftfs.impl") === null,
+      "the scheme must not leak into the JVM-wide conf")
     assert(rows.length === 2)
     rows.foreach { r =>
       assert(r.getAs[Boolean]("bytes_match") && r.getAs[Boolean]("checksum_match"),

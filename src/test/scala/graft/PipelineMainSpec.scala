@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SessionArtifacts, SparkSession}
+import org.apache.spark.sql.{DataFrame, SessionArtifacts, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -85,6 +85,125 @@ class PipelineMainSpec extends AnyFunSuite {
     assert(got.toSeq === want)
     // the transfer stage really ran: the transferred copy is on disk
     assert(Files.exists(workDir.resolve("transferred").resolve("balance_00.zip")))
+  }
+
+  /** Runs the report DAG on `f` with `stale` pre-landed in the transfer
+    * destination and returns the gate's failure message, asserting that
+    * the ingest never started. */
+  private def gateFailure(f: SparkSession, stale: Option[String]): String = {
+    val landing = Zip.landingFixtures()
+    val workDir = Fixtures.tempDirCleanedAtExit("graft_gate_")
+    stale.foreach { n =>
+      Files.createDirectories(workDir.resolve("transferred"))
+      Files.write(workDir.resolve("transferred").resolve(n), "stale".getBytes)
+    }
+    val e = intercept[IllegalArgumentException] {
+      withStubApi(landing) { base =>
+        PipelineMain.runReportDag(f, new JdkHttpTransport(), base,
+          "client", "secret", landing, workDir,
+          java.time.LocalDate.of(2024, 1, 5), retryDelayMs = 10)
+      }
+    }
+    assert(!Files.exists(workDir.resolve("report_out")), "ingest ran past a failed gate")
+    e.getMessage
+  }
+
+  test("the integrity gate fails the report DAG on a stale destination-only file") {
+    val msg = gateFailure(s, stale = Some("balance_99.zip"))
+    assert(msg.contains("1 file(s) failed transfer integrity"), msg)
+  }
+
+  test("the integrity gate fails the report DAG when the destination lands other bytes") {
+    // every file the copy writes through this session lands with its
+    // first byte flipped
+    val f = s.newSession()
+    f.conf.set("fs.file.impl", classOf[FlipOnWriteFs].getName)
+    f.conf.set("fs.file.impl.disable.cache", "true")
+    val msg = gateFailure(f, stale = None)
+    // all five landed files (4 archives + README) differ in content only
+    assert(msg.contains("5 file(s) failed transfer integrity"), msg)
+  }
+
+  test("transferDir flags a destination-only file with NULL matches") {
+    val landing = Zip.landingFixtures()
+    val dst = Fixtures.tempDirCleanedAtExit("graft_stray_").resolve("dst")
+    Files.createDirectories(dst)
+    Files.write(dst.resolve("zz_stray.bin"), "x".getBytes)
+    Files.write(dst.resolve("_hidden"), "x".getBytes) // Spark's hidden-file rule
+    val rows = Transfer.transferDir(s, landing.toString, dst.toString).collect()
+      .map(r => (r.getString(0), Option(r.get(1)), Option(r.get(2)))).toSeq
+    assert(rows === (Seq("README.txt") ++ (0 until 4).map(i => f"balance_$i%02d.zip"))
+      .sorted.map(n => (n, Some(true), Some(true))) :+ (("zz_stray.bin", None, None)))
+  }
+
+  test("report DAG stages keep their job budgets on the landing fixtures") {
+    val landing = Zip.landingFixtures()
+    val work = Fixtures.tempDirCleanedAtExit("graft_budget_")
+    val transferred = work.resolve("transferred").toString
+    // the stages of runReportDag after the sensor, in its order
+    val transfer = TestSpark.ran(s) {
+      assert(Transfer.unproven(Transfer.transferDir(s, landing.toString, transferred)).isEmpty)
+    }
+    var landed: DataFrame = null
+    val ingest = TestSpark.ran(s) {
+      landed = PipelineIngest.ingestLanding(s, transferred, work.resolve("out").toString)
+    }
+    val readBack = TestSpark.ran(s)(landed.collect())
+    assert(transfer.jobs === 1, "copy, integrity proof and gate run as one job")
+    assert(ingest.jobs === 1, "the ingest lands the day in one job")
+    assert(readBack.jobs === 2, "the per-day aggregate reads back in a map stage and a result")
+    val inferring = (ingest.callSites ++ readBack.callSites).filter(_.contains("inferSchema"))
+    assert(inferring.isEmpty, s"the read-back inferred a schema:\n${inferring.mkString("\n")}")
+    // the backfill's read-back passes its schema too
+    val backfill = TestSpark.ran(s) {
+      PipelineMain.backfillDays(s, TestSpark.sf, work.resolve("lake").toString,
+        java.time.LocalDate.of(1990, 1, 1), 1).collect()
+    }
+    assert(!backfill.callSites.exists(_.contains("inferSchema")),
+      "the backfill read-back inferred a schema")
+  }
+
+  test("ingest drops short, blank and malformed lines; keeps what split + try_cast keeps") {
+    val lines = Seq(
+      "1,2024-01-01,1.50",
+      "2,2024-01-01",                   // short: two fields
+      "",                               // blank
+      "3,2024-01-01,2.25",
+      "4,2024-01-01,3.00,",             // trailing comma: four fields, kept
+      "5,2024-01-01,",                  // trailing comma: empty amount
+      ",,",                             // three empty fields
+      " 6 ,2024-01-01, 4.50 ",          // whitespace-padded numbers
+      "7, 2024-01-01,1.00",             // whitespace-padded day
+      "8,2024-01-02,5.5,extra,fields",
+      "\u0669,2024-01-01,1.00",          // Arabic-Indic digit nine
+      "9,２０２４-01-01,1.00",           // fullwidth digits in the day
+      "10,2024-01-01,\uFF11.5",          // fullwidth digit in the amount
+      "11,2024-01-01,1e3",
+      "12,2024-01-01,-0.5",
+      "x13,2024-01-01,1.00",
+      "14,2024-01-01,notanumber",
+      "é,ü,ß",
+      "15")
+    val dir = Fixtures.tempDirCleanedAtExit("graft_short_")
+    Files.write(dir.resolve("day.zip"),
+      Zip.zip(Seq(("day.csv", ("id,day,amount" +: lines).mkString("\n").getBytes("UTF-8")))))
+    import s.implicits._
+    val want = lines.toDF("line")
+      .withColumn("parts", split(col("line"), ","))
+      .where(size(col("parts")) >= 3)
+      .select(expr("try_cast(parts[0] AS BIGINT)").as("id"), col("parts")(1).as("day"),
+        expr("try_cast(parts[2] AS DOUBLE)").as("amount"))
+      .where(col("id").isNotNull && col("day").rlike("^\\d{4}-\\d{2}-\\d{2}$") &&
+        col("amount").isNotNull)
+      .as[(Long, String, Double)].collect().toSeq
+    val got = PipelineIngest.parseLanding(s, dir.toString)
+      .as[(Long, String, Double)].collect().toSeq
+    assert(got.sortBy(_._1) === want.sortBy(_._1))
+    assert(got.map(_._1).sorted === Seq(1L, 3L, 4L, 6L, 8L, 11L, 12L))
+    // the whole ingest lands them under ANSI mode instead of failing
+    val days = PipelineIngest.ingestLanding(s, dir.toString, dir.resolve("out").toString)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(days === Seq(("2024-01-01", 6L), ("2024-01-02", 1L)))
   }
 
   test("statements DAG fans out per account and senses every landed file") {
@@ -176,4 +295,29 @@ class PipelineMainSpec extends AnyFunSuite {
     assert(audit.columns.toSeq === Seq("day", "n", "sum_cents"))
     assert(audit.count() === 0L)
   }
+}
+
+/** The local filesystem, except that every file it creates lands with its
+  * first byte flipped: a destination that corrupts what it is sent. */
+class FlipOnWriteFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  private def flipFirst(out: java.io.OutputStream): java.io.OutputStream =
+    new java.io.FilterOutputStream(out) {
+      private var first = true
+      override def write(b: Int): Unit = {
+        out.write(if (first) b ^ 1 else b)
+        first = false
+      }
+      override def write(b: Array[Byte], off: Int, len: Int): Unit =
+        if (first && len > 0) {
+          write(b(off) & 0xff)
+          out.write(b, off + 1, len - 1)
+        } else out.write(b, off, len)
+    }
+  override protected def createOutputStream(f: org.apache.hadoop.fs.Path,
+      append: Boolean): java.io.OutputStream =
+    flipFirst(super.createOutputStream(f, append))
+  override protected def createOutputStreamWithMode(f: org.apache.hadoop.fs.Path,
+      append: Boolean, permission: org.apache.hadoop.fs.permission.FsPermission)
+      : java.io.OutputStream =
+    flipFirst(super.createOutputStreamWithMode(f, append, permission))
 }

@@ -563,6 +563,12 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("the landing ingest splits each line in the decompressing task, not in the plan") {
+    val p = sources.PipelineIngest.parseLanding(s, sources.Zip.landingFixtures().toString)
+      .queryExecution.optimizedPlan.toString
+    assert(!p.contains("split("), s"the optimized ingest plan splits lines:\n$p")
+  }
+
   test("q_dq_benford reads orders exactly once") {
     val p = plan(operators.Quality.dqBenford(s, d))
     val scans = p.linesIterator.count(l =>

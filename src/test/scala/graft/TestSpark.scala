@@ -16,11 +16,12 @@ object TestSpark {
   val sf: String = "/root/testdata/sf0.001"
 
   /** What a block ran: its jobs, the stages those jobs executed (skipped
-    * stages excluded), the executed plan of every query it ran on `s`, and
-    * the generated classes Janino compiled meanwhile with their compile
-    * time (JVM-wide counters, so they also count other threads). */
+    * stages excluded), the executed plan of every query it ran on `s`, the
+    * generated classes Janino compiled meanwhile with their compile time
+    * (JVM-wide counters, so they also count other threads), and each job's
+    * long call site (the stack that started it). */
   final case class Ran(jobs: Int, stages: Int, plans: Seq[String], compiles: Long,
-      compileMs: Double)
+      compileMs: Double, callSites: Seq[String])
 
   /** Runs `body` on session `s` and reports what it ran, read after the
     * listener bus has delivered every event. Jobs are matched by a local
@@ -33,10 +34,12 @@ object TestSpark {
     val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val stages = new java.util.concurrent.atomic.AtomicInteger
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val callSites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(key) == tag) {
           jobs.incrementAndGet()
+          e.stageInfos.headOption.foreach(st => callSites.add(st.details))
           e.stageIds.foreach(stageIds.add)
         }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
@@ -64,6 +67,6 @@ object TestSpark {
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
     import scala.jdk.CollectionConverters._
-    Ran(jobs.get, stages.get, plans.asScala.toSeq, compiles, compileMs)
+    Ran(jobs.get, stages.get, plans.asScala.toSeq, compiles, compileMs, callSites.asScala.toSeq)
   }
 }
