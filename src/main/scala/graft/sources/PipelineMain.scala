@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.GraftSession.{PartitionOverwriteMode, withConfs}
 
@@ -68,10 +69,10 @@ object PipelineMain extends Logging {
       workDir.resolve("report_out").toString)
   }
 
-  /** Statements DAG: authenticate once, fan the statement request out over
-    * the account list (script-dag-dock-statements.py:240-245 runs one task
-    * per account), sense each produced file. Returns one row per account
-    * with the landed file and its size — the DAG's terminal state.
+  /** Statements DAG: fan the statement request out over the account list
+    * (script-dag-dock-statements.py:240-245 runs one task per account),
+    * re-authenticating in every attempt, and sense each produced file.
+    * Returns one row per account id, in order, with its file and size.
     */
   def runStatementsDag(s: SparkSession, http: HttpTransport, baseUrl: String,
       clientId: String, secret: String, accountIds: Seq[String],
@@ -91,26 +92,25 @@ object PipelineMain extends Logging {
         s"statements file $file for $acct did not appear")
       (acct, file, Files.size(landing.resolve(file)))
     }
-    landed.toDF("account_id", "file", "bytes").orderBy("account_id")
+    // Spark's string order (UTF-8 bytes, not String's UTF-16), sorted on the
+    // driver so the frame stays local and returning it runs no sort job
+    landed.sortBy(r => UTF8String.fromString(r._1)).toDF("account_id", "file", "bytes")
   }
 
   /** BACKFILL driver — the operational piece the reference leaves switched
     * off (`catchup=False`, script-dag-dock-report:228): deliberately re-land
-    * a closed date range, one day per run. Semantics mirror what an Airflow
-    * backfill with `max_active_runs=1` (script-dag-dock-report:229) would
-    * do over the per-day `replace=True` landing the reference's loader uses:
+    * a closed date range, leaving the lake as an Airflow backfill with
+    * `max_active_runs=1` (script-dag-dock-report:229) over the reference's
+    * per-day `replace=True` landing would:
     *
-    *  - STRICTLY SEQUENTIAL — one day's run completes (lands and is
-    *    readable) before the next starts; no two runs write concurrently.
-    *    Within each run the landing itself is fully distributed; it is the
-    *    RUNS that serialize, exactly like `max_active_runs=1`.
-    *  - PARTITION-SCOPED — each run is a dynamic-partition overwrite
-    *    carrying exactly one day, so it replaces that day and cannot touch
-    *    any other (the `q_upsert_partition` primitive in a loop).
+    *  - ONE WRITE — the range lands as one dynamic-partition overwrite: one
+    *    job, one scan of `events`. If it fails, no day lands (one run per
+    *    day kept the days before a failure); re-run the range.
+    *  - PARTITION-SCOPED — it replaces exactly the days with source rows in
+    *    the range (the `q_upsert_partition` primitive); every other day,
+    *    in the range or not, keeps its files.
     *  - IDEMPOTENT — re-running any subrange overwrites those days with
-    *    identical content; a day with no source rows is a no-op run (the
-    *    dynamic overwrite of an empty frame replaces nothing), matching a
-    *    scheduler firing on a day with no data.
+    *    identical content.
     *
     * Returns the lake's per-day terminal state (count + exact cent sum),
     * the audit a backfill operator reads to confirm the re-land.
@@ -122,12 +122,11 @@ object PipelineMain extends Logging {
     val ev = graft.Tables(s, sfDir, "events")
       .select(col("event_id"), col("event_type"), col("value"),
         to_date(col("ts")).as("day"))
+    val last = from.plusDays(nDays - 1L)
+    logInfo(s"backfill: landing $from..$last into $out")
     withConfs(s, PartitionOverwriteMode -> "dynamic") {
-      (0 until nDays).map(from.plusDays(_)).foreach { day =>
-        logInfo(s"backfill: landing $day into $out")
-        ev.where(col("day") === lit(java.sql.Date.valueOf(day)))
-          .write.mode("overwrite").partitionBy("day").parquet(out)
-      }
+      ev.where(col("day").between(java.sql.Date.valueOf(from), java.sql.Date.valueOf(last)))
+        .write.mode("overwrite").partitionBy("day").parquet(out)
     }
     // ONE audit shape for both exits — a schema change cannot silently
     // diverge the empty-range result from the normal one

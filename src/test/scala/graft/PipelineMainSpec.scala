@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SessionArtifacts, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{JdkHttpTransport, PipelineIngest, PipelineMain, Transfer, Zip}
+import graft.sources.{HttpTransport, JdkHttpTransport, PipelineIngest, PipelineMain, Transfer, Zip}
 
 /** Integration test for the composed driver: both reference DAG chains run
   * end-to-end over real HTTP (stub Dock API + production JdkHttpTransport),
@@ -221,24 +221,104 @@ class PipelineMainSpec extends AnyFunSuite {
     }
   }
 
-  test("backfill lands a 3-day range idempotently (sequential max_active_runs=1 loop)") {
+  test("statements DAG returns Spark's string order without a sort job") {
+    // every account lands the same fixture archive; no HTTP involved
+    val http = new HttpTransport {
+      override def fetch(url: String, basicAuth: Option[(String, String)],
+          headers: Map[String, String]): String =
+        if (url.endsWith("/oauth2/token")) """{"access_token": "tok"}"""
+        else """{"fileName": "balance_00.zip"}"""
+    }
+    // U+FFFD sorts after the surrogate pair of U+1F600 in UTF-16 and
+    // before it in UTF-8, Spark's string order
+    val ids = Seq("\uD83D\uDE00", "acct-b", "\uFFFD", "acct-a")
+    var got: DataFrame = null
+    var rows: Seq[String] = Nil
+    val ran = TestSpark.ran(s) {
+      got = PipelineMain.runStatementsDag(s, http, "http://stub", "client", "secret", ids,
+        Zip.landingFixtures(), java.time.LocalDate.of(2024, 1, 5), retryDelayMs = 10)
+      rows = got.collect().map(_.getString(0)).toSeq
+    }
+    assert(ran.jobs <= 1, s"the statements DAG ran ${ran.jobs} jobs")
+    val sparkOrder = got.orderBy("account_id").collect().map(_.getString(0)).toSeq
+    assert(rows === sparkOrder)
+    assert(rows === Seq("acct-a", "acct-b", "\uFFFD", "\uD83D\uDE00"))
+    assert(rows !== ids.sorted, "the ids must tell UTF-16 order from UTF-8 order")
+  }
+
+  /** The calendar days the sf0.001 `events` fixture contains, in order. */
+  private def fixtureDays: Seq[java.time.LocalDate] = {
+    val days = Tables(s, TestSpark.sf, "events")
+      .select(to_date(col("ts")).as("day")).distinct().orderBy("day")
+      .collect().map(_.getDate(0).toLocalDate).toSeq
+    assert(days.length >= 3, "fixture must span at least 3 days")
+    days
+  }
+
+  test("backfill lands its range in one write job over one scan of events") {
+    val days = fixtureDays
+    val out = Fixtures.tempDirCleanedAtExit("graft_backfill_budget_")
+      .resolve("lake").toString
+    val from = days.head
+    val span = (days(2).toEpochDay - from.toEpochDay + 1).toInt
+    var audit: DataFrame = null
+    val write = TestSpark.ran(s) {
+      audit = PipelineMain.backfillDays(s, TestSpark.sf, out, from, span)
+    }
+    val readBack = TestSpark.ran(s)(audit.collect())
+    assert(write.jobs === 1, s"the backfill of $span days ran ${write.jobs} write jobs")
+    val scans = write.plans.flatMap(_.split("\n"))
+      .filter(l => l.contains("FileScan parquet") && l.contains("events.parquet"))
+    assert(scans.size === 1, s"scans of events:\n${scans.mkString("\n")}")
+    assert(readBack.jobs === 2, "the audit reads back in a map stage and a result")
+  }
+
+  test("backfill keeps days outside the range and in-range days without events") {
+    val days = fixtureDays
+    val lake = Fixtures.tempDirCleanedAtExit("graft_backfill_scope_").resolve("lake")
+    val (outside, last) = (days.head, days.last)
+    val empty = last.plusDays(1) // in the range below, no events on it
+    // seed both days with the outside day's events
+    val seed = Tables(s, TestSpark.sf, "events")
+      .select(col("event_id"), col("event_type"), col("value"), to_date(col("ts")).as("day"))
+      .where(col("day") === java.sql.Date.valueOf(outside))
+    seed.union(seed.withColumn("day", lit(java.sql.Date.valueOf(empty))))
+      .write.partitionBy("day").parquet(lake.toString)
+    def files(day: java.time.LocalDate): Map[String, Seq[Byte]] = {
+      val dir = lake.resolve(s"day=$day")
+      val st = Files.list(dir)
+      try {
+        import scala.jdk.CollectionConverters._
+        st.iterator().asScala.map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq).toMap
+      } finally st.close()
+    }
+    val before = Seq(outside, empty).map(d => d -> files(d)).toMap
+    assert(before.values.forall(_.nonEmpty))
+    val audit = PipelineMain.backfillDays(s, TestSpark.sf, lake.toString, last, nDays = 3)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    Seq(outside, empty).foreach { d =>
+      assert(files(d) === before(d), s"the backfill rewrote $d")
+    }
+    val landed = Tables(s, TestSpark.sf, "events")
+      .where(to_date(col("ts")) === java.sql.Date.valueOf(last)).count()
+    assert(audit(last.toString) === landed)
+    assert(audit.keySet === Set(outside, last, empty).map(_.toString))
+  }
+
+  test("backfill lands a 3-day range idempotently") {
     val d = TestSpark.sf
     val out = Fixtures.tempDirCleanedAtExit("graft_backfill_")
       .resolve("lake").toString
-    // the first three calendar days the fixture actually contains
-    val fixtureDays = Tables(s, d, "events")
-      .select(to_date(col("ts")).as("day")).distinct().orderBy("day")
-      .collect().map(_.getDate(0).toLocalDate)
-    assert(fixtureDays.length >= 3, "fixture must span at least 3 days")
-    val from = fixtureDays.head
-    val span = (fixtureDays(2).toEpochDay - from.toEpochDay + 1).toInt
+    val days = fixtureDays
+    val from = days.head
+    val span = (days(2).toEpochDay - from.toEpochDay + 1).toInt
     val first = PipelineMain.backfillDays(s, d, out, from, span)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     // the lake holds exactly the backfilled days, with the fixture's values
     val want = Tables(s, d, "events")
       .select(col("event_id"), col("value"), to_date(col("ts")).as("day"))
       .where(col("day").between(
-        java.sql.Date.valueOf(from), java.sql.Date.valueOf(fixtureDays(2))))
+        java.sql.Date.valueOf(from), java.sql.Date.valueOf(days(2))))
       .groupBy("day")
       .agg(count(lit(1)).as("n"),
         sum(round(col("value") * 100, 0)).cast("long").as("sum_cents"))
@@ -246,7 +326,7 @@ class PipelineMainSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(first === want)
     assert(first.map(_._1).toSet ===
-      fixtureDays.take(3).map(_.toString).toSet,
+      days.take(3).map(_.toString).toSet,
       "the lake must contain ONLY the backfilled range")
     // IDEMPOTENCE: a second full backfill over the same range re-overwrites
     // each day with identical content — byte-identical terminal state
