@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftSession.{AdaptiveEnabled, ShufflePartitions, withConfs}
 import graft.Tables
+import graft.plans.Loop
 
 /** Graph / time-series / interval / order-statistic analytics over the
   * landed star schema — the "further analysis" layer (reference
@@ -4733,6 +4734,9 @@ object Analytics {
       // carry no stats)
       val tiny = s1._4 <= graphBroadcastMaxRows(s)
       var g = g1
+      // the level's own cuts, released once the next level replaces them
+      // (g1 is the memo's)
+      var cuts = Seq.empty[DataFrame]
       // nodes stays LAZY: a distinct over the (checkpointed or staged)
       // decision frame — two tiny recomputes per level beat a
       // materialization job per level
@@ -4789,20 +4793,20 @@ object Analytics {
           val sk = stats(dec)
           ledger += ((k, sk._1, sk._2, sk._3, sk._4))
           converged = sk._2 == 0L
-          if (!converged && k < LouvainLevels) {
-            val nextG = g
+          val nextG = if (converged || k == LouvainLevels) None
+          else Some(g
               .join(bcastIf(dec.select(col("u").as("a"), col("bc").as("ma")), tiny), "a")
               .join(bcastIf(dec.select(col("u").as("b"), col("bc").as("mb")), tiny), "b")
               .select(least(col("ma"), col("mb")).as("a"),
                 greatest(col("ma"), col("mb")).as("b"), col("w"))
               .groupBy("a", "b").agg(sum(col("w")).as("w"))
-              .localCheckpoint(true)
-            g.unpersist()
-            g = nextG
-            nodes = dec.select(col("bc").as("u")).distinct()
-          }
+              .localCheckpoint(true))
+          cuts.foreach(Loop.release)
+          cuts = dec +: nextG.toSeq
+          nextG.foreach { ng => g = ng; nodes = dec.select(col("bc").as("u")).distinct() }
         }
       }
+      cuts.foreach(Loop.release)
     }
     ledger.toSeq.toDF("level", "n_nodes", "n_moved", "gain_total", "n_comms")
       .orderBy("level")
@@ -4939,54 +4943,33 @@ object Analytics {
     * the input graph.
     */
   private[graft] def ccLabels(s: SparkSession, edges: DataFrame): DataFrame = {
-    // lineage is CUT each round (eager localCheckpoint), not just cached:
-    // unlike the 3-round BFS or the 2-3-round dup-cluster propagation,
-    // the star alternation runs ~log² n rounds, and a persisted-only loop
-    // nests every prior round's plan inside the next — analysis/optimizer
-    // time grows superlinearly and a ~25-round run stops planning
-    // altogether (measured: hung the sf0.01 fixture). The checkpoint makes
-    // each round's plan constant-size. On a cluster, localCheckpoint
-    // trades executor-loss recoverability for speed — the right trade for
-    // short supersteps (a lost executor restarts the job, it does not
-    // corrupt it); a reliable checkpoint dir is the belt-and-braces
-    // variant at 100 TB.
-    var e = edges.select(greatest(col("a"), col("b")).as("u"),
+    val e0 = edges.select(greatest(col("a"), col("b")).as("u"),
       least(col("a"), col("b")).as("v"))
       .where(col("u") =!= col("v")).distinct()
       .localCheckpoint(true)
-    var eCount = e.count()
+    val n0 = e0.count()
     val bcastMax = graphBroadcastMaxRows(s)
-    var converged = eCount == 0L
-    var rounds = 0
-    while (!converged) {
-      rounds += 1
-      require(rounds <= 64,
-        "large-star/small-star failed to converge in 64 rounds — " +
-          "the O(log² n) bound makes this unreachable; edge state is corrupt")
-      // the node-grain min tables are ≤ |e| rows, so the round's edge
+    // O(log² n) rounds: 64 is unreachable on a sound edge state
+    val (e, eCount) = if (n0 == 0L) (e0, 0L)
+    else Loop.fixpoint("large-star/small-star", 64, e0, n0) { (cur, n) =>
+      // the node-grain min tables are ≤ |cur| rows, so the round's edge
       // count decides the join strategy exactly (guide §3.1)
-      val tiny = eCount <= bcastMax
-      val next = ccSmallStar(ccLargeStar(e, tiny), tiny).localCheckpoint(true)
+      val tiny = n <= bcastMax
+      ccSmallStar(ccLargeStar(cur, tiny), tiny)
+    } { (cur, n, next) =>
       // fixpoint test is EXACT set equality: same cardinality and no row
-      // of next outside e — previously a count() job plus, on matching
-      // counts, a second except() job; both rows of e and next are
-      // distinct (the smallStar terminal distinct), so ONE left-join
-      // aggregate yields the round count and the outside-count together
-      // (one edge-grain job per round instead of two — the convergence
-      // probe was half of every round's job budget on small graphs;
-      // guide §1.2 step 1). A hash-checksum compare would be cheaper
-      // still but admits collision-driven early stops.
+      // of next outside cur. Rows of both are distinct (the smallStar
+      // terminal distinct), so ONE left-join aggregate yields the round
+      // count and the outside-count together (one edge-grain job per
+      // round; guide §1.2 step 1). A hash-checksum compare would be
+      // cheaper still but admits collision-driven early stops.
       val probe = next
-        .join(bcastIf(e.select(col("u"), col("v"), lit(1).as("in_e")), tiny),
+        .join(bcastIf(cur.select(col("u"), col("v"), lit(1).as("in_e")), n <= bcastMax),
           Seq("u", "v"), "left")
         .agg(count(lit(1)).as("n"),
           count(when(col("in_e").isNull, lit(1))).as("miss"))
         .first()
-      val nextCount = probe.getLong(0)
-      converged = nextCount == eCount && probe.getLong(1) == 0L
-      e.unpersist()
-      e = next
-      eCount = nextCount
+      (probe.getLong(0), probe.getLong(0) == n && probe.getLong(1) == 0L)
     }
     val nodes = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
@@ -5174,21 +5157,13 @@ object Analytics {
         .union(edges.select(col("b").as("v"), col("a").as("u")))
         .repartition(col("u"))
         .localCheckpoint(true)
-      var c = und.groupBy(col("v").as("node")).agg(count(lit(1)).as("c"))
+      val c0 = und.groupBy(col("v").as("node")).agg(count(lit(1)).as("c"))
         .localCheckpoint(true)
-      var sumC = c.agg(sum(col("c"))).first().getLong(0)
-      // provable round bound (r15 advisory — no fixed constant): values are
-      // monotone non-increasing positive integers, so every non-final round
-      // drops Σc by ≥ 1 and the loop runs at most Σc₀ rounds
-      val maxRounds = sumC
-      var converged = false
-      var rounds = 0
-      while (!converged) {
-        rounds += 1
-        require(rounds <= maxRounds,
-          "h-index iteration failed to converge — values are monotone " +
-            "non-increasing positive integers, so rounds are bounded by " +
-            "the initial Σc; state is corrupt")
+      // Σc₀ = Σ deg = 2|E| (distinct staged pairs, a < b) also bounds the
+      // rounds: values are monotone non-increasing positive integers, so
+      // every non-final round drops Σc by ≥ 1
+      val sumC0 = 2L * ccEdgeCount(s, d)
+      val (c, _) = Loop.fixpoint("h-index iteration", sumC0, c0, sumC0) { (c, _) =>
         // VALUE-HISTOGRAM h-index (r15 verdict: cap the hub straggler) —
         // no per-node sort of the raw neighbor list. Each neighbor value
         // is clamped at the receiver's own current value (next is
@@ -5216,19 +5191,16 @@ object Analytics {
           .withColumn("ge", sum(col("cnt")).over(sw))
           .groupBy(col("v").as("node"))
           .agg(max(least(col("val"), col("ge"))).as("h"))
-        val next = c.join(bcastIf(h, tiny), "node")
+        c.join(bcastIf(h, tiny), "node")
           .select(col("node"), least(col("c"), col("h")).as("c"))
-          .localCheckpoint(true)
+      } { (_, sumC, next) =>
         val nextSum = next.agg(sum(col("c"))).first().getLong(0)
         require(nextSum <= sumC,
           "h-index Σc increased — values are monotone non-increasing; " +
             "state is corrupt")
-        converged = nextSum == sumC
-        c.unpersist()
-        c = next
-        sumC = nextSum
+        (nextSum, nextSum == sumC)
       }
-      und.unpersist()
+      Loop.release(und)
       c.select(col("node").as("part"), col("c").as("coreness"))
         .orderBy("part")
     }
@@ -5459,7 +5431,7 @@ object Analytics {
         .withColumn("h",
           expr(md5h4(s"md5(concat('$salt', CAST(node AS STRING)))")))
         .orderBy(col("h"), col("node")).limit(k).select("node")
-      var dist = ranked("graftlm:", LandmarkCount)
+      val dist0 = ranked("graftlm:", LandmarkCount)
         .select(col("node").as("lmk"), col("node"), lit(0L).as("dist"))
         .localCheckpoint(true)
       // the distance table is (landmark, node) grain ≤ k·|V| ≤ 2k·|E| —
@@ -5467,27 +5439,17 @@ object Analytics {
       // holds at (landmark, node) grain too (r18 advisory)
       val tiny = ccEdgeCount(s, d) * (2L * LandmarkCount) <=
         graphBroadcastMaxRows(s)
-      var signature = (0L, 0L)
-      var converged = false
-      var round = 0
-      while (!converged && round < SsspRounds) {
-        round += 1
-        val next = dist.select(col("lmk"), col("node"), col("dist"))
+      val (dist, _) = Loop.fixpoint("landmark precompute", SsspRounds, dist0,
+          (0L, 0L)) { (dist, _) =>
+        dist.select(col("lmk"), col("node"), col("dist"))
           .unionByName(und
             .join(bcastIf(dist.select(col("lmk"), col("node").as("v"),
               col("dist").as("dv")), tiny), "v")
             .select(col("lmk"), col("u").as("node"),
               (col("dv") + col("w")).as("dist")))
           .groupBy("lmk", "node").agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-        val Array(row) = next.agg(count(lit(1)), sum(col("dist"))).collect()
-        val sig = (row.getLong(0), row.getLong(1))
-        converged = sig == signature
-        signature = sig
-        dist = next
-      }
-      require(converged,
-        s"landmark precompute did not reach its fixpoint within $SsspRounds rounds")
+      }(distSignature)
+      Loop.release(und)
       val qn = ranked("graftlq:", LandmarkQueryNodes)
       val pairs = qn.select(col("node").as("u"))
         .join(qn.select(col("node").as("v")), col("u") < col("v"))
@@ -5617,6 +5579,16 @@ object Analytics {
         .select(col("u").as("node"), (col("dv") + col("w")).as("dist")))
       .groupBy("node").agg(min(col("dist")).as("dist"))
 
+  /** The relaxation loops' fixpoint test: an unchanged (reached count,
+    * Σ dist) signature ([[graphSssp]]). */
+  private val distSignature
+      : (DataFrame, (Long, Long), DataFrame) => ((Long, Long), Boolean) = {
+    (_, sig, next) =>
+      val Array(row) = next.agg(count(lit(1)), sum(col("dist"))).collect()
+      val nextSig = (row.getLong(0), row.getLong(1))
+      (nextSig, nextSig == sig)
+  }
+
   /** Test seam: two un-checkpointed relaxation rounds over the real
     * weighted graph, so PlanShapeSpec can read the join shapes (the
     * production loop lineage-cuts per round, hiding them). */
@@ -5696,27 +5668,18 @@ object Analytics {
         .localCheckpoint(true)
       // seed from the same aggregation the oracle's s0 derives — no
       // driver collect, and the round-1 join stays a keyed equi-join
-      var dist = we.agg(min(col("a")).as("node"))
+      val dist0 = we.agg(min(col("a")).as("node"))
         .select(col("node"), lit(0L).as("dist"))
         .localCheckpoint(true)
       // the distance table is node-grain — broadcast it into the
       // edge-grain relaxation when the staged edge count proves the graph
       // small (the [[ccLabels]] gate)
       val tiny = ccEdgeCount(s, d) <= graphBroadcastMaxRows(s)
-      var signature = (1L, 0L)
-      var converged = false
-      var round = 0
-      while (!converged && round < SsspRounds) {
-        round += 1
-        val next = ssspStep(und, dist, tiny).localCheckpoint(true)
-        val Array(row) = next.agg(count(lit(1)), sum(col("dist"))).collect()
-        val sig = (row.getLong(0), row.getLong(1))
-        converged = sig == signature
-        signature = sig
-        dist = next
-      }
-      require(converged,
-        s"SSSP did not reach its fixpoint within $SsspRounds rounds")
+      // the seed's (reached, Σ dist) signature is (1, 0) by construction
+      val (dist, _) = Loop.fixpoint("SSSP", SsspRounds, dist0, (1L, 0L)) {
+        (dist, _) => ssspStep(und, dist, tiny)
+      }(distSignature)
+      Loop.release(und)
       dist.select(col("node").as("part"), col("dist").as("dist_micro"))
         .orderBy("part")
     }
@@ -5846,8 +5809,7 @@ object Analytics {
     val edges0 = copurchaseEdges(s, d)
     // static planning for the peel: short supersteps of known shapes
     withConfs(s, AdaptiveEnabled -> "false") {
-      var e = edges0.select("a", "b").localCheckpoint(true)
-      var n = e.count()
+      val n0 = edges0.count()
       // sized AFTER the first action (the staged build may run inside it)
       // but before the loop's shuffles. FLOORED AT CORE COUNT, unlike the
       // node-grain iterations: the wedge join amplifies far beyond edge
@@ -5855,35 +5817,26 @@ object Analytics {
       // to 2 partitions at sf0.1 with AQE pinned off — 100 s where the
       // per-round work is seconds (r17).
       withConfs(s, ShufflePartitions ->
-          math.max(s.sparkContext.defaultParallelism.toLong, n / 250000L).toString) {
-        val maxRounds = n + 1
-        var rounds = 0
-        var converged = n == 0L
-        while (!converged) {
-          rounds += 1
-          require(rounds <= maxRounds,
-            "truss peel failed to converge — each non-final round removes " +
-              "at least one edge, so rounds are bounded by |E|; state is corrupt")
-          // round 1 runs on the FULL graph — take the staged-orientation
-          // path; the peeled remnants use the generic size-aware pass
-          val (sup, stagedAdj) = if (rounds == 1) {
-            val (s0, adjRaw) = trussSupportStaged(s, d)
-            (s0, Some(adjRaw))
-          } else (trussSupport(e, n), None)
-          val next = sup
-            .where(col("sup") >= KTrussK - 2).select("a", "b")
-            .localCheckpoint(true)
-          // the eager checkpoint above materialized the round-1 support —
-          // the staged adjacency cache has served its one purpose
-          stagedAdj.foreach(_.unpersist())
+          math.max(s.sparkContext.defaultParallelism.toLong, n0 / 250000L).toString) {
+        def peel(sup: DataFrame) = sup.where(col("sup") >= KTrussK - 2).select("a", "b")
+        // round 1 runs on the FULL graph — take the staged-orientation
+        // path; the peeled remnants use the generic size-aware pass
+        val (sup1, stagedAdj) = trussSupportStaged(s, d)
+        val e1 = peel(sup1).localCheckpoint(true)
+        // the eager checkpoint above materialized the round-1 support —
+        // the staged adjacency cache has served its one purpose
+        stagedAdj.unpersist()
+        def peeled(n: Long, next: DataFrame): (Long, Boolean) = {
           val m = next.count()
           require(m <= n,
             "truss peel grew the edge set — the peel is monotone; state is corrupt")
-          converged = m == n
-          e.unpersist()
-          e = next
-          n = m
+          (m, m == n)
         }
+        val (n1, done) = peeled(n0, e1)
+        val (e, n) = if (done) (e1, n1)
+        else Loop.fixpoint("truss peel", n0, e1, n1) {
+          (cur, n) => peel(trussSupport(cur, n))
+        }((_, n, next) => peeled(n, next))
         trussSupport(e, n)
           .select(col("a").as("part_a"), col("b").as("part_b"), col("sup"))
           .orderBy("part_a", "part_b")
@@ -5968,7 +5921,7 @@ object Analytics {
           .where(col("rk") === 1)
           .select("a", "b", "m", "ca", "cb").distinct()
           .localCheckpoint(true)
-        if (sel.count() == 0L) done = true
+        if (sel.count() == 0L) { Loop.release(sel); done = true }
         else {
           forest += sel.select(col("a"), col("b"), col("m"))
             .withColumn("round_found", lit(rounds.toLong))
@@ -6006,6 +5959,9 @@ object Analytics {
               when(col("gp") === col("c"), least(col("c"), col("p")))
                 .otherwise(col("p")).as("p"))
             .localCheckpoint(true)
+          // not a Loop.fixpoint, whose last state would be the no-move jump:
+          // a self-join, whose squared size estimate the cut carries into
+          // comp and every later round (docs/SCALING.md "Releasing lineage cuts")
           var jumping = true
           var jumps = 0
           while (jumping) {
@@ -6022,10 +5978,10 @@ object Analytics {
             else {
               val advanced = j.select(col("c"), col("p2").as("p"))
                 .localCheckpoint(true)
-              par.unpersist()
+              Loop.release(par)
               par = advanced
             }
-            j.unpersist()
+            Loop.release(j)
           }
           val next = comp
             .join(bcastIf(par.select(col("c").as("comp"), col("p").as("component")),
@@ -6033,13 +5989,15 @@ object Analytics {
             .select(col("node"),
               coalesce(col("component"), col("comp")).as("comp"))
             .localCheckpoint(true)
-          par.unpersist()
-          comp.unpersist()
+          Loop.release(par)
+          Loop.release(comp)
           comp = next
         }
       }
+      Loop.release(comp)
+      Loop.release(e)
       if (forest.isEmpty)
-        e.select(col("a").as("part_a"), col("b").as("part_b"),
+        we.select(col("a").as("part_a"), col("b").as("part_b"),
           col("m").as("support"), lit(0L).as("round_found"))
           .where(lit(false))
       else forest.reduce(_ unionByName _)
@@ -6104,9 +6062,7 @@ object Analytics {
     * fixpoint: each round one edge-grain keyed join + one node-grain min
     * aggregate; convergence is detected by the EXACT Σlabel invariant —
     * labels only decrease, so an unchanged node-grain sum means no label
-    * moved (no hash-collision early stop). Lineage is cut per round
-    * (eager localCheckpoint, the [[ccLabels]] discipline) so the plan
-    * stays constant-size across rounds.
+    * moved (no hash-collision early stop). Runs on [[Loop.fixpoint]].
     *
     * `maxRounds` is the live node count: propagation is bounded by the
     * live core's diameter, which cannot exceed its node count — the
@@ -6117,34 +6073,23 @@ object Analytics {
   private def sccMinReach(nodes: DataFrame, edges: DataFrame,
       forward: Boolean, maxRounds: Long, tiny: Boolean): DataFrame = {
     val (from, to) = if (forward) ("a", "b") else ("b", "a")
-    var lab = nodes.select(col("node"), col("node").as("lab"))
+    val lab0 = nodes.select(col("node"), col("node").as("lab"))
       .localCheckpoint(true)
-    var sumLab = lab.agg(sum(col("lab"))).first().getLong(0)
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"min-reach propagation failed to converge in $maxRounds rounds — " +
-          "bounded by the live core's diameter ≤ its node count; " +
-          "label state is corrupt")
+    val sumLab0 = lab0.agg(sum(col("lab"))).first().getLong(0)
+    Loop.fixpoint("min-reach propagation", maxRounds, lab0, sumLab0) { (lab, _) =>
       val flow = edges
         .join(bcastIf(lab.select(col("node").as(to), col("lab")), tiny), to)
         .groupBy(col(from).as("node")).agg(min(col("lab")).as("nl"))
-      val next = lab.join(bcastIf(flow, tiny), Seq("node"), "left")
+      lab.join(bcastIf(flow, tiny), Seq("node"), "left")
         .select(col("node"),
           least(col("lab"), coalesce(col("nl"), col("lab"))).as("lab"))
-        .localCheckpoint(true)
+    } { (_, sumLab, next) =>
       val nextSum = next.agg(sum(col("lab"))).first().getLong(0)
       require(nextSum <= sumLab,
         "min-reach Σlabel increased — labels are monotone non-increasing; " +
           "state is corrupt")
-      converged = nextSum == sumLab
-      lab.unpersist()
-      lab = next
-      sumLab = nextSum
-    }
-    lab
+      (nextSum, nextSum == sumLab)
+    }._1
   }
 
   /** Full SCC decomposition via the MULTISTEP recipe (Slota–Rajamanickam–
@@ -6181,10 +6126,10 @@ object Analytics {
           .join(bcastIf(nextNodes.select(col("node").as("b")), tiny),
             Seq("b"), "left_semi")
           .localCheckpoint(true)
-        nodes.unpersist(); edges.unpersist()
+        Loop.release(nodes); Loop.release(edges)
         nodes = nextNodes; edges = nextEdges
         live -= n
-      } else fin.unpersist()
+      } else Loop.release(fin)
       n
     }
     var outer = 0
@@ -6211,21 +6156,20 @@ object Analytics {
         // one FW-BW finalize round over the trimmed core
         val fwd = sccMinReach(nodes, edges, forward = true, maxRounds = live,
             tiny = tiny)
-          .withColumnRenamed("lab", "fmin")
         val bwd = sccMinReach(nodes, edges, forward = false, maxRounds = live,
             tiny = tiny)
-          .withColumnRenamed("lab", "bmin")
-        val fin = fwd.join(bcastIf(bwd, tiny), "node")
+        val fin = fwd.withColumnRenamed("lab", "fmin")
+          .join(bcastIf(bwd.withColumnRenamed("lab", "bmin"), tiny), "node")
           .where(col("fmin") === col("bmin"))
           .select(col("node"), col("fmin").as("scc"))
           .localCheckpoint(true)
-        fwd.unpersist(); bwd.unpersist()
+        Loop.release(fwd); Loop.release(bwd)
         val n = retire(fin)
         require(n > 0, "FW-BW finalized nothing — the live minimum's SCC " +
           "always satisfies fwdmin = bwdmin; label state is corrupt")
       }
     }
-    nodes.unpersist(); edges.unpersist()
+    Loop.release(nodes); Loop.release(edges)
     // a graph with no edges has no nodes here — return the typed empty
     // relation instead of reducing an empty buffer
     if (done.isEmpty)
@@ -6538,16 +6482,13 @@ object Analytics {
         // a false candidate is rejected by the except itself)
         converged = dSum == prevDSum && next.except(r).isEmpty
         prevDSum = dSum
-        backing.unpersist()
+        Loop.release(backing)
         backing = damped
         r = next
       }
-      // materialize the final rank vector so the LAST damped checkpoint is
-      // releasable too — the lazy r read it, and returning r unmaterialized
-      // leaked one node-grain cached frame per invocation (r18 advisory)
+      // cut the final ranks so that every frame the loop built is released
       val out = r.localCheckpoint(true)
-      backing.unpersist()
-      eLoop.unpersist()
+      Seq(backing, eLoop, nodes, tset, outdeg).foreach(Loop.release)
       out
     }
   }

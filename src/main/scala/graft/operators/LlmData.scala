@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.GraftSession.{AdaptiveEnabled, ShufflePartitions, withConfs}
 import graft.Tables
 import graft.functions.{Round0Expr, TextOps, VectorOps}
+import graft.plans.Loop
 import graft.streaming.Streams
 
 /** LLM-training-data operator surface (SURVEY.md §2B north star): near-
@@ -2656,11 +2657,9 @@ object LlmData {
         out
       }
       (rebuilt("sx"), rebuilt("sp"), rots, e0, nv)
-      // the model is fully collected by here — the finally releases the
-      // bounded encode frame on the failure paths too (a throw in the stats
-      // or gsums pass previously leaked it for the session lifetime,
-      // r18 advisory)
-      } finally enc.unpersist()
+      // the model is fully collected by here, so the encode checkpoint is
+      // released, on the failure paths too
+      } finally Loop.release(enc)
     })
 
   /** The rotated-corpus frame (x′ = R·x cast back to float, identity off
@@ -6748,7 +6747,7 @@ object LlmData {
           trim(replace(concat(lit(" "), col("seq"), lit(" ")),
             lit(s" $a $b "), lit(s" $a$b "))))
           .localCheckpoint(true)
-        prev.unpersist()
+        Loop.release(prev)
         step += 1
       }
       import s.implicits._
@@ -6757,7 +6756,7 @@ object LlmData {
         .parquet(staging.resolve("merges").toString)
       vocab.select("tok", "cnt", "seq")
         .write.mode("overwrite").parquet(staging.resolve("vocab").toString)
-      vocab.unpersist()
+      Loop.release(vocab)
     }
 
   /** q_text_bpe_train — the full BPE TRAIN-TO-VOCAB loop ([[textBpeStep]]

@@ -1024,6 +1024,25 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(r.jobs <= 7, s"${r.jobs} jobs (budget 7)")
   }
 
+  test("the loops on graft.plans.Loop run no more jobs or stages than their hand-rolled predecessors") {
+    // (jobs, stages) of each key's fresh-session run at sf0.001 (LoopProbe)
+    // with the hand-rolled checkpoint/count/release loops it replaced
+    val parent = Seq(
+      "q_graph_connected_components" -> (33, 52), "q_graph_cc_incremental" -> (28, 43),
+      "q_er_resolve" -> (35, 63), "q_graph_coreness" -> (89, 90),
+      "q_graph_sssp" -> (15, 17), "q_graph_landmark_dist" -> (22, 24),
+      "q_graph_scc" -> (56, 67), "q_graph_ktruss" -> (12, 15),
+      "q_graph_pagerank_full" -> (60, 62), "q_graph_ppr" -> (62, 64),
+      "q_graph_mst" -> (57, 72), "q_graph_louvain_full" -> (55, 85))
+    val over = parent.flatMap { case (q, (jobs, stages)) =>
+      val (r, _) = LoopProbe.run(s, q, d)
+      info(s"$q: ${r.jobs} jobs, ${r.stages} stages (parent $jobs, $stages)")
+      Option.when(r.jobs > jobs || r.stages > stages)(
+        s"$q: ${r.jobs} jobs, ${r.stages} stages over the parent's $jobs, $stages")
+    }
+    assert(over.isEmpty, over.mkString("\n"))
+  }
+
   test("q_graph_bfs holds its small frontiers on the driver: ≤ 16 stages") {
     val r = ranFresh(graft.operators.Analytics.graphBfs)
     info(s"${r.jobs} jobs, ${r.stages} stages")
